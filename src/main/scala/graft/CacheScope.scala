@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.Dataset
 
-/** Registry of frames that operators persist INTERNALLY (HomeWork.label's
-  * prepared stops, simhashCandidates' signatures) so harnesses can release
+/** Registry of frames that operators persist INTERNALLY (e.g.
+  * simhashCandidates' signatures) so harnesses can release
   * exactly those — `spark.catalog.clearCache()` between queries worked for
   * Verify/Bench but is a footgun in a shared session: it also evicts every
   * cache the EMBEDDING application owns.

@@ -114,8 +114,8 @@ object Verify {
           swapLock.synchronized { status(name) = ("fail", secs) }
           System.err.println(s"[verify] $name failed: ${cause.getMessage}")
       }
-      // Queries that persist() internally (HomeWork.label,
-      // simhashCandidates) register with CacheScope; release exactly those
+      // Queries that persist() internally (e.g. simhashCandidates)
+      // register with CacheScope; release exactly those
       // — a global clearCache would also evict caches owned by an
       // embedding application in a shared session.
       CacheScope.releaseAll()

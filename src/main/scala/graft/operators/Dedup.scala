@@ -236,8 +236,7 @@ object Dedup {
     * bounded-state CollectCappedLongs as [[minhashCandidates]], so one
     * boilerplate band value can never go quadratic past maxBucket.
     * The persisted signatures register with [[graft.CacheScope]]; callers
-    * release via `CacheScope.releaseAll()` after materializing, same
-    * contract as HomeWork.label.
+    * release via `CacheScope.releaseAll()` after materializing.
     */
   def simhashCandidates(docs: DataFrame, textCol: String, idCol: String,
                         shingleN: Int = 3, bands: Int = 4,

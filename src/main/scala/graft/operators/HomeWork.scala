@@ -1,19 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Home/work location inference (HWEstimate, src/polaroam/models.py:271-453
   * + utils.filter_clusters/label_locations, src/polaroam/utils.py:434-501).
   *
-  * Entirely relational. Candidate filtering -> recurrence-rate
-  * qualification -> label join back. Distinct-date counts are window
-  * `collect_set` sizes over (uid) and (uid, stop_locations) — the set is
-  * bounded by days-in-period, so state stays tiny even for whale users, and
-  * both windows share the uid hash exchange; the reference's
-  * aggregate+join+cross-join machinery collapses into one shuffle plus a
-  * broadcast label join per phase.
+  * Entirely relational, and one rule: `label` is
+  * `detectWork(detectHome(prepare(...)))`. Each phase marks its candidate
+  * rows, counts their distinct visit dates with `collect_set` windows over
+  * (uid) and (uid, stop_locations), and relabels every row of a cluster
+  * that clears both recurrence thresholds. The date sets are bounded by
+  * days-in-period, so window state stays tiny even for whale users.
+  * `prepare` hash-partitions the rows by uid and sorts them once by
+  * (uid, stop_locations); that layout satisfies all four windows and the
+  * wide export's sort aggregate, so the whole tail is one exchange and one
+  * sort, with no cache, no label join and no anti-join.
+  *
+  * With `totalDays = None` each phase's day span is a global scalar over
+  * its candidate rows, so those rows are read twice: once for the scalar
+  * subquery, once for the windows. Only that branch routes the prepared
+  * rows through a lazy `localCheckpoint`; otherwise both reads would
+  * re-run the whole upstream stop pipeline (stop windows + per-user
+  * DBSCAN kernel). It sits before the uid layout because a checkpointed
+  * scan reports no partitioning. The checkpoint frees through the
+  * ContextCleaner, so neither branch touches the session cache.
   *
   * Reference quirks preserved deliberately (SURVEY §7 trap 5):
   *  - every qualifying cluster is labeled H/W, not just the top one
@@ -46,14 +58,16 @@ object HomeWork {
   /** stop_clusters -> + t_start/t_end, calendar parts (local wall clock),
     * duration, and O/-1/-1 label initialization (prepare_labeling,
     * models.py:306-347). Weekday is ISO 1=Mon..7=Sun (Polars convention;
-    * Spark weekday() is 0=Mon).
+    * Spark weekday() is 0=Mon). Rows come out hash-partitioned by uid and
+    * sorted by (uid, stop_locations), behind a lazy checkpoint when
+    * `totalDays = None` (see the object doc).
     */
   def prepare(clusters: DataFrame, p: Params): DataFrame = {
-    def local(c: org.apache.spark.sql.Column) = {
+    def local(c: Column) = {
       val ts = timestamp_seconds(c)
       if (p.convertTz) from_utc_timestamp(ts, p.tz) else ts
     }
-    clusters
+    val prepared = clusters
       .withColumn("t_start", local(col("start_timestamp")))
       .withColumn("t_end", local(col("end_timestamp")))
       .withColumn("year", year(col("t_start")))
@@ -67,145 +81,84 @@ object HomeWork {
       .withColumn("location_type", lit("O"))
       .withColumn("home_label", lit(-1.0))
       .withColumn("work_label", lit(-1.0))
+    (if (p.totalDays.isEmpty) prepared.localCheckpoint(eager = false)
+     else prepared)
+      .repartition(col("uid"))
+      .sortWithinPartitions("uid", "stop_locations")
   }
 
-  /** Qualifying (uid, stop_locations) pairs of a candidate subframe:
-    * clusters whose distinct-visit-date recurrence clears both thresholds
-    * (filter_clusters, utils.py:434-491). Returns one row per pair.
+  /** Relabels every row of each (uid, stop_locations) cluster whose
+    * candidate rows recur on enough distinct dates (filter_clusters +
+    * label_locations, utils.py:434-501, models.py:388-397):
+    * cluster_dates / total_dates >= minPeriods and
+    * cluster_dates / time_span >= spanPeriod. A cluster with no candidate
+    * rows keeps its label, and its zero counts are never divided.
     */
-  private def qualifyingClusters(cand: DataFrame, minPeriods: Double,
-                                 spanPeriod: Double,
-                                 totalDays: Option[Long]): DataFrame = {
-    val byUid = Window.partitionBy("uid")
-    val byLoc = Window.partitionBy("uid", "stop_locations")
-    val counted = cand
-      .withColumn("total_dates", size(collect_set(col("date")).over(byUid)))
-      .withColumn("cluster_dates", size(collect_set(col("date")).over(byLoc)))
-    val withSpan = totalDays match {
-      case Some(d) => counted.withColumn("time_span", lit(d))
-      case None =>
-        // reference computes floor((max t_start - min t_start)/1d) + 1 over
-        // the candidate frame and cross-joins the scalar (utils.py:434-454)
-        val span = cand.agg(
-          (floor((max(col("start_timestamp")) - min(col("start_timestamp")))
-            / 86400L) + 1L).cast("long").as("time_span"))
-        counted.crossJoin(broadcast(span))
-    }
-    withSpan
-      .filter(
-        (col("cluster_dates") / col("total_dates") >= minPeriods) &&
-          (col("cluster_dates") / col("time_span") >= spanPeriod))
-      .select("uid", "stop_locations")
-      .distinct()
-  }
-
-  /** Left-join label table + conditional overwrite (models.py:388-397). */
-  private def applyLabel(df: DataFrame, labels: DataFrame, letter: String,
-                         labelCol: String, labelValue: Double): DataFrame = {
-    val marked = labels.withColumn("__hit", lit(1))
-    df.join(broadcast(marked), Seq("uid", "stop_locations"), "left")
+  private def labelRecurring(df: DataFrame, candidate: Column,
+                             minPeriods: Double, spanPeriod: Double,
+                             totalDays: Option[Long], letter: String,
+                             labelCol: String): DataFrame = {
+    val candDate = when(candidate, col("date"))
+    // the reference's floor((max t_start - min t_start)/1d) + 1 over the
+    // candidate frame, a global scalar (utils.py:434-454)
+    val timeSpan = totalDays.fold(
+      df.filter(candidate).agg(
+        floor((max(col("start_timestamp")) - min(col("start_timestamp")))
+          / 86400L) + 1L).scalar())(lit(_))
+    val dates = col("__cluster_dates")
+    df.withColumn("__total_dates",
+        size(collect_set(candDate).over(Window.partitionBy("uid"))))
+      .withColumn("__cluster_dates", size(collect_set(candDate)
+        .over(Window.partitionBy("uid", "stop_locations"))))
+      .withColumn("__hit", when(dates > 0,
+        dates / col("__total_dates") >= minPeriods &&
+          dates / timeSpan >= spanPeriod))
       .withColumn("location_type",
-        when(col("__hit").isNotNull, lit(letter))
-          .otherwise(col("location_type")))
+        when(col("__hit"), lit(letter)).otherwise(col("location_type")))
       .withColumn(labelCol,
-        when(col("__hit").isNotNull, lit(labelValue)).otherwise(col(labelCol)))
-      .drop("__hit")
+        when(col("__hit"), lit(minPeriods)).otherwise(col(labelCol)))
+      .drop("__total_dates", "__cluster_dates", "__hit")
   }
-
-  private def homeCandidates(prepared: DataFrame, p: Params): DataFrame =
-    prepared.filter(
-      (col("hour") >= p.endHourDay || col("hour") <= p.startHourDay ||
-        col("weekday").between(6, 7)) &&
-        col("stop_locations") =!= -1L)
-
-  private def workHourCandidates(df: DataFrame, p: Params): DataFrame =
-    df.filter(
-      col("hour").between(p.startWorkingHour, p.endWorkingHour) &&
-        col("weekday").between(1, 5) &&
-        col("stop_locations") =!= -1L)
 
   /** Night-or-weekend recurrence -> 'H' (detect_home, models.py:349-401). */
-  def detectHome(prepared: DataFrame, p: Params): DataFrame = {
-    val labels = qualifyingClusters(homeCandidates(prepared, p),
-      p.minPeriodsHome, p.spanPeriodHome, p.totalDays)
-    applyLabel(prepared, labels, "H", "home_label", p.minPeriodsHome)
-  }
+  def detectHome(prepared: DataFrame, p: Params): DataFrame =
+    labelRecurring(prepared,
+      (col("hour") >= p.endHourDay || col("hour") <= p.startHourDay ||
+        col("weekday").between(6, 7)) && col("stop_locations") =!= -1L,
+      p.minPeriodsHome, p.spanPeriodHome, p.totalDays, "H", "home_label")
 
   /** Workday-hours recurrence, excluding 'H' -> 'W' (detect_work,
     * models.py:403-453). Must run on detectHome's output.
     */
-  def detectWork(homed: DataFrame, p: Params): DataFrame = {
-    val cand = workHourCandidates(homed, p)
-      .filter(col("location_type") =!= "H")
-    val labels =
-      qualifyingClusters(cand, p.minPeriodsWork, p.spanPeriodWork, p.totalDays)
-    applyLabel(homed, labels, "W", "work_label", p.minPeriodsWork)
-  }
+  def detectWork(homed: DataFrame, p: Params): DataFrame =
+    labelRecurring(homed,
+      col("hour").between(p.startWorkingHour, p.endWorkingHour) &&
+        col("weekday").between(1, 5) && col("stop_locations") =!= -1L &&
+        col("location_type") =!= "H",
+      p.minPeriodsWork, p.spanPeriodWork, p.totalDays, "W", "work_label")
 
-  /** Full phase: prepare -> home -> work.
-    *
-    * `prepared` is persisted: it feeds the home candidates, the work
-    * candidates, and the final label base, so without a cache the whole
-    * upstream stop pipeline (3 windows + per-user DBSCAN kernel)
-    * executes several times inside one plan. At cluster scale the same
-    * role is played by checkpointing the prepared frame to storage;
-    * MEMORY_AND_DISK spills rather than OOMs either way.
-    *
-    * Unlike the naive `detectWork(detectHome(...))` chaining, BOTH label
-    * tables derive from `prepared` directly: work candidacy's
-    * "not already labeled H" condition is exactly (uid, stop_locations)
-    * ∉ homeLabels, so a broadcast anti-join against the (persisted,
-    * key-pair-sized) home-label table replaces re-reading detectHome's
-    * output — the home qualification windows run ONCE instead of being
-    * re-planned under each detectWork branch, and the final frame is one
-    * cache scan plus two broadcast label joins (the r11 plan carried
-    * 52-54 exchanges for q17/q18; this shape halves the window
-    * subplans).
-    *
-    * Cache lifecycle: the returned frame is lazy and reads the cached
-    * `prepared` and `homeLabels` lazily, so unpersisting here would
-    * reintroduce the recompute. Both frames are registered with
-    * [[graft.CacheScope]]; the caller materializes the result then calls
-    * `CacheScope.releaseAll()` (Verify/Bench do this between queries),
-    * which unpersists ONLY operator-created caches — no global
-    * clearCache.
-    */
-  def label(clusters: DataFrame, p: Params): DataFrame = {
-    val prepared = graft.CacheScope.track(prepare(clusters, p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val homeLabels = graft.CacheScope.track(
-      qualifyingClusters(homeCandidates(prepared, p),
-        p.minPeriodsHome, p.spanPeriodHome, p.totalDays)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val workLabels = qualifyingClusters(
-      workHourCandidates(prepared, p)
-        .join(broadcast(homeLabels), Seq("uid", "stop_locations"),
-          "left_anti"),
-      p.minPeriodsWork, p.spanPeriodWork, p.totalDays)
-    applyLabel(
-      applyLabel(prepared, homeLabels, "H", "home_label", p.minPeriodsHome),
-      workLabels, "W", "work_label", p.minPeriodsWork)
-  }
+  /** Full phase: prepare -> home -> work. */
+  def label(clusters: DataFrame, p: Params): DataFrame =
+    detectWork(detectHome(prepare(clusters, p), p), p)
 
   /** Wide export: one row per uid with home/work coordinates
     * (get_stops_and_clusters.py:157-185). Deterministic pick per
     * (uid, location_type): highest cluster_counts, then lowest
     * stop_locations (the reference uses unique-after-sort, which Spark's
     * dropDuplicates cannot reproduce deterministically — SURVEY §7 trap 1).
+    * One uid aggregate of struct-ordered `max_by`s; on `label`'s output it
+    * plans as a sort aggregate over the already sorted rows.
     */
   def wideExport(labeled: DataFrame): DataFrame = {
-    val w = Window.partitionBy("uid", "location_type")
-      .orderBy(col("cluster_counts").desc, col("stop_locations").asc)
+    def pick(letter: String, c: String) = max_by(col(c),
+      when(col("location_type") === letter,
+        struct(col("cluster_counts"), -col("stop_locations"))))
     labeled
       .filter(col("location_type").isin("H", "W"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
       .groupBy("uid")
-      .pivot("location_type", Seq("H", "W"))
-      .agg(first(col("cluster_latitude")).as("lat"),
-        first(col("cluster_longitude")).as("lon"))
-      .withColumnsRenamed(Map(
-        "H_lat" -> "h_lat", "H_lon" -> "h_lon",
-        "W_lat" -> "w_lat", "W_lon" -> "w_lon"))
+      .agg(pick("H", "cluster_latitude").as("h_lat"),
+        pick("H", "cluster_longitude").as("h_lon"),
+        pick("W", "cluster_latitude").as("w_lat"),
+        pick("W", "cluster_longitude").as("w_lon"))
   }
 }

@@ -40,8 +40,8 @@ private[graft] object Shared {
     minPeriodsWork = 0.05, spanPeriodWork = 0.05,
     // None = the reference's default path (utils.py:434-454): the span is
     // floor((max-min start_timestamp)/1d)+1 computed over each candidate
-    // frame and cross-joined as a broadcast scalar — the gated q17/q18
-    // exercise J5 (scalar cross join) + F9 (day span +1) end-to-end
+    // frame as a scalar subquery — the gated q17/q18 exercise J5 (the
+    // reference's scalar cross join) + F9 (day span +1) end-to-end
     totalDays = None, convertTz = true, tz = "America/Mexico_City")
 
   /** Day-partitioned hive copy of `events` (UTC day key), staged once per

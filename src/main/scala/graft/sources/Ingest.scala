@@ -107,7 +107,8 @@ object Ingest {
 
   /** Full gz-CSV sample pipeline (read_localize_write.py:50-107): headerless
     * gz CSV -> positional rename (Polars column_1/3/4/5/6 = Spark
-    * _c0/_c2/_c3/_c4/_c5) -> error filter -> uid anonymization -> ms->s ->
+    * _c0/_c2/_c3/_c4/_c5) -> error filter -> uid anonymization -> ms ->
+    * whole epoch seconds (Long, the type StopClusters decodes) ->
     * tz-localize -> optional active-days filter -> hive-partitioned write.
     * Codec is inferred from the .gz extension by the CSV source; every step
     * before the optional active-days semi join is a narrow map over the
@@ -126,7 +127,7 @@ object Ingest {
       .withColumn("error", col("error").cast("double"))
     val cleaned = filterAccuracy(renamed, maxError)
       .withColumn("uid", uidHash(col("uid")))
-      .withColumn("timestamp", col("timestamp").cast("double") / 1000.0)
+      .withColumn("timestamp", expr("CAST(timestamp AS BIGINT) div 1000"))
     val localized = localize(cleaned, "timestamp", tz)
     val kept = minActiveDays.fold(localized)(filterActiveDays(localized, _))
     writePartitioned(kept, outPath)

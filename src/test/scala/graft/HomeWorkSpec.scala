@@ -86,6 +86,81 @@ class HomeWorkSpec extends SparkSpec {
     assert(wide.head.getAs[Double]("h_lat") === 19.0)
     assert(wide.head.getAs[Double]("w_lon") === -99.0)
   }
+
+  test("a cluster with no candidate rows stays O even at zero thresholds") {
+    // loc 0: nights (H); loc 1: Monday 19:00 only — neither a night nor a
+    // work-hours row, so it has no candidate dates in either phase
+    val zero = p.copy(minPeriodsHome = 0.0, spanPeriodHome = 0.0,
+      minPeriodsWork = 0.0, spanPeriodWork = 0.0)
+    val df = clusters(
+      ("u", 1L, 0L, day(1, 23), day(1, 23) + 600),
+      ("u", 2L, 1L, day(4, 19), day(4, 19) + 600))
+    val got = HomeWork.label(df, zero).collect()
+      .map(r => r.getAs[Long]("stop_locations") -> r).toMap
+    assert(got(0L).getAs[String]("location_type") === "H")
+    assert(got(1L).getAs[String]("location_type") === "O")
+    assert(got(1L).getAs[Double]("home_label") === -1.0)
+    assert(got(1L).getAs[Double]("work_label") === -1.0)
+  }
+
+  test("a uid with no home candidates labels without dividing by zero") {
+    // "v" only has weekday noons: zero home dates, still labels W
+    val df = clusters(
+      ("u", 1L, 0L, day(1, 23), day(1, 23) + 600),
+      ("v", 2L, 0L, day(4, 12), day(4, 12) + 600),
+      ("v", 3L, 0L, day(5, 12), day(5, 12) + 600))
+    val got = HomeWork.label(df, p).collect()
+      .map(r => r.getAs[String]("uid") -> r.getAs[String]("location_type"))
+    assert(got.toSet === Set("u" -> "H", "v" -> "W"))
+  }
+
+  test("totalDays=None: the work span excludes H clusters' rows") {
+    // loc 0 is home (nights days 1-3) and also has a Thursday noon on day
+    // 0; loc 1 has Mon/Tue noons on days 11-12. Over work candidates
+    // without H rows the span is 2 days (2/2 = 1.0 clears 0.5); counting
+    // loc 0's day-0 noon would stretch it to 13 days (2/13 < 0.5).
+    val none = p.copy(spanPeriodHome = 0.5, spanPeriodWork = 0.5,
+      totalDays = None)
+    val df = clusters(
+      ("u", 1L, 0L, day(0, 12), day(0, 12) + 600),
+      ("u", 2L, 0L, day(1, 23), day(1, 23) + 600),
+      ("u", 3L, 0L, day(2, 23), day(2, 23) + 600),
+      ("u", 4L, 0L, day(3, 23), day(3, 23) + 600),
+      ("u", 5L, 1L, day(11, 12), day(11, 12) + 600),
+      ("u", 6L, 1L, day(12, 12), day(12, 12) + 600))
+    val got = HomeWork.label(df, none).collect()
+      .map(r => r.getAs[Long]("stop_locations") ->
+        r.getAs[String]("location_type")).toSet
+    assert(got === Set(0L -> "H", 1L -> "W"))
+  }
+
+  test("wide export: a cluster_counts tie goes to the lowest stop_locations") {
+    val labeled = Seq(
+      ("u", "H", 5L, 3L, 10.0), ("u", "H", 5L, 1L, 11.0),
+      ("u", "H", 4L, 0L, 12.0), ("u", "W", 2L, 7L, 13.0),
+      ("u", "O", 9L, 2L, 14.0), ("o", "O", 9L, 0L, 15.0))
+      .toDF("uid", "location_type", "cluster_counts", "stop_locations",
+        "cluster_latitude")
+      .withColumn("cluster_longitude", -$"cluster_latitude")
+    val wide = HomeWork.wideExport(labeled).collect()
+    assert(wide.length === 1, "a uid with neither H nor W has no row")
+    assert(wide.head.getAs[Double]("h_lat") === 11.0)
+    assert(wide.head.getAs[Double]("h_lon") === -11.0)
+    assert(wide.head.getAs[Double]("w_lat") === 13.0)
+  }
+
+  test("label with totalDays = Some(n) leaves no cache behind") {
+    val df = clusters(
+      ("u", 1L, 0L, day(1, 23), day(1, 23) + 600),
+      ("u", 2L, 1L, day(4, 12), day(4, 12) + 600))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val tracked = CacheScope.trackedCount
+    HomeWork.label(df, p).collect()
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty,
+      "label must not persist anything")
+    assert(CacheScope.trackedCount === tracked)
+  }
 }
 
 class HomeWorkTotalDaysSpec extends SparkSpec {

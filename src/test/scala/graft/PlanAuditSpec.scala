@@ -518,13 +518,47 @@ class PlanAuditSpec extends SparkSpec {
   test("GraftPlanAudit.shuffleCount: q17/q18 executed counts are single " +
     "digits (the true plan shape behind the r12 85-87 string artifact)") {
     import org.apache.spark.sql.execution.GraftPlanAudit
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     for (q <- Seq("q17_home_work", "q18_hw_wide")) {
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect()
       val n = GraftPlanAudit.shuffleCount(df)
       assert(n > 0 && n < 10,
         s"$q executed shuffle count must be single-digit, got $n")
+      assert(GraftPlanAudit.count(df)(_.isInstanceOf[InMemoryTableScanExec])
+        === 0, s"$q must not read a cache:\n${planOf(df)}")
     }
-    graft.CacheScope.releaseAll()
+  }
+
+  test("HomeWork tail (Some span): one exchange, one sort, no cache") {
+    import graft.operators.HomeWork
+    import org.apache.spark.sql.execution.{GraftPlanAudit, SortExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import spark.implicits._
+    // HomeWorkSpec's fixture shape: home nights, weekday-noon work
+    def day(d: Int, h: Int): Long = d.toLong * 86400L + h * 3600L
+    val clusters = Seq(
+      ("u", 1L, 0L, day(1, 23)), ("u", 2L, 0L, day(2, 23)),
+      ("u", 3L, 1L, day(4, 12)), ("u", 4L, 1L, day(5, 12)))
+      .map { case (u, e, l, s) =>
+        (u, e, 19.0, -99.0, s, s + 600, l, 2L, 19.0, -99.0)
+      }.toDF("uid", "stop_events", "latitude", "longitude",
+        "start_timestamp", "end_timestamp", "stop_locations",
+        "cluster_counts", "cluster_latitude", "cluster_longitude")
+    val p = HomeWork.Params(startHourDay = 7, endHourDay = 21,
+      startWorkingHour = 8, endWorkingHour = 18, spanPeriodHome = 0.1,
+      spanPeriodWork = 0.1, totalDays = Some(10L))
+    val wide = HomeWork.wideExport(HomeWork.label(clusters, p))
+    assert(wide.collect().length === 1)
+    def n(f: org.apache.spark.sql.execution.SparkPlan => Boolean) =
+      GraftPlanAudit.count(wide)(f)
+    assert(GraftPlanAudit.shuffleCount(wide) === 1,
+      s"the uid exchange must serve all four windows and the export:\n" +
+        planOf(wide))
+    assert(n(_.isInstanceOf[SortExec]) === 1,
+      s"one (uid, stop_locations) sort must serve the whole tail:\n" +
+        planOf(wide))
+    assert(n(_.isInstanceOf[InMemoryTableScanExec]) === 0,
+      s"HomeWork must not cache:\n${planOf(wide)}")
   }
 }

@@ -27,7 +27,6 @@ class ReadmeExampleSpec extends SparkSpec {
         total_days = None))
     graft.sources.Export.csvSingle(PolaRoam.hwWide(labeled), outDir)
     // README-EXAMPLE-END
-    CacheScope.releaseAll() // HomeWork.label persists internally
     val back = spark.read.option("header", "true").csv(outDir)
     assert(back.count() > 0, "the quickstart must export labeled users")
     assert(Seq("uid", "h_lat", "h_lon", "w_lat", "w_lon")

@@ -66,19 +66,24 @@ class IngestSpec extends SparkSpec {
     assert(got.toSeq === Seq("a"))
   }
 
-  test("localizeCsv: gz csv fixture -> hive-partitioned localized parquet") {
+  /** Writes `lines` as one headerless gz CSV; returns (dir, file). */
+  private def gzCsv(lines: Seq[String]): (String, String) = {
     val dir = Files.createTempDirectory("graft_gzcsv").toString
-    // headerless gz csv, reference column order: uid,_,lat,lon,error,ts(ms)
-    val lines = Seq(
-      "alice,x,19.0,-99.0,5.0,1705289400000",  // 2024-01-14 MX wall clock
-      "alice,x,19.1,-99.1,8.0,1705375800000",  // 2024-01-15
-      "bob,x,20.0,-98.0,50.0,1705289400000")   // error 50 >= 30: dropped
-    val gz = new java.io.File(s"$dir/part.csv.gz")
+    val gz = s"$dir/part.csv.gz"
     val out = new java.util.zip.GZIPOutputStream(
       new java.io.FileOutputStream(gz))
     out.write(lines.mkString("\n").getBytes("UTF-8")); out.close()
+    (dir, gz)
+  }
 
-    Ingest.localizeCsv(spark, gz.toString, s"$dir/out",
+  test("localizeCsv: gz csv fixture -> hive-partitioned localized parquet") {
+    // headerless gz csv, reference column order: uid,_,lat,lon,error,ts(ms)
+    val (dir, gz) = gzCsv(Seq(
+      "alice,x,19.0,-99.0,5.0,1705289400000",  // 2024-01-14 MX wall clock
+      "alice,x,19.1,-99.1,8.0,1705375800000",  // 2024-01-15
+      "bob,x,20.0,-98.0,50.0,1705289400000"))  // error 50 >= 30: dropped
+
+    Ingest.localizeCsv(spark, gz, s"$dir/out",
       "America/Mexico_City", maxError = 30.0, minActiveDays = None)
     val back = spark.read.parquet(s"$dir/out")
     assert(back.count() === 2) // bob dropped by accuracy filter
@@ -88,6 +93,32 @@ class IngestSpec extends SparkSpec {
     // partition values come back type-inferred as DateType
     assert(back.select(col("date_trunc").cast("string")).distinct().collect()
       .map(_.getString(0)).sorted.toSeq === Seq("2024-01-14", "2024-01-15"))
+    // whole epoch seconds as Long (SURVEY §1.3), not ms / 1000.0
+    assert(back.schema("timestamp").dataType ===
+      org.apache.spark.sql.types.LongType)
+    assert(back.select(min("timestamp")).head().getLong(0) === 1705289400L)
+  }
+
+  test("localizeCsv output feeds stops -> medians -> DBSCAN uncast") {
+    // one user dwelling at the same site for an hour on two days: two
+    // stop events that DBSCAN merges into one location
+    val t0 = 1705289400000L
+    val (dir, gz) = gzCsv(for {
+      d <- 0 until 2; k <- 0 until 7
+    } yield s"alice,x,19.0,-99.0,5.0,${t0 + d * 86400000L + k * 600000L}")
+
+    Ingest.localizeCsv(spark, gz, s"$dir/out",
+      "America/Mexico_City", minActiveDays = None)
+    val cfg = PolaRoam.Config(r1 = 100, r2 = 100, min_staying_time = 600,
+      max_time_between = 3600, min_size = 3)
+    val clusters = PolaRoam.computeDbscan(PolaRoam.computeLabelMedians(
+      PolaRoam.fitPredictFlat(spark.read.parquet(s"$dir/out"), cfg)), cfg)
+      .collect()
+    assert(clusters.length === 2, clusters.mkString("\n"))
+    assert(clusters.map(_.getAs[Long]("stop_locations")).distinct.toSeq ===
+      Seq(0L), "both stops must cluster into one location")
+    assert(clusters.map(_.getAs[Long]("start_timestamp")).min ===
+      t0 / 1000L)
   }
 
   test("validatePings: clean data passes, bad ranges and disorder throw") {
