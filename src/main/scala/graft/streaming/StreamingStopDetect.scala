@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Incremental stop detection over a ping stream — the streaming twin of
-  * StopDetect.stopEvents, via flatMapGroupsWithState.
+/** Incremental stop detection over a ping stream, via
+  * flatMapGroupsWithState. It applies the same stop rule as the batch
+  * StopDetect.stopEvents scan (StopDetect.distance, isStationary and
+  * keepRun), one micro-batch at a time, with the open run kept in state.
   *
   * Batch-equivalence contract (verified in StreamingStopDetectSpec):
   * emitted rows match the batch operator exactly for every ping that has
@@ -53,15 +55,6 @@ object StreamingStopDetect extends Serializable {
 
   private val emptyState = UserState(None, Nil, Nil, 0L, 1L)
 
-  private def dist(p: StopDetect.Params)(a: Ping, b: Ping): Double =
-    p.metric match {
-      case "euclidean" =>
-        math.sqrt(math.pow(b.latitude - a.latitude, 2) +
-          math.pow(b.longitude - a.longitude, 2))
-      case _ => graft.plans.Haversine.compute(
-        a.latitude, a.longitude, b.latitude, b.longitude)
-    }
-
   /** Advance the per-user automaton over `sorted` (ascending timestamp)
     * pings, returning the new state and every newly classified row.
     */
@@ -74,9 +67,10 @@ object StreamingStopDetect extends Serializable {
       st.prev match {
         case None => st = st.copy(prev = Some(cur))
         case Some(prev) =>
-          val d = dist(p)(prev, cur)
           val dt = cur.timestamp - prev.timestamp
-          val stationary = d <= p.rC && dt <= p.maxStayingTime
+          val stationary = StopDetect.isStationary(p,
+            StopDetect.distance(p, prev.latitude, prev.longitude,
+              cur.latitude, cur.longitude), dt)
           if (stationary) {
             val id = if (st.run.isEmpty) st.nextId else st.runId
             st = UserState(
@@ -91,8 +85,7 @@ object StreamingStopDetect extends Serializable {
             // already include each event row's forward gap), emit
             // prev itself as -1
             if (st.run.nonEmpty) {
-              val ok = st.run.lengthCompare(p.minSize.toInt) >= 0 &&
-                st.runTimes.sum >= p.minStayingTime
+              val ok = StopDetect.keepRun(p, st.run.size, st.runTimes.sum)
               out ++= (if (ok) st.run.reverse
                 else st.run.reverse.map(_.copy(stop_events = -1L)))
             }

@@ -24,4 +24,11 @@ object GraftBridge {
       rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
       schema: types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** DataFrame over a logical plan (the private[sql] `Dataset.ofRows`),
+    * for operators that add their own plan node (graft.plans.StopScan).
+    */
+  def ofRows(spark: SparkSession,
+             plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -35,6 +35,41 @@ class PlanAuditSpec extends SparkSpec {
       s"the single exchange must key on uid:\n$plan")
   }
 
+  test("stop pipeline: one sort, one StopScanExec, no window") {
+    import graft.plans.StopScanExec
+    import org.apache.spark.sql.execution.{GraftPlanAudit, SortExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    val pings = Seq(
+      ("u", 19.0, -99.0, 0L), ("u", 19.0, -99.0, 400L),
+      ("u", 19.0, -99.0, 800L), ("u", 19.1, -99.0, 1200L),
+      ("v", 19.0, -99.0, 0L), ("v", 19.0, -99.0, 400L))
+      .toDF("uid", "latitude", "longitude", "timestamp")
+    val medians = StopDetect.eventMedians(
+      StopDetect.stopEvents(pings, StopDetect.Params()))
+    assert(medians.collect().length === 1)
+    def n(f: org.apache.spark.sql.execution.SparkPlan => Boolean) =
+      GraftPlanAudit.count(medians)(f)
+    assert(GraftPlanAudit.shuffleCount(medians) === 1, planOf(medians))
+    assert(n(_.isInstanceOf[WindowExec]) === 0,
+      s"stop detection must not plan windows:\n${planOf(medians)}")
+    assert(n(_.isInstanceOf[SortExec]) === 1,
+      s"one (uid, timestamp) sort must serve the scan and the medians:\n" +
+        planOf(medians))
+    assert(n(_.isInstanceOf[StopScanExec]) === 1, planOf(medians))
+  }
+
+  test("stopEvents installs its planner strategy once per session") {
+    import graft.plans.StopScanStrategy
+    import spark.implicits._
+    val pings = Seq(("u", 19.0, -99.0, 0L))
+      .toDF("uid", "latitude", "longitude", "timestamp")
+    StopDetect.stopEvents(pings, StopDetect.Params())
+    StopDetect.stopEvents(pings, StopDetect.Params())
+    assert(spark.experimental.extraStrategies
+      .count(_ == StopScanStrategy) === 1)
+  }
+
   test("q01 scan: filter reaches PushedFilters, schema is pruned") {
     val plan = SparkEntry.queries("q01_scan_filter")(spark, sf)
       .queryExecution.executedPlan.treeString(verbose = true)

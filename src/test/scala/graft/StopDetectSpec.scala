@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.StopDetect
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, median, udf}
 
 class StopDetectSpec extends SparkSpec {
   import spark.implicits._
@@ -76,6 +76,133 @@ class StopDetectSpec extends SparkSpec {
     assert(r.getAs[Double]("latitude") === 19.0001)
     assert(r.getAs[Long]("start_timestamp") === 0L)
     assert(r.getAs[Long]("end_timestamp") === 400L)
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame) =
+    StopDetect.stopEvents(df, p).orderBy("uid", "timestamp")
+      .select("uid", "stop_events").collect()
+      .map(r => (r.get(0).toString, r.getLong(1))).toSeq
+
+  test("a null latitude in the middle of a dwell splits it") {
+    // one spot, 400 s apart, then a jump. Without the null the first six
+    // rows are one event. The row before the null sees a null distance
+    // and the null row has one itself: both are -1, each half is an event.
+    // The spot is (0, 0), where a null read as 0.0 would look stationary.
+    val lats = Seq(Some(0.0), Some(0.0), Some(0.0), None,
+      Some(0.0), Some(0.0), Some(0.0), Some(0.1))
+    val df = lats.zipWithIndex
+      .map { case (la, i) => ("u", la, 0.0, i * 400L) }
+      .toDF("uid", "latitude", "longitude", "timestamp")
+    assert(ids(df).map(_._2) === Seq(1L, 1L, -1L, -1L, 2L, 2L, -1L, -1L))
+  }
+
+  test("an invalidated first run still uses up id 1") {
+    // run 1 (t=0,100) totals 200 s < 600 and is invalidated; run 2 at a
+    // second spot (t=300,700) totals 800 s and keeps id 2
+    val got = run(Seq(
+      ("u", 19.0, -99.0, 0L), ("u", 19.0, -99.0, 100L),
+      ("u", 19.0, -99.0, 200L), ("u", 19.1, -99.0, 300L),
+      ("u", 19.1, -99.0, 700L), ("u", 19.1, -99.0, 1100L),
+      ("u", 19.2, -99.0, 1500L)))
+    assert(got.map(_._2).toSeq === Seq(-1L, -1L, -1L, 2L, 2L, -1L, -1L))
+  }
+
+  test("two uids in one shuffle partition: runs never cross, ids restart") {
+    // b continues a's dwell at the same spot 400 s later. Crossing uids
+    // would make a's last row stationary and give b's event id 2.
+    val rows = Seq(
+      ("a", 19.0, -99.0, 0L), ("a", 19.0, -99.0, 400L),
+      ("a", 19.0, -99.0, 800L), ("a", 19.0, -99.0, 1200L),
+      ("b", 19.0, -99.0, 1600L), ("b", 19.0, -99.0, 2000L),
+      ("b", 19.0, -99.0, 2400L), ("b", 19.1, -99.0, 2800L))
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val got =
+      try ids(rows.toDF("uid", "latitude", "longitude", "timestamp"))
+      finally saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    assert(got === Seq(("a", 1L), ("a", 1L), ("a", 1L), ("a", -1L),
+      ("b", 1L), ("b", 1L), ("b", -1L), ("b", -1L)))
+  }
+
+  test("Long and String uids keep their type in the output schema") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val dwell = Seq((19.0, 0L), (19.0, 400L), (19.0, 800L), (19.1, 1200L))
+    val asLong = dwell.map { case (la, t) => (7L, la, -99.0, t) }
+      .toDF("uid", "latitude", "longitude", "timestamp")
+    val asString = dwell.map { case (la, t) => ("7", la, -99.0, t) }
+      .toDF("uid", "latitude", "longitude", "timestamp")
+    for ((df, t) <- Seq(asLong -> LongType, asString -> StringType)) {
+      val out = StopDetect.stopEvents(df, p)
+      assert(out.schema("uid").dataType === t)
+      assert(out.columns.toSeq ===
+        Seq("uid", "stop_events", "latitude", "longitude", "timestamp"))
+      assert(ids(df).map(_._2) === Seq(1L, 1L, -1L, -1L))
+    }
+  }
+
+  test("a run whose every time gap is null is never kept") {
+    // null timestamps: the gaps count as within time, but total_time is
+    // null, so even minStayingTime = 0 does not keep the run
+    val df = Seq[(String, Double, Double, Option[Long])](
+      ("u", 19.0, -99.0, None), ("u", 19.0, -99.0, None),
+      ("u", 19.0, -99.0, None), ("u", 19.1, -99.0, Some(100L)))
+      .toDF("uid", "latitude", "longitude", "timestamp")
+    val got = StopDetect.stopEvents(df, p.copy(minStayingTime = 0L))
+      .collect().map(_.getAs[Long]("stop_events"))
+    assert(got.toSeq === Seq(-1L, -1L, -1L, -1L))
+  }
+
+  test("a fractional timestamp is rejected up front") {
+    val df = Seq(("u", 19.0, -99.0, 0.5))
+      .toDF("uid", "latitude", "longitude", "timestamp")
+    val e = intercept[IllegalArgumentException](StopDetect.stopEvents(df, p))
+    assert(e.getMessage.contains("timestamp must be integral"))
+  }
+
+  test("a dwell of more than 4,096 pings is one event") {
+    val n = 5000
+    val df = ((0 until n).map(i => ("u", 19.0, -99.0, i * 60L)) :+
+      ("u", 19.1, -99.0, n * 60L))
+      .toDF("uid", "latitude", "longitude", "timestamp")
+    // every dwell row but the last sees a stationary successor
+    val got = ids(df).map(_._2)
+    assert(got.take(n - 1).forall(_ == 1L))
+    assert(got.drop(n - 1) === Seq(-1L, -1L))
+  }
+
+  test("eventMedians equals Spark's median bit for bit") {
+    // groups of 1-6 values, duplicates, wide mixed-sign spreads (where
+    // a + 0.5*(b-a) and 0.5*a + 0.5*b differ), NaN, null, all-null
+    val rng = new scala.util.Random(7)
+    val random = (1 to 6).flatMap(n =>
+      (1 to 5).map(_ => Seq.fill(n)(Option(rng.nextGaussian() * 1e3))))
+    val crafted = Seq(
+      Seq(-3.0, 7.1e2), Seq(-3.0, 7.1e2, 7.1e2, -3.0), Seq(0.1, 0.2),
+      Seq(0.1, 0.7, 0.2, 0.3), Seq(2.0, 2.0, 2.0), Seq(1.0, 1.0, 5.0, 5.0),
+      Seq(-1e300, 1e300), Seq(Double.MinPositiveValue),
+      Seq(Double.NaN, 1.0), Seq(Double.NaN, 1.0, 2.0),
+      Seq(Double.NaN, Double.NaN)).map(_.map(Option(_))) ++ Seq(
+      Seq(Some(19.5), None, Some(19.25)), Seq(None, Some(4.0)), Seq(None))
+    val rows = (random ++ crafted).zipWithIndex.flatMap { case (g, e) =>
+      g.zipWithIndex.map { case (v, i) =>
+        ("u", e + 1L, v, v.map(-_), i.toLong) }
+    }.toDF("uid", "stop_events", "latitude", "longitude", "timestamp")
+    val bits = udf((d: java.lang.Double) =>
+      Option(d).map(x => java.lang.Double.doubleToLongBits(x)))
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("stop_events"), bits(col("latitude")),
+        bits(col("longitude"))).collect()
+        .map(r => r.getLong(0) -> (r.get(1), r.get(2))).toMap
+    val want = keyed(rows.groupBy("uid", "stop_events").agg(
+      median(col("latitude")).as("latitude"),
+      median(col("longitude")).as("longitude")))
+    val got = keyed(StopDetect.eventMedians(rows))
+    assert(got.size === random.size + crafted.size)
+    assert(got === want)
   }
 }
 
