@@ -47,31 +47,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing floor: parallelism-first coalescing still packs
-      // sub-1MB-per-core shuffles into ONE partition (default
-      // minPartitionSize 1m), which serializes CPU-dense tiny shuffles —
-      // the stop-detect window/median/DBSCAN pipeline ran 1-wide for
-      // ~1.2 s/stage at sf0.1. A 128k floor keeps those parallel; at
-      // production sizes bytes/parallelism >> 64k, so the floor is inert
-      // (measured r13: q12-q18/q84 family -25..-45%, no regressions).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "128k")
-      // Let AQE re-partition cached-plan materializations too (default
-      // false): the repo's operator persists otherwise materialize at the
-      // session's full shuffle width and every InMemoryTableScan consumer
-      // inherits it — measured r13: q17 3.3->2.5 s, q245 2.9->1.9 s with
-      // the flag on, no regressions (results are partitioning-blind).
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench")
     // JIT/codegen warmup so the first measured query isn't charged for it
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val meter = new WorkMeter

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL convenience surface: register every driver table (plus the pings
-  * view) as temp views and run Spark SQL against them — the engine's
-  * equivalent of handing users a SQL prompt over the data model.
+  * view) as temp views and the engine's SQL functions, and run Spark SQL
+  * against them — the engine's equivalent of handing users a SQL prompt
+  * over the data model. The caller's session confs are left as they are.
   */
 object Graft {
 
@@ -21,6 +22,7 @@ object Graft {
 
   def sql(spark: SparkSession, sfDir: String, query: String): DataFrame = {
     registerViews(spark, sfDir)
+    graft.plans.GraftExtensions.register(spark)
     spark.sql(query)
   }
 }

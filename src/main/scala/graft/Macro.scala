@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.TextFunctions
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end curation macro-run (dev main) — the q78 pipeline at sf1+
@@ -52,22 +52,7 @@ object Macro {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing floor (see Bench.scala): keeps CPU-dense tiny
-      // shuffles parallel at gate scale; inert at production sizes
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "128k")
-      // cached-plan AQE re-partitioning (see Bench.scala)
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-macro")
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

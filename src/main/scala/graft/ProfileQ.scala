@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-stage profiler (not part of the driver contract).
   *
-  * Runs named queries under the Bench session shape and prints, per run,
-  * the job/stage ledger: stage wall clock (submission -> completion),
+  * Runs named queries under the [[Session]] profile and prints, per
+  * run, the job/stage ledger: stage wall clock (submission -> completion),
   * task count, shuffle bytes — the empirical loop of guide §1.1 without
   * the (disabled) UI. Extra confs for A/B sweeps ride
   * `SPARK_GRAFT_CONF="k=v;k=v"`; runs per query via `SPARK_GRAFT_RUNS`.
@@ -21,24 +20,12 @@ object ProfileQ {
       System.setProperty("java.io.tmpdir", d)
     }
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "128k")
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
+    val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").filter(_.nonEmpty)).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        k -> v
+      }
+    val spark = Session.local("graft-profile", extra: _*)
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     final case class StageRec(jobId: Int, stageId: Int, name: String,

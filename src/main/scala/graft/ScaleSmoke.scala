@@ -197,27 +197,12 @@ object ScaleSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing floor (see Bench.scala): keeps CPU-dense tiny
-      // shuffles parallel at gate scale; inert at production sizes
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "128k")
-      // cached-plan AQE re-partitioning (see Bench.scala)
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // the x100 streaming gates' memory-sink collects brush past the
-      // 1g default (q158 died at 1074.2 MiB mid-sweep, r13); only
-      // applies when THIS main creates the session — a fast-path
-      // spark-shell launcher must pass the same conf on its own
-      .config("spark.driver.maxResultSize", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the x100 streaming gates' memory-sink collects brush past the
+    // 1g default (q158 died at 1074.2 MiB mid-sweep, r13); only
+    // applies when THIS main creates the session — a fast-path
+    // spark-shell launcher must pass the same conf on its own
+    val spark = Session.local("graft-scale-smoke",
+      "spark.driver.maxResultSize" -> "8g")
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

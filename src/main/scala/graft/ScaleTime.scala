@@ -309,32 +309,18 @@ object ScaleTime {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Session.local("graft-scale-time",
       // streaming replay cost is per-batch per-state-partition commits;
       // at 16·N batches the default 32 state partitions would dominate
       // wall clock without touching the measured peaks (peaks are row
       // counts summed over partitions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_TIME_SHUFFLE", "8"))
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_TIME_SHUFFLE", "8"),
       // metrics ride StreamingQuery.recentProgress, which retains only
       // the last 100 updates by default — a 16·N-batch replay would
       // silently truncate input_rows (and clip the peak window) past
       // N ≈ 6; keep every batch's progress visible to the harness
-      .config("spark.sql.streaming.numRecentProgressUpdates", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing floor (see Bench.scala): keeps CPU-dense tiny
-      // shuffles parallel at gate scale; inert at production sizes
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "128k")
-      // cached-plan AQE re-partitioning (see Bench.scala)
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.numRecentProgressUpdates" -> "4000")
 
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_TIME_DIR", "/tmp/graft_time")

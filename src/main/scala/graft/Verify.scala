@@ -22,24 +22,9 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val timeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "150").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing floor (see Bench.scala): keeps CPU-dense tiny
-      // shuffles parallel at gate scale; inert at production sizes
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "128k")
-      // cached-plan AQE re-partitioning (see Bench.scala)
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Single worker: queries still run serially, but from a thread we can
     // abandon on timeout. Job-group tagging happens on the submitting

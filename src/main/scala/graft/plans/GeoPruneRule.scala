@@ -27,7 +27,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * batches to fixpoint) is guaranteed by skipping filters that already
   * contain a semantically-equal bound.
   *
-  * Installed by [[GraftExtensions]] via injectOptimizerRule.
+  * Installed by `graft.Session.configure` (as an extra optimization) or
+  * by [[GraftExtensions]] (via injectOptimizerRule).
   */
 object GeoPruneRule extends Rule[LogicalPlan] {
 

@@ -8,10 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * users: `SELECT haversine_m(lat1, lon1, lat2, lon2)`,
   * `SELECT long_dot(a, b)`, `SELECT minhash_signature(text, 3, 32)`.
   *
-  * Install via
+  * The harnesses and tests install the functions and [[GeoPruneRule]]
+  * through `graft.Session.configure`, which works on a live session.
+  * Elsewhere, install via
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`; or call
-  * [[GraftExtensions.register]] on a live session.
+  * [[GraftExtensions.register]] on a live session (functions only).
   *
   * Only expressions whose every parameter is SQL-expressible are
   * registered; parameters that are scalar CONFIGURATION (shingle size,
@@ -107,10 +109,15 @@ object GraftExtensions {
         JaroWinkler(args(0), args(1))
       }))
 
-  /** Imperative registration on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Imperative registration on an existing session; functions already
+    * registered there are left as they are.
+    */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     descriptors.foreach { case (id, _, build) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, build, "scala_udf")
+      if (!registry.functionExists(id)) {
+        registry.createOrReplaceTempFunction(id.funcName, build, "scala_udf")
+      }
     }
+  }
 }

@@ -3,21 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture: one local session per suite. */
+/** Shared session fixture: one session per test JVM, built by the same
+  * [[Session]] profile that Verify and Bench run.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Tables.tune(s)
-  }
+  lazy val session: SparkSession =
+    Tables.tune(Session.local("graft-test"))
 }
