@@ -1,33 +1,17 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.RunLedger.{Run, best, noisy, num, strs}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s._
+
+/** The query-board benchmark: every `SparkEntry.queries` entry under the
+  * shared pass policy ([[RunLedger.sweep]]), one record with per-pass
+  * wall, host load, process CPU and work shape, and a comparator against
+  * the previous round's record.
+  */
 object Bench {
-  /** Per-run work-shape meter: task count + shuffle/input byte volumes
-    * from the scheduler's task-end events. These are the cross-round
-    * PLAN-SHAPE evidence the wall/CPU pair cannot give: this host's
-    * speed drifts round-to-round (r13: the whole board ran ~1.3x slower
-    * than r12's record at flat busy%/steal% and up to 3x the process-CPU
-    * on identical code+data — contention inflates CPU-seconds), so "CPU
-    * grew with wall" alone cannot distinguish a genuinely heavier plan
-    * from the same plan on a slower machine. Identical task counts and
-    * byte volumes across rounds prove the work was the same.
-    */
-  private final class WorkMeter extends org.apache.spark.scheduler.SparkListener {
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten +
-          m.shuffleReadMetrics.totalBytesRead)
-        inputBytes.addAndGet(m.inputMetrics.bytesRead)
-        ()
-      }
-    }
-  }
+
   /** Materialize every output column of `df` and return a fold of them.
     *
     * `count()` is NOT a benchmark: Catalyst prunes all columns under a
@@ -45,445 +29,226 @@ object Bench {
     if (row.isNullAt(0)) 0L else row.getLong(0)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Session.local("graft-bench")
-    // JIT/codegen warmup so the first measured query isn't charged for it
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    val meter = new WorkMeter
-    spark.sparkContext.addSparkListener(meter)
-    // task-end events arrive on an async bus — drain before each
-    // snapshot or the tail of one query's tasks lands on the next
-    def workSnapshot(): (Long, Long, Long) = {
-      org.apache.spark.GraftSchedulerBridge
-        .drainListenerBus(spark.sparkContext, 10000L)
-      (meter.tasks.get, meter.shuffleBytes.get, meter.inputBytes.get)
-    }
-    // This VM suffers bursty CPU steal (identical queries measured 10-30x
-    // apart back-to-back); min-over-passes keeps one burst from poisoning
-    // a recorded timing. Passes are INTERLEAVED (all queries pass 1, then
-    // all pass 2): back-to-back runs of the same query sit inside the same
-    // burst window, so min-of-2 recorded a 111 s q18 whose clean time was
-    // ~5 s. With interleaving, a burst hits different queries each pass.
-    // 3 passes default: with min-of-2, ONE burst overlapping both passes of
-    // a query poisons its min; a third interleaved pass makes that need two
-    // independent bursts to land on the same query (r4's record had exactly
-    // the two-burst overlap on q29/q30/q57).
-    val runsPerQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // Previous-round full record for the cross-round comparator (r12
-    // verdict #5: nine >1.15x sub-second regressions shipped with no
-    // explanation in the record). Read at START: the default path is
-    // BENCH.out.json — the committed previous round's full record —
-    // which THIS run overwrites at the end. Override with
-    // SPARK_GRAFT_BENCH_PREV.
-    case class PrevRec(path: String, q: Map[String, Double],
-                       cpuBest: Map[String, Double],
-                       tasksBest: Map[String, Double],
-                       shufBest: Map[String, Double],
-                       flagged: Set[String])
-    val prevRec: Option[PrevRec] = {
-      val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.out.json"))
-      val f = new java.io.File(p)
-      if (!f.exists()) None
-      else scala.util.Try {
-        import org.json4s._
-        val j = org.json4s.jackson.JsonMethods.parse(f)
-        def num(v: JValue): Double = v match {
-          case JDouble(d) => d
-          case JInt(i) => i.toDouble
-          case JLong(l) => l.toDouble
-          case JDecimal(d) => d.toDouble
-          case _ => Double.NaN
-        }
-        def obj(name: String): Map[String, JValue] = j \ name match {
-          case JObject(fs) => fs.toMap
-          case _ => Map.empty
-        }
-        def arr(v: JValue): List[JValue] = v match {
-          case JArray(xs) => xs
-          case _ => Nil
-        }
-        val qs = obj("queries").map { case (k, v) => k -> num(v) }
-        val passesP = obj("passes").map { case (k, v) => k -> arr(v).map(num) }
-        val cpuP = obj("cpu").map { case (k, v) => k -> arr(v).map(num) }
-        val quietP = obj("quiet").map { case (k, v) =>
-          k -> arr(v).map(_ == JBool(true))
-        }
-        // per-metric value of the pass the recorded min came from
-        // (the fastest QUIET pass, or the fastest overall when none is)
-        def bestIdx(n: String): Option[Int] = {
-          val ws = passesP.getOrElse(n, Nil)
-          val vq = quietP.getOrElse(n, ws.map(_ => true))
-          ws.zipWithIndex.zip(vq)
-            .collect { case ((w, i), true) => (w, i) } match {
-            case Nil => ws.zipWithIndex.sortBy(_._1).headOption.map(_._2)
-            case quiet => Some(quiet.minBy(_._1)._2)
-          }
-        }
-        def bestOf(metric: Map[String, List[Double]]): Map[String, Double] =
-          qs.keys.flatMap { n =>
-            bestIdx(n).flatMap(metric.getOrElse(n, Nil).lift)
-              .filter(_ >= 0).map(n -> _)
-          }.toMap
-        val cpuBest = bestOf(cpuP)
-        // work-shape metrics (absent in records before r13 -> empty maps)
-        val tasksBest =
-          bestOf(obj("tasks").map { case (k, v) => k -> arr(v).map(num) })
-        val shufBest = bestOf(
-          obj("shuffle_bytes").map { case (k, v) => k -> arr(v).map(num) })
-        val flagged = (arr(j \ "noisy") ++ arr(j \ "host_variance"))
-          .collect { case JString(s) => s }.toSet
-        PrevRec(p, qs, cpuBest, tasksBest, shufBest, flagged)
-      }.toOption
-    }
-    // Dev bisection hook: comma-separated name prefixes to run (default all)
-    val filter = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSeq).getOrElse(Seq(""))
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => filter.exists(n.startsWith) }
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    val passes =
-      scala.collection.mutable.Map.empty[String, List[Double]]
-        .withDefaultValue(Nil)
-    // Per-pass host-load fingerprint (verdict r7 #8): two rounds of
-    // audits were spent attributing ±30% swings to environment by
-    // argument. /proc/stat deltas across each pass make it attributable
-    // from the artifact alone: steal% = hypervisor took the CPU (the
-    // bursty-VM signature), busy% = total non-idle including other
-    // processes. A 31 s pass with 40% steal next to a 3.8 s pass with 0%
-    // is self-diagnosing.
-    val loads = scala.collection.mutable.Map.empty[String, List[(Double, Double)]]
-      .withDefaultValue(Nil)
-    // Per-pass PROCESS CPU seconds next to [steal%, busy%] (verdict r10
-    // #5): steal-only gating is blind to neighbor-load noise — q17's
-    // quiet passes spanned 3.1-10.7 s with steal at 0%. Wall up with CPU
-    // flat = the host descheduled us; wall and CPU up together = the
-    // query genuinely did more work (plan nondeterminism).
-    val cpuSecs = scala.collection.mutable.Map.empty[String, List[Double]]
-      .withDefaultValue(Nil)
-    // Per-pass work-shape deltas from the WorkMeter (aligned with
-    // passes): cross-round identity of task count + byte volume is the
-    // host-speed-proof evidence for the vs_prev cause tags.
-    val taskCounts = scala.collection.mutable.Map.empty[String, List[Long]]
-      .withDefaultValue(Nil)
-    val shufBytes = scala.collection.mutable.Map.empty[String, List[Long]]
-      .withDefaultValue(Nil)
-    val inBytes = scala.collection.mutable.Map.empty[String, List[Long]]
-      .withDefaultValue(Nil)
-    def cpuTicks() = HostLoad.cpuTicks()
-    val errors = scala.collection.mutable.Map.empty[String, String]
-    // Noise gate (r9 verdict ask #5): a pass is QUIET iff its steal% is
-    // at or under this bound — min-of-passes only protects the record
-    // when at least one pass ran on a quiet machine (r9's x1.16 "drift"
-    // was all three passes loaded). busy% is NOT gated: it includes this
-    // bench's own 32 executor threads, so a legitimately heavy query
-    // saturates it. Queries whose every pass is noisy get bounded
-    // re-runs below; if none lands quiet, the min falls back to all
-    // passes and the query is flagged in "noisy".
-    val quietSteal =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_STEAL", "1.0").toDouble
-    val valid = scala.collection.mutable.Map.empty[String, List[Boolean]]
-      .withDefaultValue(Nil)
-    def runOne(pass: String, name: String, fn: (SparkSession, String) => DataFrame): Unit = {
-      // Each run pays the full query cost: queries that persist() internally
-      // (tracked in CacheScope) would otherwise serve later passes from
-      // cache. Targeted release, not clearCache — see Verify.
-      CacheScope.releaseAll()
-      val w0 = workSnapshot()
-      val ticks0 = cpuTicks()
-      val cpu0 = HostLoad.processCpuSeconds()
-      val t0 = System.nanoTime()
-      try {
-        force(fn(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        val cpu1 = HostLoad.processCpuSeconds()
-        val cpuDt = if (cpu0 < 0 || cpu1 < 0) -1.0 else cpu1 - cpu0
-        val (stealPct, busyPct) = HostLoad.loadBetween(ticks0, cpuTicks())
-        // a pass with unreadable /proc/stat counts as quiet: better one
-        // possibly-noisy measurement than none on an exotic host
-        val quiet = stealPct < 0 || stealPct <= quietSteal
-        // progress to stderr: which query a stall is in, and per-pass
-        // timings (min-of-passes hides a steal burst; the log keeps it)
-        System.err.println(
-          f"[bench] pass $pass $name $dt%.2f s (cpu $cpuDt%.2f s steal $stealPct%.1f%% busy $busyPct%.1f%%${if (quiet) "" else " NOISY"})")
-        passes(name) = passes(name) :+ dt
-        loads(name) = loads(name) :+ ((stealPct, busyPct))
-        cpuSecs(name) = cpuSecs(name) :+ cpuDt
-        val w1 = workSnapshot()
-        taskCounts(name) = taskCounts(name) :+ (w1._1 - w0._1)
-        shufBytes(name) = shufBytes(name) :+ (w1._2 - w0._2)
-        inBytes(name) = inBytes(name) :+ (w1._3 - w0._3)
-        valid(name) = valid(name) :+ quiet
-        if (quiet && dt < best.getOrElse(name, Double.MaxValue)) best(name) = dt
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          // Record the first line of EVERY exception in the cause chain:
-          // r6's q89 root cause ("Option 'basePath' must be a directory")
-          // sat past a 120-char truncation and cost a round to rediscover.
-          val chain = Iterator.iterate(e)(_.getCause)
-            .takeWhile(_ != null).take(5)
-            .map(t => t.getClass.getSimpleName + ": " +
-              Option(t.getMessage).getOrElse("")
-                .takeWhile(_ != '\n').take(300))
-            .mkString(" <- ")
-          errors(name) = chain
-          System.err.println(s"[bench] $name FAILED: $chain")
+  /** A previous record's per-query figures for the comparator: the
+    * recorded min, and process CPU, task count and shuffle bytes of the
+    * pass that min came from (work-shape maps are empty for records
+    * before r13). `flagged` = its noisy and host-variance queries.
+    */
+  final case class Prev(path: String, wall: Map[String, Double],
+                        cpu: Map[String, Double], tasks: Map[String, Double],
+                        shuffle: Map[String, Double], flagged: Set[String])
+
+  def prev(path: String): Option[Prev] =
+    if (!new java.io.File(path).exists()) None
+    else scala.util.Try {
+      val j = RunLedger.parse(path)
+      def dbl(v: JValue): Double = v match {
+        case JDouble(d) => d
+        case JDecimal(d) => d.toDouble
+        case JLong(l) => l.toDouble
+        case JInt(i) => i.toDouble
+        case _ => Double.NaN
       }
-    }
-    for (pass <- 1 to runsPerQuery; (name, fn) <- named)
-      runOne(pass.toString, name, fn)
-    // retry phase: queries with zero quiet passes re-run (interleaved,
-    // bounded) until one lands quiet or retries exhaust
-    val retryRounds =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "2").toInt
-    val qmap = named.toMap
-    for (r <- 1 to retryRounds) {
-      val noisy = named.map(_._1)
-        .filter(n => passes(n).nonEmpty && !valid(n).contains(true))
-      if (noisy.nonEmpty) {
-        System.err.println(
-          s"[bench] retry round $r: ${noisy.size} queries with no quiet pass")
-        noisy.foreach(n => runOne(s"retry$r", n, qmap(n)))
+      def arr(v: JValue): List[JValue] = v match {
+        case JArray(xs) => xs
+        case _ => Nil
       }
-    }
-    // Host-variance sweep (verdict r10 #5): a query whose QUIET passes
-    // span > 2x in wall while their process-CPU seconds stay within
-    // 1.5x was descheduled by the host, not re-planned — the steal gate
-    // can't see neighbor load. Each suspect gets one re-measure pass
-    // (tightens the min on a now-quieter host), and whatever still
-    // spans lands in "host_variance" so the record attributes the
-    // spread instead of leaving it a mystery.
-    def hostVariance(n: String): Boolean = {
-      val qw = passes(n).zip(valid(n)).collect { case (w, true) => w }
-      if (qw.size < 2 || qw.max <= qw.min * 2.0) false
-      else {
-        val qc = cpuSecs(n).zip(valid(n))
-          .collect { case (c, true) if c >= 0 => c }
-        qc.size >= 2 && qc.max <= math.max(qc.min, 1e-9) * 1.5
+      def obj(k: String): Map[String, List[JValue]] = j \ k match {
+        case JObject(fs) => fs.map { case (n, v) => n -> arr(v) }.toMap
+        case _ => Map.empty
       }
-    }
-    val suspects = named.map(_._1).filter(n =>
-      passes(n).nonEmpty && hostVariance(n))
-    if (suspects.nonEmpty) {
-      System.err.println(
-        s"[bench] host-variance re-measure: ${suspects.size} queries " +
-          s"with quiet wall span > 2x at flat CPU")
-      suspects.foreach(n => runOne("var1", n, qmap(n)))
-    }
-    val hostVar = named.map(_._1).filter(n =>
-      passes(n).nonEmpty && hostVariance(n))
-    // no quiet pass after retries -> fall back to min over ALL passes and
-    // flag the query; a missing entry would read as "not run"
-    val neverQuiet = named.map(_._1)
-      .filter(n => passes(n).nonEmpty && !valid(n).contains(true))
-    neverQuiet.foreach(n => best(n) = passes(n).min)
-    // A query with no successful run is omitted from timings (it lives in
-    // errors) — a failed attempt's wall time is not a measurement.
-    val results = best.toMap
-    def jstr(s: String) =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
-    // Per-pass timings make the recorded min self-diagnosing: a 129 s min
-    // whose twin pass is 7 s is a CPU-steal artifact, visible in the
-    // artifact itself instead of only in stderr logs.
-    // Locale.ROOT: comma-decimal default locales would emit invalid JSON
-    val ps = passes.toMap.map { case (k, vs) =>
-      jstr(k) + ":" + vs
-        .map(v => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)))
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-      .mkString("{", ",", "}")
-    // Median alongside min: the min answers "how fast is this query when the
-    // VM is quiet", the median answers "was this run's record trustworthy" —
-    // a median far above the min means steal contaminated most passes.
-    def median(vs: List[Double]): Double = {
+      val wall = j \ "queries" match {
+        case JObject(fs) => fs.map { case (n, v) => n -> dbl(v) }.toMap
+        case _ => Map.empty[String, Double]
+      }
+      val passes = obj("passes")
+      val quiet = obj("quiet")
+      // index of the pass the recorded min came from: the fastest quiet
+      // pass, or the fastest overall when none is
+      val bestIdx = wall.keys.flatMap { n =>
+        val ws = passes.getOrElse(n, Nil).map(dbl).zipWithIndex
+        val q = quiet.getOrElse(n, ws.map(_ => JBool(true)))
+        val quietWs = ws.zip(q).collect { case (w, JBool(true)) => w }
+        (if (quietWs.nonEmpty) quietWs else ws).minByOption(_._1)
+          .map(n -> _._2)
+      }
+      def atBest(k: String): Map[String, Double] = {
+        val m = obj(k)
+        bestIdx.flatMap { case (n, i) =>
+          m.getOrElse(n, Nil).lift(i).map(dbl).filter(_ >= 0).map(n -> _)
+        }.toMap
+      }
+      val flagged = (arr(j \ "noisy") ++ arr(j \ "host_variance"))
+        .collect { case JString(s) => s }.toSet
+      Prev(path, wall, atBest("cpu"), atBest("tasks"),
+        atBest("shuffle_bytes"), flagged)
+    }.toOption
+
+  /** A query whose QUIET passes span > 2x in wall while their process
+    * CPU stays within 1.5x was descheduled by the host, not re-planned:
+    * the steal gate cannot see neighbor load.
+    */
+  private def hostVariance(runs: Seq[Run]): Boolean = {
+    val q = runs.filter(r => r.ok && r.quiet)
+    val cpu = q.map(_.cpuS).filter(_ >= 0)
+    q.size >= 2 && q.map(_.wallS).max > q.map(_.wallS).min * 2.0 &&
+      cpu.size >= 2 && cpu.max <= math.max(cpu.min, 1e-9) * 1.5
+  }
+
+  private def median(vs: Seq[Double]): Double =
+    if (vs.isEmpty) Double.NaN
+    else {
       val s = vs.sorted
       if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    val meds = passes.toMap.map { case (k, vs) =>
-      jstr(k) + ":" +
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(median(vs)))
-    }.mkString("{", ",", "}")
-    // load[name] = [[stealPct, busyPct] per pass], aligned with passes[name]
-    val ls = loads.toMap.map { case (k, vs) =>
-      jstr(k) + ":" + vs.map { case (s, b) =>
-        "[" + String.format(java.util.Locale.ROOT, "%.1f", Double.box(s)) +
-          "," + String.format(java.util.Locale.ROOT, "%.1f", Double.box(b)) + "]"
-      }.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // quiet[name] = validity flag per pass (aligned with passes[name]);
-    // noisy = queries whose recorded min had NO quiet pass to stand on —
-    // like-for-like cross-round ratios should drop these rows
-    val vs = valid.toMap.map { case (k, flags) =>
-      jstr(k) + ":" + flags.map(b => if (b) "true" else "false")
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val noisyArr = neverQuiet.sorted.map(jstr).mkString("[", ",", "]")
-    // cpu[name] = process-CPU seconds per pass (aligned with passes);
-    // host_variance = queries whose quiet walls still span > 2x at flat
-    // CPU after the re-measure pass (host-attributed, min still sound)
-    val cs = cpuSecs.toMap.map { case (k, vals) =>
-      jstr(k) + ":" + vals
-        .map(v => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)))
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val hostVarArr = hostVar.sorted.map(jstr).mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    def f3g(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // Cross-round comparator: per-query ratio vs the previous record,
-    // with a mechanical cause tag on every >1.15x row so a regression
-    // can never again sit unexplained in the artifact. Tag ladder, most
-    // evidence-backed first:
-    //  - "ambient-flagged": either round's record flagged the query
-    //    (noisy / host_variance) — its min has no quiet footing;
-    //  - "same-shape": BOTH rounds carry work-shape metrics and they
-    //    match (task count within 2%, shuffle volume within 5%) — the
-    //    engine did the identical work, so the wall moved with the
-    //    machine, not the plan (r13 finding: this host's speed drifts
-    //    ~1.3x board-wide between rounds at flat busy%/steal%, and
-    //    contention inflates process-CPU up to 3x on identical work —
-    //    which the CPU heuristic below would misread as work-increase);
-    //  - "work-increase": shape metrics present and materially
-    //    different — the query provably did more work (code or plan
-    //    change); without shape metrics, the CPU heuristic's best
-    //    guess when CPU grew with the wall;
-    //  - "board-shift": the whole board moved (median ratio > 1.10)
-    //    and this row moved WITH it (within 15% of the median) — a
-    //    code change cannot slow 250 unrelated queries uniformly, a
-    //    host-speed change can;
-    //  - "ambient": wall grew but the min-pass process-CPU did not
-    //    track it (the host descheduled us — same work, slower clock);
-    //  - "contention": this row's CPU inflation is within 1.5x of the
-    //    BOARD's CPU inflation (cpu_sum_ratio) while the board itself
-    //    inflated (> 1.10) — cycles-per-work rose machine-wide
-    //    (neighbor memory-bandwidth pressure), this row included.
-    //    Contention sensitivity varies per query (r13: shuffle- and
-    //    micro-batch-heavy queries inflated 2-4x against a 1.6x board;
-    //    a streaming query's scheduler overhead scales with WALL, so
-    //    host slowness compounds its CPU), hence the slack;
-    //  - "unattributed": no comparable CPU sample in one of the rounds.
-    val vsPrev = prevRec.map { pr =>
-      def bestNowIdx(n: String): Option[Int] = {
-        val ws = passes(n); val vq = valid(n)
-        ws.zipWithIndex.zip(vq)
-          .collect { case ((w, i), true) => (w, i) } match {
-          case Nil => ws.zipWithIndex.sortBy(_._1).headOption.map(_._2)
-          case quiet => Some(quiet.minBy(_._1)._2)
+
+  /** The full record. Per-query arrays hold every successful pass in run
+    * order, so the recorded min is self-diagnosing (a 129 s min whose
+    * twin pass is 7 s is a steal artifact); a query with no successful
+    * run is left out of them and lives in `errors`.
+    */
+  def record(runs: Map[String, Seq[Run]], sf: String,
+             prev: Option[Prev]): JObject = {
+    val names = runs.keys.toSeq.sorted
+    val ok = names.map(n => n -> runs(n).filter(_.ok)).filter(_._2.nonEmpty)
+    val bestRun = ok.flatMap { case (n, rs) => best(rs).map(n -> _) }.toMap
+    val noisyQs = names.filter(n => noisy(runs(n)))
+    val hostVar = names.filter(n => hostVariance(runs(n)))
+    def perQ(f: Run => JValue): JObject =
+      JObject(ok.map { case (n, rs) => n -> JArray(rs.map(f).toList) }: _*)
+    val fields = List[(String, JValue)](
+      "metric" -> JString("total"),
+      "value" -> num(bestRun.values.map(_.wallS).sum),
+      "unit" -> JString("sec"),
+      "queries" -> JObject(ok.map { case (n, _) => n -> num(bestRun(n).wallS) }: _*),
+      // median next to the min: far above it means steal hit most passes
+      "medians" -> JObject(ok.map { case (n, rs) => n -> num(median(rs.map(_.wallS))) }: _*),
+      "passes" -> perQ(r => num(r.wallS)),
+      "load" -> perQ(r => JArray(List(num(r.stealPct, 1), num(r.busyPct, 1)))),
+      // wall up with CPU flat = the host descheduled us; both up = more work
+      "cpu" -> perQ(r => num(r.cpuS)),
+      // identical task counts and byte volumes across rounds prove the
+      // work was the same on a host whose speed drifts round to round
+      "tasks" -> perQ(r => JLong(r.tasks)),
+      "shuffle_bytes" -> perQ(r => JLong(r.shuffleBytes)),
+      "input_bytes" -> perQ(r => JLong(r.inputBytes)),
+      "quiet" -> perQ(r => JBool(r.quiet)),
+      "noisy" -> strs(noisyQs),
+      "host_variance" -> strs(hostVar),
+      "quiet_steal_pct" -> num(RunLedger.QuietStealPct, 1),
+      "errors" -> JObject(names.flatMap(n =>
+        runs(n).flatMap(_.error).lastOption.map(n -> JString(_))): _*),
+      "sf" -> JString(sf))
+    // vs_prev last: it survives a bounded tail of the stdout line
+    JObject(fields ++ prev.map(p =>
+      "vs_prev" -> vsPrev(p, bestRun, (noisyQs ++ hostVar).toSet)))
+  }
+
+  /** Cross-round comparator: per-query ratio vs the previous record,
+    * with a mechanical cause tag on every >1.15x row. Tag ladder, most
+    * evidence-backed first:
+    *  - "ambient-flagged": either round flagged the query (noisy /
+    *    host_variance) — its min has no quiet footing;
+    *  - "same-shape": both rounds carry work shape and it matches (tasks
+    *    within 2%, shuffle volume within 5%) — the wall moved with the
+    *    machine, not the plan (contention inflates process CPU up to 3x
+    *    on identical work, which the CPU rules below would misread);
+    *  - "work-increase": work shape known and materially different;
+    *  - "board-shift": the board moved (median ratio > 1.10) and this
+    *    row moved with it (within 15% of the median);
+    *  - "ambient": the min pass's CPU covered less than half the wall
+    *    growth (descheduled — same work, slower clock);
+    *  - "contention": this row's CPU inflation is within 1.5x of the
+    *    board's (`cpu_sum_ratio` > 1.10) — cycles per work rose
+    *    machine-wide, this row included;
+    *  - "work-increase" when CPU grew with the wall; "unattributed"
+    *    without a comparable CPU sample.
+    */
+  private def vsPrev(pr: Prev, now: Map[String, Run],
+                     flagged: Set[String]): JObject = {
+    val common = now.keySet.intersect(pr.wall.keySet)
+      .filter(pr.wall(_) > 0).toSeq.sorted
+    val ratios = common.map(n => n -> now(n).wallS / pr.wall(n))
+    val med = median(ratios.map(_._2))
+    def cpuRatio(n: String): Option[Double] = for {
+      b <- pr.cpu.get(n) if b > 0 && now(n).cpuS >= 0
+    } yield now(n).cpuS / b
+    val cpuPairs = common.flatMap(n => cpuRatio(n).map(_ => (now(n).cpuS, pr.cpu(n))))
+    val cpuSumRatio =
+      if (cpuPairs.isEmpty) None
+      else Some(cpuPairs.map(_._1).sum / cpuPairs.map(_._2).sum)
+    val regs = ratios.filter(_._2 > 1.15).sortBy(-_._2).map { case (n, r) =>
+      val cr = cpuRatio(n)
+      val tasksRatio = pr.tasks.get(n).filter(_ > 0).map(now(n).tasks / _)
+      val shuf = pr.shuffle.get(n).map(b => (now(n).shuffleBytes.toDouble, b))
+      val shapeKnown = tasksRatio.nonEmpty && shuf.nonEmpty
+      val sameShape = tasksRatio.exists(t => t >= 0.98 && t <= 1.02) &&
+        shuf.exists { case (a, b) =>
+          // sub-MB shuffles jitter with partitioning metadata: equal
+          (a < 1e6 && b < 1e6) || (b > 0 && a / b >= 0.95 && a / b <= 1.05)
         }
-      }
-      def cpuOfBestNow(n: String): Option[Double] =
-        bestNowIdx(n).flatMap(cpuSecs(n).lift).filter(_ >= 0)
-      def taskOfBestNow(n: String): Option[Long] =
-        bestNowIdx(n).flatMap(taskCounts(n).lift)
-      def shufOfBestNow(n: String): Option[Long] =
-        bestNowIdx(n).flatMap(shufBytes(n).lift)
-      val common = results.keySet.intersect(pr.q.keySet)
-        .filter(n => pr.q(n) > 0).toSeq.sorted
-      val ratios = common.map(n => n -> results(n) / pr.q(n))
-      val med = median(ratios.map(_._2).toList)
-      val newQs = (results.keySet -- pr.q.keySet).toSeq.sorted
-      // board-level host-efficiency signal: total min-pass process-CPU
-      // across the queries both rounds can price — same work at >1
-      // means the machine burned more cycles per unit of work
-      val cpuPair = common.flatMap(n =>
-        for { a <- cpuOfBestNow(n); b <- pr.cpuBest.get(n) if b > 0 }
-          yield (a, b))
-      val cpuSumRatio =
-        if (cpuPair.isEmpty) None
-        else Some(cpuPair.map(_._1).sum / cpuPair.map(_._2).sum)
-      val regs = ratios.filter(_._2 > 1.15).sortBy(-_._2).map {
-        case (n, r) =>
-          val cpuRatio = for {
-            a <- cpuOfBestNow(n); b <- pr.cpuBest.get(n) if b > 0
-          } yield a / b
-          val tasksRatio = for {
-            a <- taskOfBestNow(n); b <- pr.tasksBest.get(n) if b > 0
-          } yield a / b
-          val shufPair = for {
-            a <- shufOfBestNow(n); b <- pr.shufBest.get(n)
-          } yield (a.toDouble, b)
-          val shapeKnown = tasksRatio.nonEmpty && shufPair.nonEmpty
-          val sameShape =
-            tasksRatio.exists(tr => tr >= 0.98 && tr <= 1.02) &&
-              shufPair.exists { case (a, b) =>
-                // sub-MB shuffles on both sides count as equal: their
-                // byte counts jitter with partitioning metadata
-                (a < 1e6 && b < 1e6) ||
-                  (b > 0 && a / b >= 0.95 && a / b <= 1.05)
-              }
-          val normRatio = if (med > 0) r / med else r
-          val cause =
-            if (neverQuiet.contains(n) || hostVar.contains(n) ||
-              pr.flagged(n)) "ambient-flagged"
-            else if (shapeKnown && sameShape) "same-shape"
-            else if (shapeKnown) "work-increase"
-            else if (med > 1.10 && normRatio <= 1.15) "board-shift"
-            else cpuRatio match {
-              // wall moved r-1 but CPU covered less than half of it
-              case Some(cr) if cr - 1.0 <= (r - 1.0) / 2 => "ambient"
-              case Some(cr) if cpuSumRatio.exists(b =>
-                b > 1.10 && cr <= b * 1.5) => "contention"
-              case Some(_) => "work-increase"
-              case None => "unattributed"
-            }
-          jstr(n) + s""":{"prev":${f3g(pr.q(n))},"now":${f3g(results(n))}""" +
-            s""","ratio":${f3g(r)},"norm_ratio":${f3g(normRatio)}""" +
-            cpuRatio.map(cr => s""","cpu_ratio":${f3g(cr)}""").getOrElse("") +
-            tasksRatio.map(tr => s""","tasks_ratio":${f3g(tr)}""")
-              .getOrElse("") +
-            shufPair.map { case (a, b) =>
-              s""","shuffle_ratio":${f3g(if (b > 0) a / b else -1.0)}"""
-            }.getOrElse("") +
-            s""","cause":${jstr(cause)}}"""
-      }.mkString("{", ",", "}")
-      s""""vs_prev":{"record":${jstr(pr.path)},"compared":${common.size}""" +
-        s""","median_ratio":${f3g(med)}""" +
-        cpuSumRatio.map(c => s""","cpu_sum_ratio":${f3g(c)}""")
-          .getOrElse("") +
-        s""","new_queries":${newQs.map(jstr).mkString("[", ",", "]")}""" +
-        s""","regressions_gt_1.15":$regs}"""
+      val normRatio = if (med > 0) r / med else r
+      val cause =
+        if (flagged(n) || pr.flagged(n)) "ambient-flagged"
+        else if (shapeKnown && sameShape) "same-shape"
+        else if (shapeKnown) "work-increase"
+        else if (med > 1.10 && normRatio <= 1.15) "board-shift"
+        else cr match {
+          case Some(c) if c - 1.0 <= (r - 1.0) / 2 => "ambient"
+          case Some(c) if cpuSumRatio.exists(b => b > 1.10 && c <= b * 1.5) =>
+            "contention"
+          case Some(_) => "work-increase"
+          case None => "unattributed"
+        }
+      n -> JObject(List[(String, JValue)](
+        "prev" -> num(pr.wall(n)), "now" -> num(now(n).wallS),
+        "ratio" -> num(r), "norm_ratio" -> num(normRatio)) ++
+        cr.map("cpu_ratio" -> num(_)) ++
+        tasksRatio.map("tasks_ratio" -> num(_)) ++
+        shuf.map { case (a, b) => "shuffle_ratio" -> num(if (b > 0) a / b else -1.0) } ++
+        List("cause" -> JString(cause)))
     }
-    val vsPrevFull = vsPrev.map("," + _).getOrElse("")
-    // work-shape arrays (aligned with passes): the cross-round
-    // plan-identity evidence for future rounds' vs_prev cause tags
-    def longMap(m: scala.collection.Map[String, List[Long]]): String =
-      m.map { case (k, vals) =>
-        jstr(k) + ":" + vals.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    val tks = longMap(taskCounts)
-    val sbs = longMap(shufBytes)
-    val ibs = longMap(inBytes)
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"medians":$meds,"passes":$ps,"load":$ls,"cpu":$cs,"tasks":$tks,"shuffle_bytes":$sbs,"input_bytes":$ibs,"quiet":$vs,"noisy":$noisyArr,"host_variance":$hostVarArr,"quiet_steal_pct":$quietSteal,"errors":$errs$vsPrevFull,"sf":"$sfDir"}"""
-    // Persist the FULL record (per-pass timings, medians) to a file first:
-    // the driver keeps only a bounded TAIL of stdout, and r4/r5 both lost
-    // the artifact because the full JSON line (~12 KB at 88 queries)
-    // started before the tail window — parsed:null with the line's head
-    // cut off. The file is the durable record.
-    val out = new java.io.PrintWriter(
-      new java.io.File(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.out.json")),
-      "UTF-8")
-    try out.println(json) finally out.close()
-    // stdout gets a COMPACT line (no passes/medians, 3-decimal values —
-    // ~2.5 KB) so it fits inside the driver's tail window whole.
-    def f3(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qsShort = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + f3(v) }
-      .mkString("{", ",", "}")
-    // vs_prev rides the compact line too (placed LAST so the driver's
-    // bounded stdout tail keeps it even when the line's head is cut)
-    println(
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qsShort,"noisy":$noisyArr,"errors":$errs,"sf":"$sfDir"$vsPrevFull}""")
+    JObject(List[(String, JValue)](
+      "record" -> JString(pr.path), "compared" -> JLong(common.size),
+      "median_ratio" -> num(med)) ++
+      cpuSumRatio.map("cpu_sum_ratio" -> num(_)) ++
+      List("new_queries" -> strs((now.keySet -- pr.wall.keySet).toSeq.sorted),
+        "regressions_gt_1.15" -> JObject(regs: _*)))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.out.json")
+    // read at START: by default the previous round's committed record,
+    // which this run overwrites at the end
+    val prevRec = prev(sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", out))
+    val spark = Session.local("graft-bench")
+    // JIT/codegen warmup so the first measured query isn't charged for it
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val ledger = new RunLedger(spark, Some(out))
+    // Dev bisection hook: comma-separated name prefixes to run (default all)
+    val filter = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").toSeq).getOrElse(Seq(""))
+    val queries = SparkEntry.queries.filter { case (n, _) => filter.exists(n.startsWith) }
+    def run(n: String, pass: String): Run =
+      ledger.measure(n, pass)(queries(n)(spark, sfDir))
+    var runs: Map[String, Seq[Run]] = RunLedger.sweep(queries.keys.toSeq.sorted)(run)
+    // one re-measure pass tightens a host-variance suspect's min on a
+    // now-quieter host; what still spans lands in "host_variance"
+    val suspects = runs.keys.toSeq.sorted.filter(n => hostVariance(runs(n)))
+    if (suspects.nonEmpty) {
+      System.err.println(s"[bench] host-variance re-measure: ${suspects.size} " +
+        "queries with quiet wall span > 2x at flat CPU")
+      suspects.foreach(n => runs += n -> (runs(n) :+ run(n, "var1")))
+    }
+    val rec = record(runs, sfDir, prevRec)
+    // the file is the durable record; stdout gets a compact line that
+    // fits a bounded log tail whole
+    RunLedger.write(out, rec)
+    val short = Set("metric", "value", "unit", "queries", "noisy", "errors",
+      "sf", "vs_prev")
+    println(RunLedger.line(JObject(rec.obj.filter(f => short(f._1)))))
     spark.stop()
   }
 }

@@ -1,11 +1,11 @@
 package graft
 
-/** /proc/stat CPU-jiffy snapshots — the shared noise-gating primitive
-  * behind Bench and ScaleSmoke. This VM suffers bursty hypervisor CPU
-  * steal (identical queries measured 10-30x apart back-to-back), so
-  * every recorded timing carries a [steal%, busy%] fingerprint and the
-  * harnesses discard passes whose steal exceeds a quiet bound: min-of-
-  * passes only protects a record when at least one pass ran quiet.
+/** /proc/stat CPU-jiffy and process-CPU snapshots — the noise-gating
+  * primitive that [[RunLedger.measure]] (and the mobility benchmark)
+  * takes around every run. This VM suffers bursty hypervisor CPU steal
+  * (identical queries measured 10-30x apart back-to-back), so every
+  * recorded timing carries a [steal%, busy%] fingerprint and the ledger's
+  * pass policy prefers passes whose steal stays under a quiet bound.
   */
 object HostLoad {
 

@@ -1,9 +1,11 @@
 package graft
 
+import graft.RunLedger.num
 import graft.functions.TextFunctions
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s._
 
 /** End-to-end curation macro-run (dev main) — the q78 pipeline at sf1+
   * scale with per-stage timings and row counts, the way a production
@@ -45,12 +47,6 @@ import org.apache.spark.sql.functions._
   */
 object Macro {
 
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val spark = Session.local("graft-macro")
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -60,6 +56,8 @@ object Macro {
     val nCopies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     ScaleSmoke.ensureFixture(spark, src, dst, nCopies)
     val work = sys.env.getOrElse("SPARK_GRAFT_MACRO_DIR", "/tmp/graft_macro")
+    val record = sys.env.getOrElse("SPARK_GRAFT_MACRO_OUT", s"MACRO_sf$nCopies.json")
+    val ledger = new RunLedger(spark, Some(record))
 
     // per-stage record for the CURRENT pipeline pass: name ->
     // (sec, rows_out, skipped)
@@ -92,10 +90,11 @@ object Macro {
         // write AND read-back count inside the timing: the boundary's
         // cost is both sides of its IO (ADVICE r11 — the count was
         // previously untimed, understating every stage)
-        val (rows, sec) = timed {
+        var rows = 0L
+        val sec = ledger.measure(name, if (resume) "restart" else "staged") {
           frame.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path).count()
-        }
+          rows = spark.read.parquet(path).count()
+        }.checked.wallS
         // marker AFTER the commit + count: a crash anywhere above
         // leaves no marker and the stage recomputes on restart
         mfs.create(mk, true).close()
@@ -159,7 +158,10 @@ object Macro {
         .delete(p, true): Unit
     }
     stages.clear()
-    val (restarted, restartSec) = timed { pipeline(resume = true) }
+    var restarted: DataFrame = null
+    val restartSec = ledger.measure("restart", "restart") {
+      restarted = pipeline(resume = true)
+    }.checked.wallS
     val restartHash = Bench.force(restarted)
     val restartStages = stages.toSeq
 
@@ -169,47 +171,39 @@ object Macro {
     // quality frame is persisted: it feeds four plan branches (dedup
     // agg, semi-join left side, decontam grams, token counting) and
     // Spark does not share common subplans across joins
-    CacheScope.releaseAll()
-    val (_, fusedSec) = timed {
+    val fusedSec = ledger.measure("fused", "fused") {
       val q = CacheScope.track(quality(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      Bench.force(select_(decontam(dedup(q))))
-    }
+      select_(decontam(dedup(q)))
+    }.checked.wallS
 
     val stageSum = fullStages.map(_._2._1).sum
-    def f3(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val stageJson = fullStages.map { case (n, (s, r, _)) =>
-      s""""$n":{"sec":${f3(s)},"rows_out":$r}"""
-    }.mkString("{", ",", "}")
+    val stageJson = JObject(fullStages.map { case (n, (s, r, _)) =>
+      n -> JObject("sec" -> num(s), "rows_out" -> JLong(r))
+    }: _*)
     // stages absent from the restart record were never even CONSULTED:
     // stage() takes its upstream by-name, so a marker hit short-circuits
     // the whole chain above it (quality is subsumed by dedup's marker)
     val restartByName = restartStages.toMap
-    val restartJson = fullStages.map { case (n, (_, fullRows, _)) =>
-      restartByName.get(n) match {
-        case Some((s, r, skipped)) =>
-          s""""$n":{"sec":${f3(s)},"rows_out":$r,""" +
-            s""""action":"${if (skipped) "skipped" else "recomputed"}"}"""
-        case None =>
-          s""""$n":{"sec":0.000,"rows_out":$fullRows,""" +
-            s""""action":"subsumed_by_downstream_marker"}"""
-      }
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"macro_curation","copies":$nCopies,"stages":$stageJson,""" +
-        s""""stage_total_sec":${f3(stageSum)},"fused_sec":${f3(fusedSec)},""" +
-        s""""timing":"stage sec = write + read-back count; fixture warmed before staged run",""" +
-        s""""restart":{"killed_after":"dedup","stages":$restartJson,""" +
-        s""""restart_total_sec":${f3(restartSec)},""" +
-        s""""final_hash":$fullHash,"restart_hash":$restartHash,""" +
-        s""""hash_match":${fullHash == restartHash}},""" +
-        s""""src":"$src"}"""
-    println(json)
-    val out = new java.io.PrintWriter(
-      new java.io.File(sys.env.getOrElse("SPARK_GRAFT_MACRO_OUT",
-        s"MACRO_sf$nCopies.json")), "UTF-8")
-    try out.println(json) finally out.close()
+    val restartJson = JObject(fullStages.map { case (n, (_, fullRows, _)) =>
+      n -> (restartByName.get(n) match {
+        case Some((s, r, skipped)) => JObject("sec" -> num(s),
+          "rows_out" -> JLong(r),
+          "action" -> JString(if (skipped) "skipped" else "recomputed"))
+        case None => JObject("sec" -> num(0.0), "rows_out" -> JLong(fullRows),
+          "action" -> JString("subsumed_by_downstream_marker"))
+      })
+    }: _*)
+    println(RunLedger.write(record, JObject(
+      "metric" -> JString("macro_curation"), "copies" -> JLong(nCopies),
+      "stages" -> stageJson, "stage_total_sec" -> num(stageSum),
+      "fused_sec" -> num(fusedSec),
+      "timing" -> JString("stage sec = write + read-back count; fixture warmed before staged run"),
+      "restart" -> JObject("killed_after" -> JString("dedup"),
+        "stages" -> restartJson, "restart_total_sec" -> num(restartSec),
+        "final_hash" -> JLong(fullHash), "restart_hash" -> JLong(restartHash),
+        "hash_match" -> JBool(fullHash == restartHash)),
+      "src" -> JString(src))))
     spark.stop()
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.RunLedger.{num, strs}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s._
 
 /** sf1 scale smoke for the iterative / bucketed operators (dev main).
   *
@@ -207,149 +209,93 @@ object ScaleSmoke {
 
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-    // knobs for bigger sweeps: copy count (10 = sf1, 100 = sf10), pass
-    // count, and a target-prefix filter (mirrors Bench's BENCH_ONLY)
+    // knobs for bigger sweeps: copy count (10 = sf1, 100 = sf10) and a
+    // target-prefix filter (mirrors Bench's BENCH_ONLY)
     val nCopies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val nPasses = sys.env.getOrElse("SPARK_GRAFT_SCALE_PASSES", "3").toInt
     val targets = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(f => defaultTargets.filter(t => f.split(",").exists(t.startsWith)))
       .getOrElse(defaultTargets)
     ensureFixture(spark, src, dst, nCopies)
 
-    // plan-shape fingerprint: DISTINCT shuffle exchanges in the final
-    // adaptive EXECUTED plan tree (GraftPlanAudit.shuffleCount walks
-    // AdaptiveSparkPlanExec.finalPhysicalPlan post-action, descends query
-    // stages and cached relations once each, identity-dedups reuse) —
-    // captured from the SAME df the timed pass runs, because
-    // re-constructing the query just to fingerprint it would re-execute
-    // the iterative queries (their loops run during construction).
-    // "no new plan shapes at 10x" = identical counts at both scales (a
-    // broadcast flipping to sort-merge, or an extra exchange appearing,
-    // shows up here). The r12 string-grep form counted "Exchange" LINES
-    // in the plan rendering, which inflated 52→87 on q17/q18 purely from
-    // cached subplans re-printing nested plans at every reference site —
-    // the tree walk is immune (NOTES_r12 caveat; r12 verdict ask #1).
-    // Limitation: for the iterative CC queries this fingerprints the
-    // final label-stitching plan, not the per-round loop plans —
-    // round-internal strategy flips surface in the timing ratio, not
-    // this count.
-    val planEx =
-      scala.collection.mutable.Map.empty[(String, String), Int]
     // streaming smoke mode: noop sink (no driver-side memory-sink
-    // materialization of x100-sized emissions) + per-run state-store
-    // peaks from StreamSessions.lastRunMetrics — the bounded-state
-    // evidence rows for SCALE_sf10 (r9 verdict ask #1)
+    // materialization of x100-sized emissions); the ledger records every
+    // streaming run's state-store peak — the bounded-state evidence rows
+    // for SCALE_sf10 (r9 verdict ask #1)
     if (sys.env.get("SPARK_GRAFT_STREAM_NOOP").contains("1")) {
       spark.conf.set("spark.graft.streamSinkNoop", "true")
       // pin the replay structure so both scales evict at the same 16
       // watermark advances — state-peak fractions stay comparable
       spark.conf.set("spark.graft.streamChunks", "16")
     }
-    val streamStats = scala.collection.mutable
-      .Map.empty[(String, String), graft.streaming.StreamSessions.StreamRunMetrics]
-    // quiet-pass gate (same policy as Bench): a pass counts toward the
-    // recorded min only when its CPU-steal stayed at or under the bound;
-    // (name, dir) pairs with no quiet pass get bounded re-runs, then
-    // fall back to min-of-all and land in "noisy". Without this, one
-    // steal burst on the sf0.1 side fabricates a sub-1 "ratio" (or an
-    // inflated one on the big side) that reads as a plan change.
-    val quietSteal =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_QUIET_STEAL", "1.0").toDouble
-    def time(name: String, dir: String): (Double, Double) = {
-      CacheScope.releaseAll()
-      graft.streaming.StreamSessions.lastRunMetrics.clear()
-      val ticks0 = HostLoad.cpuTicks()
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, dir)
-      Bench.force(df)
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (steal, _) = HostLoad.loadBetween(ticks0, HostLoad.cpuTicks())
-      planEx((name, dir)) =
-        org.apache.spark.sql.execution.GraftPlanAudit.shuffleCount(df)
-      graft.streaming.StreamSessions.lastRunMetrics.headOption
-        .foreach { case (_, m) => streamStats((name, dir)) = m }
-      (dt, steal)
+    val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_sf1.json")
+    val ledger = new RunLedger(spark, Some(out))
+    def side(dir: String): String = dir.split('/').last
+    // The shared pass policy, interleaved across queries AND scales: every
+    // pass counts toward the min, quiet passes first. Without the quiet
+    // gate one steal burst on the sf0.1 side fabricates a sub-1 "ratio"
+    // (or an inflated one on the big side) that reads as a plan change.
+    //
+    // Plan-shape fingerprint: the ledger counts DISTINCT shuffle exchanges
+    // in the final adaptive EXECUTED plan of the SAME df the pass timed
+    // (re-constructing a query to fingerprint it would re-run the
+    // iterative queries' loops). "No new plan shapes at 10x" = identical
+    // counts at both scales. For the iterative CC queries this is the
+    // final label-stitching plan, not the per-round loop plans.
+    val runs = RunLedger.sweep(for (n <- targets; dir <- Seq(src, dst))
+      yield (n, dir)) { case ((n, dir), pass) =>
+      ledger.measure(s"$n@${side(dir)}", pass)(SparkEntry.queries(n)(spark, dir))
     }
-    // pass 1 warms, pass 2+ measure (min over QUIET passes), interleaved
-    // across queries so a steal burst hits different queries each pass
-    val best = scala.collection.mutable.Map.empty[(String, String), Double]
-    val allMin = scala.collection.mutable.Map.empty[(String, String), Double]
-    def runOne(pass: String, name: String, dir: String): Unit = {
-      val (dt, steal) = time(name, dir)
-      val quiet = steal < 0 || steal <= quietSteal
-      System.err.println(
-        f"[scale] pass $pass $name ${dir.split('/').last} $dt%.2f s " +
-          f"(steal $steal%.1f%%${if (quiet) "" else " NOISY"})")
-      val k = (name, dir)
-      if (dt < allMin.getOrElse(k, Double.MaxValue)) allMin(k) = dt
-      if (quiet && dt < best.getOrElse(k, Double.MaxValue)) best(k) = dt
-    }
-    for (pass <- 1 to nPasses; name <- targets; dir <- Seq(src, dst))
-      runOne(pass.toString, name, dir)
-    val retries = sys.env.getOrElse("SPARK_GRAFT_SCALE_RETRIES", "2").toInt
-    for (r <- 1 to retries) {
-      val noisy = (for (name <- targets; dir <- Seq(src, dst))
-        yield (name, dir)).filter(k => !best.contains(k))
-      if (noisy.nonEmpty) {
-        System.err.println(
-          s"[scale] retry round $r: ${noisy.size} runs with no quiet pass")
-        noisy.foreach { case (n, dir) => runOne(s"retry$r", n, dir) }
-      }
-    }
-    val neverQuiet = (for (name <- targets; dir <- Seq(src, dst))
-      yield (name, dir)).filterNot(best.contains)
-    neverQuiet.foreach(k => best(k) = allMin(k))
-    def f3(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val best = runs.flatMap { case (k, rs) => RunLedger.best(rs).map(k -> _) }
+    // a target that failed at either scale has no ratio: its row is left
+    // out and its cause chain lands in "errors"
+    val measured = targets.filter(n => best.contains((n, src)) && best.contains((n, dst)))
     // super-linearity alarm: rows grow x nCopies, so any time ratio past
     // that is growing FASTER than the data — the q216 failure mode (x764
     // at x100 sat silently in the record until a human read it). The
     // 1.2 slack absorbs constant-overhead shifts between scales; every
     // flagged query must be explained or fixed, never shipped silent.
     def isSuper(n: String): Boolean =
-      best((n, dst)) / best((n, src)) > nCopies * 1.2
+      best((n, dst)).wallS / best((n, src)).wallS > nCopies * 1.2
     // state-peak twin of the wall alarm (the q166 failure mode: state
-    // grew x139 under x100 input while the wall-only flag stayed green):
-    // a streaming gate whose state peak outgrows the input multiplier is
-    // storing MORE than proportionally to the data — never ship silent.
+    // grew x139 under x100 input while the wall-only flag stayed green)
     def isSuperState(n: String): Boolean =
-      (streamStats.get((n, src)), streamStats.get((n, dst))) match {
-        case (Some(ma), Some(mb)) if ma.statePeakRows > 0 =>
-          mb.statePeakRows.toDouble / ma.statePeakRows > nCopies * 1.2
+      (best((n, src)).stream, best((n, dst)).stream) match {
+        case (Some(a), Some(b)) if a.statePeakRows > 0 =>
+          b.statePeakRows.toDouble / a.statePeakRows > nCopies * 1.2
         case _ => false
       }
-    val parts = targets.map { n =>
-      val a = best((n, src)); val b = best((n, dst))
-      val (ea, eb) = (planEx((n, src)), planEx((n, dst)))
-      // streaming rows carry the bounded-state evidence: peak state rows
-      // and input rows at BOTH scales — acceptance is peak ~ watermark
-      // window (scale-invariant or sub-linear), not ~ input
-      val stream = (streamStats.get((n, src)), streamStats.get((n, dst))) match {
-        case (Some(ma), Some(mb)) =>
-          s""","state_peak_src":${ma.statePeakRows},"input_rows_src":${ma.inputRows}""" +
-            s""","state_peak_dst":${mb.statePeakRows},"input_rows_dst":${mb.inputRows}""" +
-            s""","batches_src":${ma.batches},"batches_dst":${mb.batches}""" +
-            s""","superlinear_state":${isSuperState(n)}"""
-        case _ => ""
+    val rows = measured.map { n =>
+      val (a, b) = (best((n, src)), best((n, dst)))
+      // streaming rows carry the bounded-state evidence at BOTH scales —
+      // acceptance is peak ~ watermark window, not ~ input
+      val stream = (a.stream, b.stream) match {
+        case (Some(ma), Some(mb)) => List[(String, JValue)](
+          "state_peak_src" -> JLong(ma.statePeakRows),
+          "input_rows_src" -> JLong(ma.inputRows),
+          "state_peak_dst" -> JLong(mb.statePeakRows),
+          "input_rows_dst" -> JLong(mb.inputRows),
+          "batches_src" -> JLong(ma.batches), "batches_dst" -> JLong(mb.batches),
+          "superlinear_state" -> JBool(isSuperState(n)))
+        case _ => Nil
       }
-      s""""$n":{"sf0.1":${f3(a)},"sf1":${f3(b)},"ratio":${f3(b / a)}""" +
-        s""","exchanges_sf0.1":$ea,"exchanges_sf1":$eb""" +
-        s""","superlinear":${isSuper(n)}$stream}"""
+      n -> JObject(List[(String, JValue)](
+        "sf0.1" -> num(a.wallS), "sf1" -> num(b.wallS),
+        "ratio" -> num(b.wallS / a.wallS),
+        "exchanges_sf0.1" -> JLong(a.exchanges),
+        "exchanges_sf1" -> JLong(b.exchanges),
+        "superlinear" -> JBool(isSuper(n))) ++ stream)
     }
-    val noisyArr = neverQuiet.sorted
-      .map { case (n, dir) => s""""$n@${dir.split('/').last}"""" }
-      .mkString("[", ",", "]")
-    val superArr = (targets.filter(isSuper) ++
-      targets.filter(isSuperState).map(n => s"$n#state")).distinct
-      .map(n => s""""$n"""").mkString("[", ",", "]")
-    val json = parts.mkString(
-      s"""{"metric":"scale_smoke","copies":$nCopies,"noisy":$noisyArr,"superlinear":$superArr,"quiet_steal_pct":$quietSteal,"queries":{""",
-      ",", "}}")
-    println(json)
-    val out = new java.io.PrintWriter(
-      new java.io.File(sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT",
-        "SCALE_sf1.json")), "UTF-8")
-    try out.println(json) finally out.close()
+    val keys = runs.keys.toSeq.sortBy { case (n, d) => (n, side(d)) }
+    def label(k: (String, String)): String = s"${k._1}@${side(k._2)}"
+    println(RunLedger.write(out, JObject(
+      "metric" -> JString("scale_smoke"), "copies" -> JLong(nCopies),
+      "noisy" -> strs(keys.filter(k => RunLedger.noisy(runs(k))).map(label)),
+      "superlinear" -> strs((measured.filter(isSuper) ++
+        measured.filter(isSuperState).map(n => s"$n#state")).distinct),
+      "quiet_steal_pct" -> num(RunLedger.QuietStealPct, 1),
+      "errors" -> JObject(keys.flatMap(k => runs(k).flatMap(_.error)
+        .lastOption.map(label(k) -> JString(_))): _*),
+      "queries" -> JObject(rows: _*))))
     spark.stop()
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
+import graft.RunLedger.{StreamStats, num}
 import graft.streaming.{StreamIngestGate, StreamMatView, StreamSessions, StreamingStopDetect}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
 
 /** Time-EXTENDED streaming scale smoke (dev main) — the bounded-state
   * proof [[ScaleSmoke]]'s densified fixture cannot give.
@@ -50,9 +52,12 @@ import org.apache.spark.sql.functions._
   */
 object ScaleTime {
 
+  /** `run` returns the stream figures of a fold target (None: the
+    * ledger's progress-event figures stand).
+    */
   private final case class Target(
     name: String, form: String, bound: String, baseChunks: Int,
-    run: (SparkSession, String, Int, String) => Unit)
+    run: (SparkSession, String, Int, String) => Option[StreamStats])
 
   /** Events normalized to (user_id, event_type, ts timestamp, value
     * cents) — the shared input shape for the bounded variants.
@@ -77,18 +82,16 @@ object ScaleTime {
   }
 
   private def gateRunner(name: String)
-  : (SparkSession, String, Int, String) => Unit =
-    (s, d, _, _) => Bench.force(SparkEntry.queries(name)(s, d))
+  : (SparkSession, String, Int, String) => Option[StreamStats] =
+    (s, d, _, _) => { Bench.force(SparkEntry.queries(name)(s, d)); None }
 
-  /** Push mat-view snapshot metrics into the shared metrics map: the
-    * fold has no state store, so `statePeakRows` carries the FINAL
-    * snapshot's row count (monotone fold → final = peak).
+  /** Mat-view snapshot figures: the fold has no state store, so
+    * `statePeakRows` carries the FINAL snapshot's row count (monotone
+    * fold → final = peak).
     */
-  private def recordFold(tag: String, state: DataFrame, inputRows: Long,
-                         batches: Int): Unit =
-    StreamSessions.lastRunMetrics(tag) = StreamSessions.StreamRunMetrics(
-      statePeakRows = state.count(), inputRows = inputRows,
-      batches = batches)
+  private def foldStats(state: DataFrame, inputRows: Long,
+                        batches: Int): Option[StreamStats] =
+    Some(StreamStats(state.count(), inputRows, batches))
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -118,7 +121,8 @@ object ScaleTime {
           eventsTs(s, d).select("user_id", "ts", "value"), "ts")
         StreamSessions.runToCompletionAppend(
           StreamSessions.sessionCounts(raw, "1800 seconds", "3600 seconds"),
-          "q89_stream_sessions"): Unit
+          "q89_stream_sessions")
+        None
       }),
     Target("q90_stream_dedup", "bounded_variant",
       "keys seen within 1-day horizon", 8, (s, d, _, tag) => {
@@ -128,7 +132,8 @@ object ScaleTime {
           StreamSessions.dedupStream(raw,
             Seq("user_id", "event_type"), "1 day")
             .select("user_id", "event_type"),
-          "q90_stream_dedup"): Unit
+          "q90_stream_dedup")
+        None
       }),
     Target("q93_stream_stops", "bounded_variant",
       "one automaton state per user", 8, (s, d, _, tag) => {
@@ -147,7 +152,8 @@ object ScaleTime {
         StreamSessions.runToCompletionAppend(
           StreamingStopDetect.stopEvents(raw,
             graft.queries.Shared.stopParams),
-          "q93_stream_stops"): Unit
+          "q93_stream_stops")
+        None
       }),
     Target("q104_stream_window", "bounded_variant",
       "unfinalized 1h windows behind 2h watermark", 8, (s, d, _, tag) => {
@@ -155,7 +161,8 @@ object ScaleTime {
           eventsTs(s, d).select("user_id", "ts", "value"), "ts")
         StreamSessions.runToCompletionAppend(
           StreamSessions.windowedCounts(raw, "3600 seconds", "2 hours"),
-          "q104_stream_window"): Unit
+          "q104_stream_window")
+        None
       }),
     Target("q158_stream_sliding", "bounded_variant",
       "unfinalized 2h/1h windows behind 2h watermark", 8,
@@ -165,7 +172,8 @@ object ScaleTime {
         StreamSessions.runToCompletionAppend(
           StreamSessions.slidingCounts(raw,
             "7200 seconds", "3600 seconds", "2 hours"),
-          "q158_stream_sliding"): Unit
+          "q158_stream_sliding")
+        None
       }),
     Target("q244_stream_benford", "gate", "9-digit domain", 1,
       gateRunner("q244_stream_benford")),
@@ -177,7 +185,7 @@ object ScaleTime {
         val raw = chunkedStream(s, s"t143:$tag", frame, "ts")
         val fin = StreamMatView.runFold(raw, Seq("user_id"), "cents",
           tmpDir("t143state"), matviewPrep)
-        recordFold("q143_stream_matview", fin, n, chunkConf(s))
+        foldStats(fin, n, chunkConf(s))
       }),
     Target("q203_stream_bitmap", "matview_fold",
       "snapshot rows = key cardinality (8-byte bitmap per key)", 8,
@@ -192,7 +200,7 @@ object ScaleTime {
         val raw = chunkedStream(s, s"t203:$tag", frame, "ts")
         val fin = StreamMatView.runFoldBitmapDelta(raw, Seq("user_id"),
           "day", tmpDir("t203state"), prep = _.select("user_id", "day"))
-        recordFold("q203_stream_bitmap", fin, n, chunkConf(s))
+        foldStats(fin, n, chunkConf(s))
       }),
     Target("q247_stream_matview_delta", "matview_fold",
       "snapshot rows = key cardinality; per-batch IO = touched buckets",
@@ -202,7 +210,7 @@ object ScaleTime {
         val raw = chunkedStream(s, s"t247:$tag", frame, "ts")
         val fin = StreamMatView.runFoldDelta(raw, Seq("user_id"), "cents",
           tmpDir("t247state"), matviewPrep)
-        recordFold("q247_stream_matview_delta", fin, n, chunkConf(s))
+        foldStats(fin, n, chunkConf(s))
       }),
 
     Target("q249_stream_quantile_matview", "matview_fold",
@@ -215,7 +223,7 @@ object ScaleTime {
         val fin = StreamMatView.runFoldDelta(raw,
           Seq("event_type", "cents"), "cents", tmpDir("t249state"),
           prep = _.select("event_type", "cents"))
-        recordFold("q249_stream_quantile_matview", fin, n, chunkConf(s))
+        foldStats(fin, n, chunkConf(s))
       }),
 
     // ingest gates: FIXED source-corpus index, incoming stream = mult
@@ -242,7 +250,8 @@ object ScaleTime {
         StreamSessions.runToCompletionAppend(
           StreamIngestGate.flagStream(raw, index, "text", "doc_id",
             "600 seconds"),
-          "q94_stream_ingest_gate"): Unit
+          "q94_stream_ingest_gate")
+        None
       }),
     Target("q166_stream_image_gate", "bounded_variant",
       "flagged pairs within 600s horizon against a fixed index", 8,
@@ -266,7 +275,8 @@ object ScaleTime {
             graft.operators.Multimodal.perceptualHashStream(
               raw, "media_id", "payload", "ts"),
             index, "600 seconds"),
-          "q166_stream_image_gate"): Unit
+          "q166_stream_image_gate")
+        None
       })
   )
 
@@ -309,18 +319,12 @@ object ScaleTime {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = Session.local("graft-scale-time",
-      // streaming replay cost is per-batch per-state-partition commits;
-      // at 16·N batches the default 32 state partitions would dominate
-      // wall clock without touching the measured peaks (peaks are row
-      // counts summed over partitions)
-      "spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_TIME_SHUFFLE", "8"),
-      // metrics ride StreamingQuery.recentProgress, which retains only
-      // the last 100 updates by default — a 16·N-batch replay would
-      // silently truncate input_rows (and clip the peak window) past
-      // N ≈ 6; keep every batch's progress visible to the harness
-      "spark.sql.streaming.numRecentProgressUpdates" -> "4000")
+    // streaming replay cost is per-batch per-state-partition commits; at
+    // 16·N batches the default 32 state partitions would dominate wall
+    // clock without touching the measured peaks (peaks are row counts
+    // summed over partitions)
+    val spark = Session.local("graft-scale-time", "spark.sql.shuffle.partitions" ->
+      sys.env.getOrElse("SPARK_GRAFT_TIME_SHUFFLE", "8"))
 
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_TIME_DIR", "/tmp/graft_time")
@@ -332,52 +336,37 @@ object ScaleTime {
     buildTimeExtended(spark, src, dst, nCopies)
 
     spark.conf.set("spark.graft.streamSinkNoop", "true")
-    val stats = scala.collection.mutable.Map
-      .empty[(String, String), StreamSessions.StreamRunMetrics]
-    val wall = scala.collection.mutable.Map.empty[(String, String), Double]
-    def run(t: Target, dir: String, mult: Int, shape: String): Unit = {
-      CacheScope.releaseAll()
-      StreamSessions.lastRunMetrics.clear()
-      spark.conf.set("spark.graft.streamChunks",
-        (t.baseChunks * mult).toString)
+    val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_time.json")
+    val ledger = new RunLedger(spark, Some(out))
+    def run(t: Target, dir: String, mult: Int, shape: String): (Double, StreamStats) = {
+      spark.conf.set("spark.graft.streamChunks", (t.baseChunks * mult).toString)
       spark.conf.set("spark.graft.streamFiles", (8 * mult).toString)
-      val t0 = System.nanoTime()
-      t.run(spark, dir, mult, s"$shape:$mult")
-      val dt = (System.nanoTime() - t0) / 1e9
-      wall((t.name, shape)) = dt
-      StreamSessions.lastRunMetrics.headOption
-        .foreach { case (_, m) => stats((t.name, shape)) = m }
-      val m = stats.get((t.name, shape))
-      System.err.println(
-        f"[scale-time] ${t.name} $shape $dt%.1f s " +
-          s"peak=${m.map(_.statePeakRows).getOrElse(-1L)} " +
-          s"rows=${m.map(_.inputRows).getOrElse(-1L)} " +
-          s"batches=${m.map(_.batches).getOrElse(-1L)}")
+      var fold: Option[StreamStats] = None
+      val r = ledger.measure(t.name, shape) {
+        fold = t.run(spark, dir, mult, s"$shape:$mult")
+      }.checked
+      val m = fold.orElse(r.stream)
+        .getOrElse(sys.error(s"${t.name} $shape: no streaming progress"))
+      System.err.println(s"[scale-time] ${t.name} $shape peak=${m.statePeakRows} " +
+        s"rows=${m.inputRows} batches=${m.batches}")
+      (r.wallS, m)
     }
-    for (t <- only) { run(t, src, 1, "src"); run(t, dst, nCopies, "time") }
-
-    val parts = only.map { t =>
-      val n = t.name
-      val (a, b) = (stats((n, "src")), stats((n, "time")))
-      s""""$n":{"form":"${t.form}","bound":"${t.bound}"""" +
-        s""","wall_src":${wall((n, "src"))},"wall_time":${wall((n, "time"))}""" +
-        s""","state_peak_src":${a.statePeakRows},"state_peak_time":${b.statePeakRows}""" +
-        s""","input_rows_src":${a.inputRows},"input_rows_time":${b.inputRows}""" +
-        s""","batches_src":${a.batches},"batches_time":${b.batches}""" +
-        s""","peak_ratio":${b.statePeakRows.toDouble / math.max(1L, a.statePeakRows)}}"""
+    val rows = only.map { t =>
+      val ((wa, a), (wb, b)) = (run(t, src, 1, "src"), run(t, dst, nCopies, "time"))
+      t.name -> JObject(
+        "form" -> JString(t.form), "bound" -> JString(t.bound),
+        "wall_src" -> num(wa), "wall_time" -> num(wb),
+        "state_peak_src" -> JLong(a.statePeakRows),
+        "state_peak_time" -> JLong(b.statePeakRows),
+        "input_rows_src" -> JLong(a.inputRows), "input_rows_time" -> JLong(b.inputRows),
+        "batches_src" -> JLong(a.batches), "batches_time" -> JLong(b.batches),
+        "peak_ratio" -> num(b.statePeakRows.toDouble / math.max(1L, a.statePeakRows), 6))
     }
-    val excl = excluded
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    val json = parts.mkString(
-      s"""{"metric":"scale_time_extended","copies":$nCopies,""" +
-        s""""fixture":"constant_density_extended_horizon",""" +
-        s""""excluded":$excl,"queries":{""",
-      ",", "}}")
-    println(json)
-    val out = new java.io.PrintWriter(
-      new java.io.File(sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT",
-        "SCALE_time.json")), "UTF-8")
-    try out.println(json) finally out.close()
+    println(RunLedger.write(out, JObject(
+      "metric" -> JString("scale_time_extended"), "copies" -> JLong(nCopies),
+      "fixture" -> JString("constant_density_extended_horizon"),
+      "excluded" -> JObject(excluded.toList.map { case (k, v) => k -> JString(v) }),
+      "queries" -> JObject(rows: _*))))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.json4s._
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -121,34 +121,16 @@ object Verify {
     ordered.filter { case (name, _) => status(name)._1 == "timeout" }
       .foreach { case (name, fn) => runOne(name, fn, attempt = 2) }
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // From here on the record is authoritative: no zombie may swap into
     // the final directories (they delete their scratch instead).
     swapLock.synchronized { closed = true }
-    val json = SparkEntry.oracleSql
+    RunLedger.write(s"$outDir/oracle_sql.json", JObject(SparkEntry.oracleSql
       .filter { case (k, _) => filter.exists(k.startsWith) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val statusJson = status
-      .map { case (k, (st, s)) =>
-        // Locale.ROOT: a comma-decimal default locale would emit "12,3"
-        // and break the driver's json.load
-        val secs = String.format(java.util.Locale.ROOT, "%.1f",
-          Double.box(s))
-        s"${q(k)}: {${q("status")}: ${q(st)}, ${q("seconds")}: $secs}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/status.json"), statusJson)
+      .map { case (k, v) => k -> JString(v) }.toList))
+    RunLedger.write(s"$outDir/status.json", JObject(status.toList.map {
+      case (k, (st, s)) => k -> JObject("status" -> JString(st),
+        "seconds" -> RunLedger.num(s, 1))
+    }))
     spark.stop()
     // After stop no zombie write can complete, and `closed` already stops
     // any straggler from renaming into place — sweep leftover scratch dirs

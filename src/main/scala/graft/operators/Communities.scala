@@ -223,7 +223,8 @@ object Communities {
     val lon = Array.tabulate(n)(coords(_)._2)
     val buf = Array.fill(n)(
       new scala.collection.mutable.ArrayBuffer[(Int, Double)])
-    NeighborSearch.pairs(lat, lon, p.r2, p.metric, dist(p), (i, j, d) => {
+    NeighborSearch.pairs(lat, lon, p.r2, p.metric,
+        StopDetect.distance(p.metric, _, _, _, _), (i, j, d) => {
       val cMax = math.max(counts(i), counts(j)).toDouble
       val w =
         if (!p.weighted) cMax
@@ -507,18 +508,4 @@ object Communities {
       + C.keysIterator.map(m => plogp((C(m) + S(m)) / w2)).sum
       - s.iterator.map(x => plogp(x / w2)).sum)
   }
-
-  private def dist(p: Params)(aLat: Double, aLon: Double,
-                              bLat: Double, bLon: Double): Double =
-    p.metric match {
-      case "euclidean" =>
-        math.sqrt((bLat - aLat) * (bLat - aLat) + (bLon - aLon) * (bLon - aLon))
-      case _ =>
-        val la1 = math.toRadians(aLat); val la2 = math.toRadians(bLat)
-        val dLat = la2 - la1
-        val dLon = math.toRadians(bLon) - math.toRadians(aLon)
-        val a = math.pow(math.sin(dLat / 2), 2) +
-          math.cos(la1) * math.cos(la2) * math.pow(math.sin(dLon / 2), 2)
-        2 * 6371000.0 * math.asin(math.sqrt(a))
-    }
 }

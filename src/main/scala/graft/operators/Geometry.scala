@@ -108,16 +108,6 @@ object Geometry {
       (cLat + l / 2, cLon + l / 2), (cLat - l / 2, cLon + l / 2))
   }
 
-  private def haversineM(aLat: Double, aLon: Double,
-                         bLat: Double, bLon: Double): Double = {
-    val la1 = math.toRadians(aLat); val la2 = math.toRadians(bLat)
-    val dLat = la2 - la1
-    val dLon = math.toRadians(bLon) - math.toRadians(aLon)
-    val a = math.pow(math.sin(dLat / 2), 2) +
-      math.cos(la1) * math.cos(la2) * math.pow(math.sin(dLon / 2), 2)
-    2 * 6371000.0 * math.asin(math.sqrt(a))
-  }
-
   /** points(uid, stop_locations, latitude, longitude) -> per (uid,
     * cluster): hull vertices + max pairwise haversine distance (meters).
     */
@@ -137,7 +127,8 @@ object Geometry {
         while (i < dpts.length) {
           var j = i + 1
           while (j < dpts.length) {
-            val d = haversineM(dpts(i)._1, dpts(i)._2, dpts(j)._1, dpts(j)._2)
+            val d = StopDetect.distance("haversine",
+              dpts(i)._1, dpts(i)._2, dpts(j)._1, dpts(j)._2)
             if (d > maxD) maxD = d
             j += 1
           }

@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.functions.GeoFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-user spatial clustering of stop-event medians into recurring "stop
@@ -52,20 +51,6 @@ object StopClusters {
       cluster_counts: Long, cluster_latitude: Double,
       cluster_longitude: Double)
 
-  private def dist(p: Params)(aLat: Double, aLon: Double,
-                              bLat: Double, bLon: Double): Double =
-    p.metric match {
-      case "euclidean" =>
-        math.sqrt((bLat - aLat) * (bLat - aLat) + (bLon - aLon) * (bLon - aLon))
-      case _ =>
-        val la1 = math.toRadians(aLat); val la2 = math.toRadians(bLat)
-        val dLat = la2 - la1
-        val dLon = math.toRadians(bLon) - math.toRadians(aLon)
-        val a = math.pow(math.sin(dLat / 2), 2) +
-          math.cos(la1) * math.cos(la2) * math.pow(math.sin(dLon / 2), 2)
-        2 * GeoFunctions.EarthRadiusMeters * math.asin(math.sqrt(a))
-    }
-
   /** Grid-snap + dedup reduction before the O(n²) kernel (reference
     * _downsample, models.py:60-87). resolution <= 0 is the identity.
     */
@@ -81,7 +66,6 @@ object StopClusters {
     * rows sorted by stop_events.
     */
   private def labelGroup(rows: Array[MedianRow], p: Params): Array[Long] = {
-    val d = dist(p) _
     val n = rows.length
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
@@ -101,7 +85,8 @@ object StopClusters {
     val neighbors = Array.fill(n)(List.empty[Int])
     val latA = Array.tabulate(n)(rows(_).latitude)
     val lonA = Array.tabulate(n)(rows(_).longitude)
-    NeighborSearch.pairs(latA, lonA, p.eps, p.metric, d, (i, j, _) => {
+    NeighborSearch.pairs(latA, lonA, p.eps, p.metric,
+        StopDetect.distance(p.metric, _, _, _, _), (i, j, _) => {
       degree(i) += 1; degree(j) += 1
       neighbors(i) ::= j; neighbors(j) ::= i
     })
@@ -162,6 +147,16 @@ object StopClusters {
     if (n % 2 == 1) xs(n / 2) else (xs(n / 2 - 1) + xs(n / 2)) / 2
   }
 
+  /** One uid's rows sorted by stop_events and their labels: the first
+    * [[cappedPrefix]] rows clustered by [[labelGroup]], the rest noise.
+    */
+  private def labeledGroup(it: Iterator[MedianRow],
+                           p: Params): (Array[MedianRow], Array[Long]) = {
+    val rows = it.toArray.sortBy(_.stop_events)
+    val capped = cappedPrefix(rows, p)
+    (rows, labelGroup(capped, p) ++ Array.fill(rows.length - capped.length)(-1L))
+  }
+
   /** event_medians(uid, stop_events, latitude, longitude, start_timestamp,
     * end_timestamp) -> + stop_locations (−1 = noise).
     */
@@ -174,10 +169,7 @@ object StopClusters {
       .as[MedianRow]
       .groupByKey(_.uid)
       .flatMapGroups { (_: String, it: Iterator[MedianRow]) =>
-        val rows = it.toArray.sortBy(_.stop_events)
-        val capped = cappedPrefix(rows, p)
-        val labels = labelGroup(capped, p) ++
-          Array.fill(rows.length - capped.length)(-1L)
+        val (rows, labels) = labeledGroup(it, p)
         rows.iterator.zipWithIndex.map { case (r, k) =>
           LabeledRow(r.uid, r.stop_events, r.latitude, r.longitude,
             r.start_timestamp, r.end_timestamp, labels(k))
@@ -186,32 +178,13 @@ object StopClusters {
       .toDF()
   }
 
-  /** Attach per-cluster statistics: cluster_counts and the cluster median
-    * coordinates (models.py:239-263). Noise rows (−1) keep their own
-    * coordinates and count 1 (models.py:256-260). Implemented as window
-    * aggregates over (uid, stop_locations) — the uid exchange from the
-    * kernel stage satisfies the distribution, so no extra shuffle or join.
-    */
-  def withClusterStats(labeled: DataFrame): DataFrame = {
-    val byCluster = Window.partitionBy("uid", "stop_locations")
-    val noise = col("stop_locations") === -1L
-    labeled
-      .withColumn("cluster_counts",
-        when(noise, 1L).otherwise(count(lit(1)).over(byCluster)))
-      .withColumn("cluster_latitude",
-        when(noise, col("latitude"))
-          .otherwise(median(col("latitude")).over(byCluster)))
-      .withColumn("cluster_longitude",
-        when(noise, col("longitude"))
-          .otherwise(median(col("longitude")).over(byCluster)))
-  }
-
-  /** Full stage: downsample -> per-user clustering -> cluster stats, with
-    * the stats computed INSIDE the kernel (the group is already
-    * materialized there) — saves the post-kernel exchange+window that
-    * [[withClusterStats]] would need, since flatMapGroups output has
-    * unknown partitioning. One shuffle total on the (already tiny) median
-    * table.
+  /** Full stage: downsample -> per-user clustering -> cluster stats:
+    * cluster_counts and the cluster median coordinates
+    * (models.py:239-263; noise rows keep their own coordinates and count
+    * 1, models.py:256-260), computed INSIDE the kernel, where the group
+    * is already materialized — flatMapGroups output has unknown
+    * partitioning, so a post-kernel window would cost another exchange.
+    * One shuffle total on the (already tiny) median table.
     */
   def cluster(medians: DataFrame, p: Params): DataFrame = {
     val spark = medians.sparkSession
@@ -222,10 +195,7 @@ object StopClusters {
       .as[MedianRow]
       .groupByKey(_.uid)
       .flatMapGroups { (_: String, it: Iterator[MedianRow]) =>
-        val rows = it.toArray.sortBy(_.stop_events)
-        val capped = cappedPrefix(rows, p)
-        val labels = labelGroup(capped, p) ++
-          Array.fill(rows.length - capped.length)(-1L)
+        val (rows, labels) = labeledGroup(it, p)
         val byLabel = rows.indices.groupBy(labels(_))
         val stats = byLabel.collect { case (lbl, idxs) if lbl >= 0 =>
           lbl -> ((idxs.size.toLong,

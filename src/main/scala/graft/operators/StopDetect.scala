@@ -51,13 +51,15 @@ object StopDetect {
       maxStayingTime: Long = 3600L,
       metric: String = "haversine")
 
-  /** Distance from a ping to its next one under `p.metric`: the same
-    * arithmetic as GeoFunctions' haversine (native expression) and
-    * euclidean (Spark's `pow` is StrictMath.pow) columns.
+  /** Distance between two points under `metric`, "haversine" (meters) or
+    * "euclidean" (degrees): the same arithmetic as GeoFunctions'
+    * haversine (native expression) and euclidean (Spark's `pow` is
+    * StrictMath.pow) columns. The one scalar distance of the per-user
+    * kernels (stop scan, DBSCAN, community graphs, hull diameters).
     */
-  def distance(p: Params, lat1: Double, lon1: Double,
+  def distance(metric: String, lat1: Double, lon1: Double,
                lat2: Double, lon2: Double): Double =
-    if (p.metric == "euclidean")
+    if (metric == "euclidean")
       Math.sqrt(StrictMath.pow(lat2 - lat1, 2) + StrictMath.pow(lon2 - lon1, 2))
     else Haversine.compute(lat1, lon1, lat2, lon2)
 

@@ -147,7 +147,7 @@ object StopScanExec {
       val timed = !(a.isNullAt(ts) || b.isNullAt(ts))
       val gap = if (timed) tsOf(b) - tsOf(a) else 0L
       if (placed && StopDetect.isStationary(p,
-          StopDetect.distance(p, latOf(a), lonOf(a), latOf(b), lonOf(b)),
+          StopDetect.distance(p.metric, latOf(a), lonOf(a), latOf(b), lonOf(b)),
           gap, timed)) {
         if (run.isEmpty) { runId = nextId; nextId += 1 }
         run.add(a)

@@ -346,24 +346,6 @@ object StreamSessions {
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Per-run streaming metrics, recorded by [[runToCompletion]]/
-    * [[runToCompletionAppend]] from the query's progress events and
-    * keyed by the caller's name prefix: the SCALE smoke's evidence that
-    * state stays watermark-bounded (peak state rows ~ window, not input
-    * rows) instead of design-argued (r9 verdict ask #1).
-    *
-    * @param statePeakRows max over micro-batches of the total rows held
-    *   across all state stores at batch end
-    * @param inputRows     total rows ingested over the run
-    * @param batches       micro-batch count
-    */
-  final case class StreamRunMetrics(statePeakRows: Long, inputRows: Long,
-                                    batches: Int)
-
-  /** Last completed run's metrics per name prefix (q97/q110/q151...). */
-  val lastRunMetrics =
-    scala.collection.concurrent.TrieMap.empty[String, StreamRunMetrics]
-
   /** Run a streaming AGGREGATION to completion over existing files and
     * return its final result as a batch DataFrame — the batch-parity
     * harness for gate queries (q89).
@@ -436,7 +418,7 @@ object StreamSessions {
     // schema. The memory sink materializes every emitted row in the
     // driver — correct for the oracle gates, lethal for a x100 scale
     // smoke whose emissions are input-sized; the smoke only needs wall
-    // clock + the state-peak metrics recorded below.
+    // clock + the state-peak figures of graft.RunLedger.
     val noop = spark.conf.getOption("spark.graft.streamSinkNoop")
       .contains("true")
     val key = "spark.sql.shuffle.partitions"
@@ -462,45 +444,6 @@ object StreamSessions {
       }
     }
     q.exception.foreach(throw _)
-    // progress -> metrics: peak of the per-batch state-store row totals,
-    // total input rows, batch count (recentProgress keeps the last 100
-    // progress events; the AvailableNow gates run far fewer batches)
-    val progress = q.recentProgress
-    // recentProgress is a ring buffer (spark.sql.streaming
-    // .numRecentProgressUpdates, default 100): a run with more batches
-    // than the cap would silently truncate inputRows and could miss the
-    // true state peak — the scale harness raises the cap; anything else
-    // hitting it gets a loud warning next to its metrics
-    val progressCap = spark.conf
-      .getOption("spark.sql.streaming.numRecentProgressUpdates")
-      .map(_.toInt).getOrElse(100)
-    if (progress.length >= progressCap)
-      System.err.println(
-        s"[stream-metrics] WARNING $namePrefix: $progressCap-batch " +
-          "progress buffer full — metrics may be truncated; raise " +
-          "spark.sql.streaming.numRecentProgressUpdates")
-    // Dev probe (guide §1.1 empirical loop): per-batch duration ledger —
-    // where a micro-batch's wall went (planning, WAL, state commit,
-    // addBatch) — printed only under spark.graft.streamProgressDebug.
-    if (spark.conf.getOption("spark.graft.streamProgressDebug")
-        .contains("true"))
-      progress.foreach { p =>
-        val d = p.durationMs
-        val st = Option(p.stateOperators).getOrElse(Array.empty)
-        System.err.println(
-          s"[stream-progress] $namePrefix batch ${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${d} state=" +
-            st.map(s => s"(rows=${s.numRowsTotal} commit=" +
-              s"${s.commitTimeMs} mem=${s.memoryUsedBytes})").mkString(","))
-      }
-    lastRunMetrics(namePrefix) = StreamRunMetrics(
-      statePeakRows =
-        if (progress.isEmpty) 0L
-        else progress.map(p =>
-          Option(p.stateOperators).map(_.map(_.numRowsTotal).sum)
-            .getOrElse(0L)).max,
-      inputRows = progress.map(_.numInputRows).sum,
-      batches = progress.length)
     if (noop)
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),

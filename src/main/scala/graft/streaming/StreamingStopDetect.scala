@@ -69,7 +69,7 @@ object StreamingStopDetect extends Serializable {
         case Some(prev) =>
           val dt = cur.timestamp - prev.timestamp
           val stationary = StopDetect.isStationary(p,
-            StopDetect.distance(p, prev.latitude, prev.longitude,
+            StopDetect.distance(p.metric, prev.latitude, prev.longitude,
               cur.latitude, cur.longitude), dt)
           if (stationary) {
             val id = if (st.run.isEmpty) st.nextId else st.runId

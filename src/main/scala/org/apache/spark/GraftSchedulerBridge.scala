@@ -1,10 +1,11 @@
 package org.apache.spark
 
-/** Bridge to the private[spark] listener-bus drain — Bench snapshots
-  * per-run task counts and byte volumes from a SparkListener, and task-end
-  * events are delivered asynchronously, so each run's metric window must
-  * wait until every queued event has been handled or the tail of one
-  * query's tasks would be charged to the next.
+/** Bridge to the private[spark] listener-bus drain — graft.RunLedger
+  * (and the mobility benchmark's meter) take per-run task counts, byte
+  * volumes and streaming progress from a SparkListener, and those events
+  * are delivered asynchronously, so each run's window must wait until
+  * every queued event has been handled or the tail of one query's tasks
+  * would be charged to the next.
   */
 object GraftSchedulerBridge {
 
