@@ -52,12 +52,15 @@ import org.json4s._
   */
 object ScaleTime {
 
-  /** `run` returns the stream figures of a fold target (None: the
-    * ledger's progress-event figures stand).
+  /** `run` returns a fold target's final snapshot. A mat-view fold has no
+    * state store, so its `state_peak` is that snapshot's row count (a
+    * monotone fold's final = peak), counted after the timed run; input
+    * rows and batches come from the ledger's progress events, as for
+    * every target.
     */
   private final case class Target(
     name: String, form: String, bound: String, baseChunks: Int,
-    run: (SparkSession, String, Int, String) => Option[StreamStats])
+    run: (SparkSession, String, Int, String) => Option[DataFrame])
 
   /** Events normalized to (user_id, event_type, ts timestamp, value
     * cents) — the shared input shape for the bounded variants.
@@ -82,16 +85,8 @@ object ScaleTime {
   }
 
   private def gateRunner(name: String)
-  : (SparkSession, String, Int, String) => Option[StreamStats] =
+  : (SparkSession, String, Int, String) => Option[DataFrame] =
     (s, d, _, _) => { Bench.force(SparkEntry.queries(name)(s, d)); None }
-
-  /** Mat-view snapshot figures: the fold has no state store, so
-    * `statePeakRows` carries the FINAL snapshot's row count (monotone
-    * fold → final = peak).
-    */
-  private def foldStats(state: DataFrame, inputRows: Long,
-                        batches: Int): Option[StreamStats] =
-    Some(StreamStats(state.count(), inputRows, batches))
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -103,9 +98,6 @@ object ScaleTime {
   private def matviewFrame(s: SparkSession, d: String): DataFrame =
     eventsTs(s, d).withColumn("cents", col("value").cast("long"))
       .select("user_id", "event_type", "ts", "cents")
-
-  private def chunkConf(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.streamChunks").map(_.toInt).getOrElse(16)
 
   private def targets(src: String): Seq[Target] = Seq(
     Target("q97_stream_stops_unordered", "gate", "watermark window", 16,
@@ -180,12 +172,9 @@ object ScaleTime {
 
     Target("q143_stream_matview", "matview_fold",
       "snapshot rows = key cardinality", 8, (s, d, _, tag) => {
-        val frame = matviewFrame(s, d)
-        val n = frame.count()
-        val raw = chunkedStream(s, s"t143:$tag", frame, "ts")
-        val fin = StreamMatView.runFold(raw, Seq("user_id"), "cents",
-          tmpDir("t143state"), matviewPrep)
-        foldStats(fin, n, chunkConf(s))
+        val raw = chunkedStream(s, s"t143:$tag", matviewFrame(s, d), "ts")
+        Some(StreamMatView.runFold(raw, Seq("user_id"), "cents",
+          tmpDir("t143state"), matviewPrep))
       }),
     Target("q203_stream_bitmap", "matview_fold",
       "snapshot rows = key cardinality (8-byte bitmap per key)", 8,
@@ -196,21 +185,16 @@ object ScaleTime {
         // 8-byte row per user no matter how long the stream runs
         val frame = eventsTs(s, d).select(col("user_id"), col("ts"),
           pmod(expr("unix_timestamp(ts) div 86400"), lit(60L)).as("day"))
-        val n = frame.count()
         val raw = chunkedStream(s, s"t203:$tag", frame, "ts")
-        val fin = StreamMatView.runFoldBitmapDelta(raw, Seq("user_id"),
-          "day", tmpDir("t203state"), prep = _.select("user_id", "day"))
-        foldStats(fin, n, chunkConf(s))
+        Some(StreamMatView.runFoldBitmapDelta(raw, Seq("user_id"),
+          "day", tmpDir("t203state"), prep = _.select("user_id", "day")))
       }),
     Target("q247_stream_matview_delta", "matview_fold",
       "snapshot rows = key cardinality; per-batch IO = touched buckets",
       8, (s, d, _, tag) => {
-        val frame = matviewFrame(s, d)
-        val n = frame.count()
-        val raw = chunkedStream(s, s"t247:$tag", frame, "ts")
-        val fin = StreamMatView.runFoldDelta(raw, Seq("user_id"), "cents",
-          tmpDir("t247state"), matviewPrep)
-        foldStats(fin, n, chunkConf(s))
+        val raw = chunkedStream(s, s"t247:$tag", matviewFrame(s, d), "ts")
+        Some(StreamMatView.runFoldDelta(raw, Seq("user_id"), "cents",
+          tmpDir("t247state"), matviewPrep))
       }),
 
     Target("q249_stream_quantile_matview", "matview_fold",
@@ -218,12 +202,10 @@ object ScaleTime {
       8, (s, d, _, tag) => {
         val frame = eventsTs(s, d).select(col("event_type"), col("ts"),
           col("value").cast("long").as("cents"))
-        val n = frame.count()
         val raw = chunkedStream(s, s"t249:$tag", frame, "ts")
-        val fin = StreamMatView.runFoldDelta(raw,
+        Some(StreamMatView.runFoldDelta(raw,
           Seq("event_type", "cents"), "cents", tmpDir("t249state"),
-          prep = _.select("event_type", "cents"))
-        foldStats(fin, n, chunkConf(s))
+          prep = _.select("event_type", "cents")))
       }),
 
     // ingest gates: FIXED source-corpus index, incoming stream = mult
@@ -341,12 +323,13 @@ object ScaleTime {
     def run(t: Target, dir: String, mult: Int, shape: String): (Double, StreamStats) = {
       spark.conf.set("spark.graft.streamChunks", (t.baseChunks * mult).toString)
       spark.conf.set("spark.graft.streamFiles", (8 * mult).toString)
-      var fold: Option[StreamStats] = None
+      var snapshot: Option[DataFrame] = None
       val r = ledger.measure(t.name, shape) {
-        fold = t.run(spark, dir, mult, s"$shape:$mult")
+        snapshot = t.run(spark, dir, mult, s"$shape:$mult")
       }.checked
-      val m = fold.orElse(r.stream)
+      val progress = r.stream
         .getOrElse(sys.error(s"${t.name} $shape: no streaming progress"))
+      val m = snapshot.fold(progress)(f => progress.copy(statePeakRows = f.count()))
       System.err.println(s"[scale-time] ${t.name} $shape peak=${m.statePeakRows} " +
         s"rows=${m.inputRows} batches=${m.batches}")
       (r.wallS, m)

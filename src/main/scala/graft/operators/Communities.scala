@@ -1,6 +1,10 @@
 package graft.operators
 
+import graft.plans.UidScan
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField}
 
 /** Community-based stop-location clustering — the engine's stand-in for
   * the reference's Infomap mode (compute_infomap,
@@ -23,8 +27,8 @@ import org.apache.spark.sql.DataFrame
   * The reference runs the C++ Infomap binding on this graph, which is not
   * bit-reproducible (SURVEY §7 trap 7: seeded stochastic search); its own
   * production scripts use the DBSCAN path. Two algorithms over the same
-  * radius graph, both deterministic, per-user inside the same
-  * flatMapGroups kernel shape as DBSCAN:
+  * radius graph, both deterministic, per-user in a uid kernel of
+  * [[graft.plans.UidScanExec]] like DBSCAN's:
   *  - `algorithm = "infomap"`: minimizes Infomap's actual objective, the
   *    two-level map equation (Rosvall & Bergstrom, PNAS 2008), with
   *    fixed-order Louvain-style local moves and module aggregation —
@@ -52,33 +56,8 @@ object Communities {
     * canonicalized, -1 for unlabeled singletons). Stops collapsing onto
     * the same (snapped) coordinate share that node's label.
     */
-  def assignLocations(medians: DataFrame, p: Params): DataFrame = {
-    val spark = medians.sparkSession
-    import spark.implicits._
-    medians
-      .select("uid", "stop_events", "latitude", "longitude",
-        "start_timestamp", "end_timestamp")
-      .as[StopClusters.MedianRow]
-      .groupByKey(_.uid)
-      .flatMapGroups { (_: String, it: Iterator[StopClusters.MedianRow]) =>
-        val rows = it.toArray.sortBy(_.stop_events)
-        val labels = labelStops(rows, p)
-        rows.iterator.zipWithIndex.map { case (r, k) =>
-          StopClusters.LabeledRow(r.uid, r.stop_events, r.latitude,
-            r.longitude, r.start_timestamp, r.end_timestamp, labels(k))
-        }
-      }
-      .toDF()
-  }
-
-  /** [[assignLocationsCertified]] row: the labeled stop plus the
-    * per-user optimality certificate.
-    */
-  final case class CertifiedRow(
-      uid: String, stop_events: Long, latitude: Double, longitude: Double,
-      start_timestamp: Long, end_timestamp: Long, stop_locations: Long,
-      bits_found: Double, bits_singleton: Double, improves: Boolean,
-      cc_locations: Long, refines: Boolean)
+  def assignLocations(medians: DataFrame, p: Params): DataFrame =
+    UidScan.frame(StopClusters.medianInput(medians), Labels(p, certified = false))
 
   /** Infomap labeling with a SELF-CERTIFICATE per user: alongside each
     * stop's community label, emit the exact two-level map-equation
@@ -109,82 +88,72 @@ object Communities {
   def assignLocationsCertified(medians: DataFrame, p: Params): DataFrame = {
     require(p.algorithm == "infomap",
       s"certificate is defined for the map-equation mode, got ${p.algorithm}")
-    val spark = medians.sparkSession
-    import spark.implicits._
-    medians
-      .select("uid", "stop_events", "latitude", "longitude",
-        "start_timestamp", "end_timestamp")
-      .as[StopClusters.MedianRow]
-      .groupByKey(_.uid)
-      .flatMapGroups { (_: String, it: Iterator[StopClusters.MedianRow]) =>
-        val rows = it.toArray.sortBy(_.stop_events)
-        val (rowNode, allCoords, allCounts) = collapseStops(rows, p)
-        val n = trimmedSize(allCoords.length, rows.head.uid, p)
-        val adj = buildAdjacency(allCoords.take(n), allCounts.take(n), p)
-        // the CC certificate covers the SAME trimmed node set the
-        // partition runs on — trimmed-out nodes pin -1 exactly like
-        // stop_locations, and the oracle CTE trims identically (node
-        // index < maxGroupSize in first-appearance order), so the whale
-        // guard's O(nodes^2) edge bound holds on the certified path too
-        // (an untrimmed certificate adjacency would re-open it)
-        val ccLabels = connectedComponents(adj) ++
-          Array.fill(allCoords.length - n)(-1L)
-        val part = mapEquationPartition(adj)
-        val nodeLabels = canonicalizeLabels(part, adj, p) ++
-          Array.fill(allCoords.length - n)(-1L)
-        // refinement: each found community sits inside exactly one CC
-        val ccOfModule = scala.collection.mutable.Map.empty[Long, Long]
-        var refines = true
-        var v = 0
-        while (v < n) {
-          val m = nodeLabels(v)
-          if (m != -1L) ccOfModule.get(m) match {
-            case Some(cc) => if (cc != ccLabels(v)) refines = false
-            case None => ccOfModule(m) = ccLabels(v)
-          }
-          v += 1
-        }
-        val bitsFound = mapEquationBits(adj, part)
-        val bitsSingleton =
-          mapEquationBits(adj, Array.tabulate(adj.length)(identity))
-        val improves = bitsFound <= bitsSingleton + 1e-9
-        rows.iterator.zipWithIndex.map { case (r, k) =>
-          CertifiedRow(r.uid, r.stop_events, r.latitude, r.longitude,
-            r.start_timestamp, r.end_timestamp, nodeLabels(rowNode(k)),
-            bitsFound, bitsSingleton, improves,
-            ccLabels(rowNode(k)), refines)
-        }
-      }
-      .toDF()
+    UidScan.frame(StopClusters.medianInput(medians), Labels(p, certified = true))
   }
 
-  /** Collapse a user's stops to unique snapped coordinates (downsample),
-    * label the unique-coordinate graph, and fan labels back to stops.
-    * Returns one label per input row (input must be stop_events-sorted).
+  /** Both modes as one uid kernel: collapse a user's stops to unique
+    * snapped coordinates (downsample), label the unique-coordinate graph,
+    * and fan the labels back to the stops, which leave in stop_events
+    * order; `certified` appends [[assignLocationsCertified]]'s columns.
     */
+  private final case class Labels(p: Params, certified: Boolean)
+      extends StopClusters.MedianKernel {
+    override def adds(in: Seq[Attribute]): Seq[StructField] =
+      (("stop_locations" -> LongType) +: (if (!certified) Nil else Seq(
+        "bits_found" -> DoubleType, "bits_singleton" -> DoubleType,
+        "improves" -> BooleanType, "cc_locations" -> LongType,
+        "refines" -> BooleanType)))
+        .map { case (c, t) => StructField(c, t, nullable = false) }
+    override def emitsSortedBy: Option[Seq[String]] = Some(Seq("stop_events"))
+    override def emit(g: StopClusters.MedianGroup): Iterator[(Int, InternalRow)] = {
+      val (rowNode, allCoords, allCounts) = collapseStops(g, p)
+      val n = trimmedSize(allCoords.length, g.uid, p)
+      val adj = buildAdjacency(allCoords.take(n), allCounts.take(n), p)
+      val part =
+        if (p.algorithm == "infomap") mapEquationPartition(adj)
+        else labelPropagation(adj, p)
+      val trimmed = Array.fill(allCoords.length - n)(-1L)
+      val nodeLabels = canonicalizeLabels(part, adj, p) ++ trimmed
+      val certificate: Int => Seq[Any] =
+        if (!certified) _ => Nil
+        else {
+          // the CC certificate covers the SAME trimmed node set the
+          // partition runs on — trimmed-out nodes pin -1 exactly like
+          // stop_locations, and the oracle CTE trims identically (node
+          // index < maxGroupSize in first-appearance order), so the whale
+          // guard's O(nodes^2) edge bound holds on the certified path too
+          // (an untrimmed certificate adjacency would re-open it)
+          val cc = connectedComponents(adj) ++ trimmed
+          // refinement: each found community sits inside exactly one CC
+          val refines = (0 until n).filter(nodeLabels(_) != -1L)
+            .groupBy(nodeLabels(_)).values.forall(_.map(cc(_)).distinct.size == 1)
+          val bitsFound = mapEquationBits(adj, part)
+          val bitsSingleton =
+            mapEquationBits(adj, Array.tabulate(adj.length)(identity))
+          val improves = bitsFound <= bitsSingleton + 1e-9
+          v => Seq(bitsFound, bitsSingleton, improves, cc(v), refines)
+        }
+      g.rows.indices.iterator.map { k =>
+        k -> InternalRow.fromSeq(nodeLabels(rowNode(k)) +: certificate(rowNode(k)))
+      }
+    }
+  }
+
   /** First-appearance-ordered unique snapped coords: per-row node index,
-    * coords, and per-coord stop counts (the downsample step shared by
-    * [[labelStops]] and the certified q82 path).
+    * coords, and per-coord stop counts (the downsample step).
     */
-  private def collapseStops(rows: Array[StopClusters.MedianRow], p: Params)
+  private def collapseStops(g: StopClusters.MedianGroup, p: Params)
   : (Array[Int], Array[(Double, Double)], Array[Long]) = {
     def snap(v: Double): Double =
       if (p.minSpacialResolution > 0)
         math.round(v / p.minSpacialResolution) * p.minSpacialResolution
       else v
     val nodeOf = scala.collection.mutable.LinkedHashMap.empty[(Double, Double), Int]
-    val rowNode = new Array[Int](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val key = (snap(rows(i).latitude), snap(rows(i).longitude))
-      rowNode(i) = nodeOf.getOrElseUpdate(key, nodeOf.size)
-      i += 1
-    }
-    val allCoords = nodeOf.keysIterator.toArray
-    val allCounts = new Array[Long](allCoords.length)
-    i = 0
-    while (i < rows.length) { allCounts(rowNode(i)) += 1L; i += 1 }
-    (rowNode, allCoords, allCounts)
+    val rowNode = g.lat.indices.map(i =>
+      nodeOf.getOrElseUpdate((snap(g.lat(i)), snap(g.lon(i))), nodeOf.size)).toArray
+    val allCounts = new Array[Long](nodeOf.size)
+    rowNode.foreach(allCounts(_) += 1L)
+    (rowNode, nodeOf.keysIterator.toArray, allCounts)
   }
 
   /** Whale-user guard: the pair SCAN is grid-pruned (NeighborSearch),
@@ -193,22 +162,13 @@ object Communities {
     * blowing task memory — the enforced form of the reference's
     * min_spacial_resolution mitigation.
     */
-  private def trimmedSize(total: Int, uid: String, p: Params): Int = {
+  private def trimmedSize(total: Int, uid: Any, p: Params): Int = {
     val n = math.min(total, p.maxGroupSize)
     if (n < total)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"uid $uid: $total unique coords exceed " +
           s"maxGroupSize=${p.maxGroupSize}; labeling overflow as -1")
     n
-  }
-
-  private[operators] def labelStops(rows: Array[StopClusters.MedianRow],
-                                    p: Params): Array[Long] = {
-    val (rowNode, allCoords, allCounts) = collapseStops(rows, p)
-    val n = trimmedSize(allCoords.length, rows.head.uid, p)
-    val nodeLabels = labelGroup(allCoords.take(n), allCounts.take(n), p) ++
-      Array.fill(allCoords.length - n)(-1L)
-    Array.tabulate(rows.length)(k => nodeLabels(rowNode(k)))
   }
 
   /** Radius graph with reference edge weights (utils.py:101-122):
@@ -238,40 +198,34 @@ object Communities {
     buf.map(_.sortBy(-_._1).toList)
   }
 
-  private def labelGroup(coords: Array[(Double, Double)],
-                         counts: Array[Long], p: Params): Array[Long] = {
-    val n = coords.length
-    val adj = buildAdjacency(coords, counts, p)
-    var i = 0
-    val label: Array[Int] =
-      if (p.algorithm == "infomap") mapEquationPartition(adj)
-      else {
-        // asynchronous weighted label propagation in fixed index order:
-        // deterministic AND convergent (synchronous updates oscillate on
-        // 2-node components); ties go to the smallest label
-        val lbl = Array.tabulate(n)(identity)
-        var changed = true
-        var iter = 0
-        while (changed && iter < p.maxIterations) {
-          changed = false
-          i = 0
-          while (i < n) {
-            if (adj(i).nonEmpty) {
-              val scores = scala.collection.mutable.Map.empty[Int, Double]
-              adj(i).foreach { case (j, w) =>
-                scores(lbl(j)) = scores.getOrElse(lbl(j), 0.0) + w
-              }
-              val next = scores.toSeq
-                .maxBy { case (l, s) => (s, -l.toDouble) }._1
-              if (next != lbl(i)) { lbl(i) = next; changed = true }
-            }
-            i += 1
+  /** Asynchronous weighted label propagation in fixed index order:
+    * deterministic AND convergent (synchronous updates oscillate on
+    * 2-node components); ties go to the smallest label.
+    */
+  private def labelPropagation(adj: Array[List[(Int, Double)]],
+                               p: Params): Array[Int] = {
+    val n = adj.length
+    val lbl = Array.tabulate(n)(identity)
+    var changed = true
+    var iter = 0
+    while (changed && iter < p.maxIterations) {
+      changed = false
+      var i = 0
+      while (i < n) {
+        if (adj(i).nonEmpty) {
+          val scores = scala.collection.mutable.Map.empty[Int, Double]
+          adj(i).foreach { case (j, w) =>
+            scores(lbl(j)) = scores.getOrElse(lbl(j), 0.0) + w
           }
-          iter += 1
+          val next = scores.toSeq
+            .maxBy { case (l, s) => (s, -l.toDouble) }._1
+          if (next != lbl(i)) { lbl(i) = next; changed = true }
         }
-        lbl
+        i += 1
       }
-    canonicalizeLabels(label, adj, p)
+      iter += 1
+    }
+    lbl
   }
 
   /** Connected components of a radius-graph adjacency, canonicalized the

@@ -16,14 +16,17 @@ import org.apache.spark.sql.functions._
   * `prepare` hash-partitions the rows by uid and sorts them once by
   * (uid, stop_locations); that layout satisfies all four windows and the
   * wide export's sort aggregate, so the whole tail is one exchange and one
-  * sort, with no cache, no label join and no anti-join.
+  * sort, with no cache, no label join and no anti-join. On
+  * [[StopClusters.cluster]]'s output, which already has that layout, the
+  * planner drops both: from pings to the wide export the pipeline
+  * shuffles and sorts once.
   *
   * With `totalDays = None` each phase's day span is a global scalar over
   * its candidate rows, so those rows are read twice: once for the scalar
   * subquery, once for the windows. Only that branch routes the prepared
   * rows through a lazy `localCheckpoint`; otherwise both reads would
-  * re-run the whole upstream stop pipeline (stop windows + per-user
-  * DBSCAN kernel). It sits before the uid layout because a checkpointed
+  * re-run the whole upstream stop pipeline (stop scan, medians and
+  * DBSCAN kernels). It sits before the uid layout because a checkpointed
   * scan reports no partitioning. The checkpoint frees through the
   * ContextCleaner, so neither branch touches the session cache.
   *

@@ -1,18 +1,24 @@
 package graft.operators
 
 import graft.functions.GeoFunctions
+import graft.plans.{UidKernel, UidScan}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
 
 /** Per-user spatial clustering of stop-event medians into recurring "stop
   * locations" (compute_dbscan, src/polaroam/models.py:206-265; DBSCAN
   * kernel src/polaroam/utils.py:203-215: eps=r2, min_samples=2, haversine).
   *
-  * Spark-first design: the non-relational kernel (DBSCAN) is the ONLY
-  * per-group code, run via groupByKey(uid).flatMapGroups on the already
-  * heavily reduced event-median table (orders of magnitude smaller than the
-  * ping table). Everything around it — downsampling, medoid statistics,
-  * enrichment — is relational. Per-user groups are intrinsically small
+  * Spark-first design: the non-relational kernel (DBSCAN) is a uid kernel
+  * of [[graft.plans.UidScanExec]], run on the already heavily reduced
+  * event-median table (orders of magnitude smaller than the ping table).
+  * It keeps the uid partitioning of [[StopDetect.eventMedians]] and emits
+  * each uid's rows in stop_locations order, so from pings to HomeWork's
+  * labels the pipeline shuffles and sorts once. The downsample around it
+  * is relational. Per-user groups are intrinsically small
   * (stops per human per period); the [[downsample]] grid-snap stage is the
   * reference's own whale-group cap (models.py:60-87); the neighbor scan
   * itself is grid-pruned ([[NeighborSearch]]) so sparse whales cost
@@ -35,22 +41,6 @@ object StopClusters {
       minSpatialResolution: Double = 0.0,
       maxGroupSize: Int = 20000)
 
-  // top-level visibility: Catalyst's generated (de)serializers cannot
-  // access private nested classes
-  final case class MedianRow(
-      uid: String, stop_events: Long, latitude: Double, longitude: Double,
-      start_timestamp: Long, end_timestamp: Long)
-
-  final case class LabeledRow(
-      uid: String, stop_events: Long, latitude: Double, longitude: Double,
-      start_timestamp: Long, end_timestamp: Long, stop_locations: Long)
-
-  final case class ClusteredRow(
-      uid: String, stop_events: Long, latitude: Double, longitude: Double,
-      start_timestamp: Long, end_timestamp: Long, stop_locations: Long,
-      cluster_counts: Long, cluster_latitude: Double,
-      cluster_longitude: Double)
-
   /** Grid-snap + dedup reduction before the O(n²) kernel (reference
     * _downsample, models.py:60-87). resolution <= 0 is the identity.
     */
@@ -63,10 +53,11 @@ object StopClusters {
         GeoFunctions.gridSnap(col("longitude"), resolution))
 
   /** Per-group DBSCAN: returns canonical 0-based labels (-1 = noise) for
-    * rows sorted by stop_events.
+    * points sorted by stop_events.
     */
-  private def labelGroup(rows: Array[MedianRow], p: Params): Array[Long] = {
-    val n = rows.length
+  private def labelGroup(latA: Array[Double], lonA: Array[Double],
+                         p: Params): Array[Long] = {
+    val n = latA.length
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
       var r = x
@@ -83,8 +74,6 @@ object StopClusters {
     // pair enumeration — identical pair set to the O(n²) scan
     val degree = Array.fill(n)(1)
     val neighbors = Array.fill(n)(List.empty[Int])
-    val latA = Array.tabulate(n)(rows(_).latitude)
-    val lonA = Array.tabulate(n)(rows(_).longitude)
     NeighborSearch.pairs(latA, lonA, p.eps, p.metric,
         StopDetect.distance(p.metric, _, _, _, _), (i, j, _) => {
       degree(i) += 1; degree(j) += 1
@@ -128,17 +117,16 @@ object StopClusters {
     * beyond `maxGroupSize` (in stop_events order) are excluded from
     * clustering and label as noise (−1) — the same degradation the
     * reference reaches via its min_spacial_resolution downsample, but
-    * enforced rather than hoped for. Returns the rows to cluster.
+    * enforced rather than hoped for. Returns how many rows to cluster.
     */
-  private def cappedPrefix(rows: Array[MedianRow],
-                           p: Params): Array[MedianRow] =
-    if (rows.length <= p.maxGroupSize) rows
+  private def cappedSize(g: MedianGroup, p: Params): Int =
+    if (g.rows.length <= p.maxGroupSize) g.rows.length
     else {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"uid ${rows.head.uid}: ${rows.length} medians exceed " +
+        s"uid ${g.uid}: ${g.rows.length} medians exceed " +
           s"maxGroupSize=${p.maxGroupSize}; clustering the first " +
           s"${p.maxGroupSize} by stop_events, labeling the rest noise")
-      rows.take(p.maxGroupSize)
+      p.maxGroupSize
     }
 
   private def exactMedian(xs: Array[Double]): Double = {
@@ -147,69 +135,91 @@ object StopClusters {
     if (n % 2 == 1) xs(n / 2) else (xs(n / 2 - 1) + xs(n / 2)) / 2
   }
 
-  /** One uid's rows sorted by stop_events and their labels: the first
-    * [[cappedPrefix]] rows clustered by [[labelGroup]], the rest noise.
+  /** The per-user kernels' input: the six median columns, uid as it is,
+    * the rest with the types the kernels read (stop_events and timestamps
+    * Long, coordinates Double).
     */
-  private def labeledGroup(it: Iterator[MedianRow],
-                           p: Params): (Array[MedianRow], Array[Long]) = {
-    val rows = it.toArray.sortBy(_.stop_events)
-    val capped = cappedPrefix(rows, p)
-    (rows, labelGroup(capped, p) ++ Array.fill(rows.length - capped.length)(-1L))
+  private[operators] def medianInput(medians: DataFrame): DataFrame =
+    medians.select(col("uid") +: Seq("stop_events" -> "long",
+        "latitude" -> "double", "longitude" -> "double",
+        "start_timestamp" -> "long", "end_timestamp" -> "long")
+      .map { case (c, t) => col(c).cast(t).as(c) }: _*)
+
+  /** One uid's medians, sorted by stop_events, and their coordinates. */
+  private[operators] final case class MedianGroup(rows: Array[InternalRow],
+      lat: Array[Double], lon: Array[Double], uid: Any)
+
+  /** A uid kernel over [[medianInput]] rows, one uid's medians at a time:
+    * `emit` gives the row index and the added values of each output row,
+    * in the order they leave. A null stop_events or coordinate is
+    * rejected.
+    */
+  private[operators] abstract class MedianKernel extends UidKernel {
+    def emit(g: MedianGroup): Iterator[(Int, InternalRow)]
+
+    override def open(in: Seq[Attribute], out: UnsafeProjection)
+    : Iterator[InternalRow] => Iterator[InternalRow] = {
+      val joined = new JoinedRow
+      val Seq(uid, ev, lat, lon) = Seq("uid", "stop_events", "latitude",
+        "longitude").map(UidScan.ordinal(in, _))
+      val uidType = in(uid).dataType
+      rows => {
+        val rs = rows.map(_.copy()).toArray.sortBy(_.getLong(ev))
+        rs.foreach(r => require(!(r.isNullAt(ev) || r.isNullAt(lat) ||
+          r.isNullAt(lon)), s"null stop_events or coordinate in medians: $r"))
+        val g = MedianGroup(rs, rs.map(_.getDouble(lat)),
+          rs.map(_.getDouble(lon)), rs.head.get(uid, uidType))
+        emit(g).map { case (k, v) => out(joined(g.rows(k), v)) }
+      }
+    }
+  }
+
+  /** DBSCAN as a uid kernel: labels each of a uid's medians and appends the
+    * cluster stats (models.py:239-263): cluster_counts and the cluster
+    * median coordinates; noise rows keep their own coordinates and count 1
+    * (models.py:256-260). Rows leave in (stop_locations, stop_events)
+    * order, the layout HomeWork's windows read.
+    */
+  private final case class Dbscan(p: Params) extends MedianKernel {
+    override def adds(in: Seq[Attribute]): Seq[StructField] = Seq(
+      StructField("stop_locations", LongType, nullable = false),
+      StructField("cluster_counts", LongType, nullable = false),
+      StructField("cluster_latitude", DoubleType, nullable = false),
+      StructField("cluster_longitude", DoubleType, nullable = false))
+    override def emitsSortedBy: Option[Seq[String]] = Some(Seq("stop_locations"))
+    override def emit(g: MedianGroup): Iterator[(Int, InternalRow)] = {
+      val n = cappedSize(g, p)
+      val labels = labelGroup(g.lat.take(n), g.lon.take(n), p) ++
+        Array.fill(g.rows.length - n)(-1L)
+      val stats = labels.indices.groupBy(labels(_)).collect {
+        case (lbl, ks) if lbl >= 0 => lbl -> ((ks.size.toLong,
+          exactMedian(ks.map(g.lat(_)).toArray),
+          exactMedian(ks.map(g.lon(_)).toArray)))
+      }
+      labels.indices.sortBy(labels(_)).iterator.map { k =>
+        val lbl = labels(k)
+        val (cnt, cLat, cLon) =
+          if (lbl >= 0) stats(lbl) else (1L, g.lat(k), g.lon(k))
+        k -> InternalRow(lbl, cnt, cLat, cLon)
+      }
+    }
   }
 
   /** event_medians(uid, stop_events, latitude, longitude, start_timestamp,
-    * end_timestamp) -> + stop_locations (−1 = noise).
+    * end_timestamp) -> + stop_locations (−1 = noise): [[cluster]]'s
+    * kernel without the downsample, its stats projected away.
     */
-  def assignLocations(medians: DataFrame, p: Params): DataFrame = {
-    val spark = medians.sparkSession
-    import spark.implicits._
-    medians
+  def assignLocations(medians: DataFrame, p: Params): DataFrame =
+    UidScan.frame(medianInput(medians), Dbscan(p))
       .select("uid", "stop_events", "latitude", "longitude",
-        "start_timestamp", "end_timestamp")
-      .as[MedianRow]
-      .groupByKey(_.uid)
-      .flatMapGroups { (_: String, it: Iterator[MedianRow]) =>
-        val (rows, labels) = labeledGroup(it, p)
-        rows.iterator.zipWithIndex.map { case (r, k) =>
-          LabeledRow(r.uid, r.stop_events, r.latitude, r.longitude,
-            r.start_timestamp, r.end_timestamp, labels(k))
-        }
-      }
-      .toDF()
-  }
+        "start_timestamp", "end_timestamp", "stop_locations")
 
-  /** Full stage: downsample -> per-user clustering -> cluster stats:
-    * cluster_counts and the cluster median coordinates
-    * (models.py:239-263; noise rows keep their own coordinates and count
-    * 1, models.py:256-260), computed INSIDE the kernel, where the group
-    * is already materialized — flatMapGroups output has unknown
-    * partitioning, so a post-kernel window would cost another exchange.
-    * One shuffle total on the (already tiny) median table.
+  /** Full stage: downsample -> per-user clustering -> cluster stats
+    * (+ stop_locations, cluster_counts, cluster_latitude,
+    * cluster_longitude). On [[StopDetect.eventMedians]]' output the kernel
+    * runs in the same task as the stop scan: no exchange, no sort.
     */
-  def cluster(medians: DataFrame, p: Params): DataFrame = {
-    val spark = medians.sparkSession
-    import spark.implicits._
-    downsample(medians, p.minSpatialResolution)
-      .select("uid", "stop_events", "latitude", "longitude",
-        "start_timestamp", "end_timestamp")
-      .as[MedianRow]
-      .groupByKey(_.uid)
-      .flatMapGroups { (_: String, it: Iterator[MedianRow]) =>
-        val (rows, labels) = labeledGroup(it, p)
-        val byLabel = rows.indices.groupBy(labels(_))
-        val stats = byLabel.collect { case (lbl, idxs) if lbl >= 0 =>
-          lbl -> ((idxs.size.toLong,
-            exactMedian(idxs.map(rows(_).latitude).toArray),
-            exactMedian(idxs.map(rows(_).longitude).toArray)))
-        }
-        rows.iterator.zipWithIndex.map { case (r, k) =>
-          val lbl = labels(k)
-          val (cnt, cLat, cLon) =
-            if (lbl >= 0) stats(lbl) else (1L, r.latitude, r.longitude)
-          ClusteredRow(r.uid, r.stop_events, r.latitude, r.longitude,
-            r.start_timestamp, r.end_timestamp, lbl, cnt, cLat, cLon)
-        }
-      }
-      .toDF()
-  }
+  def cluster(medians: DataFrame, p: Params): DataFrame =
+    UidScan.frame(medianInput(downsample(medians, p.minSpatialResolution)),
+      Dbscan(p))
 }

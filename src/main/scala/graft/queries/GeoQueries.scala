@@ -57,7 +57,7 @@ private[graft] object GeoQueries extends QuerySlice {
       StopDetect.eventMedians(
         StopDetect.stopEvents(Tables.pings(s, d), stopParams))),
 
-    // M3: per-user DBSCAN (flatMapGroups union-find) + cluster stats
+    // M3: per-user DBSCAN (union-find uid kernel) + cluster stats
     "q16_stop_clusters" -> ((s, d) =>
       stopClusters(s, d)
         .select("uid", "stop_events", "stop_locations", "cluster_counts",

@@ -1228,10 +1228,6 @@ private[graft] object Shared {
       |SELECT doc_id, n_tokens, cum_tokens FROM c
       |WHERE cum_tokens <= 15000""".stripMargin
 
-  /** Oracle CTE chain: pings -> stop_events -> medians -> per-user
-    * connected-components clustering (min_samples=2 DBSCAN degenerate
-    * case) -> cluster stats. Mirrors stopClusters(...) above.
-    */
   /** Oracle CTEs for q37: community labels via connected components of
     * the r2 radius graph over each user's UNIQUE median coordinates
     * (the LPA kernel's downsample step — a coordinate with no DISTINCT
@@ -1241,7 +1237,7 @@ private[graft] object Shared {
     * 0 mismatching rows); a pathological bridge topology could split a
     * component under LPA, in which case this oracle would catch the
     * divergence rather than hide it. Canonicalization matches
-    * Communities.labelGroup: dense_rank by component min-index =
+    * Communities.canonicalizeLabels: dense_rank by component min-index =
     * first-appearance order, singletons excluded from the id space.
     */
   private[graft] def communityCtes: String =

@@ -30,12 +30,14 @@ object Export {
                 mode: String = "PERMISSIVE"): DataFrame =
     spark.read.schema(schema).option("mode", mode).json(path)
 
-  /** Single-file CSV with header (K3). coalesce(1) is an explicit
-    * small-result convenience, as in the reference's collected write — do
-    * not use for large frames.
+  /** Single-file CSV with header (K3): an explicit small-result
+    * convenience, as in the reference's collected write — do not use for
+    * large frames. `repartition(1)`, not `coalesce(1)`: a coalesce would
+    * pull the upstream stage into one task, and after the wide export
+    * that stage is the whole stop pipeline.
     */
   def csvSingle(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite")
+    df.repartition(1).write.mode("overwrite")
       .option("header", "true").csv(path)
 
   /** Snappy parquet sink (K1). */
@@ -46,7 +48,7 @@ object Export {
     * default — the reference's raw drops are positional
     * (read_localize_write.py:50) — one .csv.gz per partition, so file
     * count follows the frame's partitioning (unlike [[csvSingle]]'s
-    * explicit small-result coalesce).
+    * explicit single partition).
     */
   def csvGz(df: DataFrame, path: String, header: Boolean = false): Unit =
     df.write.mode("overwrite")

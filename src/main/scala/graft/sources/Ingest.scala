@@ -51,15 +51,6 @@ object Ingest {
       .cast("long")
   }
 
-  /** Pre-r13 60-bit variant (low 15 hex digits only), kept for readers of
-    * data anonymized by earlier releases. New writes use [[uidHash]].
-    */
-  @deprecated("uidHash now matches the reference's mod-2^63 semantics " +
-    "exactly; this 60-bit form only reads back pre-r13 data", "r13")
-  def uidHash60(uid: Column): Column =
-    conv(substring(sha2(uid.cast("binary"), 256), 50, 15), 16, 10)
-      .cast("long")
-
   /** Epoch-seconds -> UTC-stamped -> tz-localized wall-clock timestamp +
     * date partition string (read_localize_write.py:19-27). The returned
     * datetime column carries the LOCAL wall clock (the reference's

@@ -26,7 +26,7 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
   /** DataFrame over a logical plan (the private[sql] `Dataset.ofRows`),
-    * for operators that add their own plan node (graft.plans.StopScan).
+    * for operators that add their own plan node (graft.plans.UidScan).
     */
   def ofRows(spark: SparkSession,
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =

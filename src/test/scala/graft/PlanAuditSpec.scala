@@ -21,11 +21,9 @@ class PlanAuditSpec extends SparkSpec {
     "Exchange hashpartitioning".r.findAllIn(plan).size
 
   test("stop pipeline: ONE uid exchange end to end (pings -> medians)") {
-    // pings ordinal window, stop-detect lead/lag windows, run-id cumsum,
-    // and the median aggregate all key on the same uid attribute: the
-    // (uid, stop_events) aggregate is satisfied by the uid hash
-    // distribution (subset clustering), so Catalyst plans exactly one
-    // shuffle for the entire pipeline.
+    // the stop scan and the median kernel are two uid kernels on the same
+    // uid attribute: the medians reuse the scan's uid hash partitioning,
+    // so Catalyst plans exactly one shuffle for the entire pipeline.
     val medians = StopDetect.eventMedians(
       StopDetect.stopEvents(Tables.pings(spark, sf), StopDetect.Params()))
     val plan = planOf(medians)
@@ -35,8 +33,8 @@ class PlanAuditSpec extends SparkSpec {
       s"the single exchange must key on uid:\n$plan")
   }
 
-  test("stop pipeline: one sort, one StopScanExec, no window") {
-    import graft.plans.StopScanExec
+  test("stop pipeline: one sort, two UidScanExecs, no window") {
+    import graft.plans.UidScanExec
     import org.apache.spark.sql.execution.{GraftPlanAudit, SortExec}
     import org.apache.spark.sql.execution.window.WindowExec
     import spark.implicits._
@@ -56,18 +54,51 @@ class PlanAuditSpec extends SparkSpec {
     assert(n(_.isInstanceOf[SortExec]) === 1,
       s"one (uid, timestamp) sort must serve the scan and the medians:\n" +
         planOf(medians))
-    assert(n(_.isInstanceOf[StopScanExec]) === 1, planOf(medians))
+    assert(n(_.isInstanceOf[UidScanExec]) === 2, planOf(medians))
   }
 
   test("stopEvents installs its planner strategy once per session") {
-    import graft.plans.StopScanStrategy
+    import graft.plans.UidScanStrategy
     import spark.implicits._
     val pings = Seq(("u", 19.0, -99.0, 0L))
       .toDF("uid", "latitude", "longitude", "timestamp")
     StopDetect.stopEvents(pings, StopDetect.Params())
     StopDetect.stopEvents(pings, StopDetect.Params())
     assert(spark.experimental.extraStrategies
-      .count(_ == StopScanStrategy) === 1)
+      .count(_ == UidScanStrategy) === 1)
+  }
+
+  test("pings to wide export: ONE uid exchange, one sort, no encoder path") {
+    import graft.operators.HomeWork
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{AppendColumnsExec, GraftPlanAudit, MapGroupsExec, SortExec}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val hw = HomeWork.Params(startHourDay = 7, endHourDay = 21,
+      startWorkingHour = 8, endWorkingHour = 18, spanPeriodHome = 0.1,
+      spanPeriodWork = 0.1, totalDays = Some(10L))
+    val wide = PolaRoam.hwWide(PolaRoam.fullPipeline(
+      PipelineFixture.pings(spark), PolaRoam.Config(), hw))
+    assert(wide.collect().length === 2)
+    def n(f: org.apache.spark.sql.execution.SparkPlan => Boolean) =
+      GraftPlanAudit.count(wide)(f)
+    assert(GraftPlanAudit.shuffleCount(wide) === 1,
+      s"stops, medians, DBSCAN, labels and export share one exchange:\n" +
+        planOf(wide))
+    val keys = GraftPlanAudit.collectFinal(wide) {
+      case e: ShuffleExchangeLike => Some(e.outputPartitioning)
+      case _ => None
+    }
+    assert(keys.collect { case h: HashPartitioning =>
+      h.expressions.collect { case a: Attribute => a.name } } === Seq(Seq("uid")),
+      planOf(wide))
+    assert(n(_.isInstanceOf[SortExec]) === 1,
+      s"one (uid, timestamp) sort must serve the whole pipeline:\n" +
+        planOf(wide))
+    assert(n(p => p.isInstanceOf[AppendColumnsExec] ||
+      p.isInstanceOf[MapGroupsExec] || p.isInstanceOf[ObjectHashAggregateExec])
+      === 0, s"no typed per-user path:\n${planOf(wide)}")
   }
 
   test("q01 scan: filter reaches PushedFilters, schema is pruned") {

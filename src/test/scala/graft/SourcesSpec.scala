@@ -23,15 +23,6 @@ class IngestSpec extends SparkSpec {
     assert(got.forall(_ >= 0L))
   }
 
-  test("uidHash60: deprecated 60-bit form still reads pre-r13 data") {
-    val got = Seq("alice", "bob").toDF("uid")
-      .select((Ingest.uidHash60(col("uid")): @annotation.nowarn).as("h"))
-      .collect().map(_.getLong(0))
-    // low 15 hex digits of sha256 (no 63-bit mask)
-    assert(got(0) === (1418477593466597008L & ((1L << 60) - 1)))
-    assert(got.forall(h => h >= 0L && h < (1L << 60)))
-  }
-
   test("localize: wall-clock shift and date partition column") {
     // 2024-01-15 03:30 UTC = 2024-01-14 21:30 in Mexico City (UTC-6)
     val ts = 1705289400L
