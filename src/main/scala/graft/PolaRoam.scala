@@ -73,7 +73,7 @@ object PolaRoam {
     */
   def computeDbscan(medians: DataFrame, c: Config): DataFrame =
     StopClusters.cluster(medians, StopClusters.Params(
-      c.r2, 2, c.distance_metric, c.min_spacial_resolution))
+      c.r2, c.distance_metric, c.min_spacial_resolution))
 
   /** event medians -> stop_locations via the community mode: the same
     * radius graph as the reference (models.py:179-204) partitioned by

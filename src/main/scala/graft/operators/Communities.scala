@@ -74,8 +74,9 @@ object Communities {
     *
     * Two further ENGINE-PORTABLE columns make the gate fully
     * oracle-checkable (not just rows-only): `cc_locations` is the stop's
-    * r2-radius connected-component label — deterministic and
-    * SQL-recomputable (the q37 recursive-CTE pattern), first-appearance
+    * r2-radius connected-component label ([[NeighborSearch.components]],
+    * the DBSCAN kernel's labeller) — deterministic and SQL-recomputable
+    * (the q37 recursive-CTE pattern), first-appearance
     * canonicalized, singletons −1, computed over the same
     * maxGroupSize-trimmed node set as the partition (overflow nodes −1;
     * the oracle CTE applies the identical trim) — and `refines` certifies the map
@@ -123,7 +124,9 @@ object Communities {
           // index < maxGroupSize in first-appearance order), so the whale
           // guard's O(nodes^2) edge bound holds on the certified path too
           // (an untrimmed certificate adjacency would re-open it)
-          val cc = connectedComponents(adj) ++ trimmed
+          val cc = NeighborSearch.components(n)(edge =>
+            adj.indices.foreach(i => adj(i).foreach(e => edge(i, e._1)))) ++
+            trimmed
           // refinement: each found community sits inside exactly one CC
           val refines = (0 until n).filter(nodeLabels(_) != -1L)
             .groupBy(nodeLabels(_)).values.forall(_.map(cc(_)).distinct.size == 1)
@@ -226,35 +229,6 @@ object Communities {
       iter += 1
     }
     lbl
-  }
-
-  /** Connected components of a radius-graph adjacency, canonicalized the
-    * oracle's way: isolated nodes −1; components numbered 0.. in order of
-    * their smallest member node index (a node-index-order scan assigns
-    * first-appearance labels, which is the same order). Engine-portable —
-    * matches the q37/q82 recursive-CTE oracle bit-for-bit.
-    */
-  private[graft] def connectedComponents(
-      adj: Array[List[(Int, Double)]]): Array[Long] = {
-    val n = adj.length
-    val out = Array.fill(n)(-1L)
-    var next = 0L
-    var s = 0
-    while (s < n) {
-      if (out(s) == -1L && adj(s).nonEmpty) {
-        val stack = scala.collection.mutable.Stack(s)
-        out(s) = next
-        while (stack.nonEmpty) {
-          val v = stack.pop()
-          adj(v).foreach { case (j, _) =>
-            if (out(j) == -1L) { out(j) = next; stack.push(j) }
-          }
-        }
-        next += 1L
-      }
-      s += 1
-    }
-    out
   }
 
   /** Canonicalize raw module ids: 0-based by first appearance; isolated

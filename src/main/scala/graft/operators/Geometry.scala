@@ -1,7 +1,12 @@
 package graft.operators
 
+import graft.plans.{UidKernel, UidScan}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, StructField}
 
 /** Per-cluster geometry utilities (M5/M6: max pairwise distance
   * src/polaroam/utils.py:136-149 and convex hull utils.py:151-165 — the
@@ -9,15 +14,6 @@ import org.apache.spark.sql.functions._
   * surface, not on the main pipelines).
   */
 object Geometry {
-
-  final case class PointRow(uid: String, stop_locations: Long,
-                            latitude: Double, longitude: Double)
-
-  final case class HullRow(uid: String, stop_locations: Long,
-                           hull_lats: Array[Double],
-                           hull_lons: Array[Double],
-                           max_pair_dist: Double,
-                           degenerate: Boolean)
 
   /** Andrew monotone chain; degenerate inputs (where Qhull would raise —
     * fewer than 3 distinct points, or all collinear) fall back to the
@@ -89,8 +85,8 @@ object Geometry {
   private def degenerateSquare(pts: Array[(Double, Double)],
                                sortedDistinct: Array[(Double, Double)])
   : Array[(Double, Double)] = {
-    // Sum in sorted order (duplicates kept, like points.mean(0)): the
-    // mapGroups iterator's arrival order varies run to run, and a
+    // Sum in sorted order (duplicates kept, like points.mean(0)): a
+    // cluster's arrival order in the scan varies run to run, and a
     // different double summation order shifts the centroid by ulps —
     // enough to flip a rounded 6th decimal at a boundary. Sorting first
     // makes the kernel's output a function of the point MULTISET alone.
@@ -109,34 +105,79 @@ object Geometry {
   }
 
   /** points(uid, stop_locations, latitude, longitude) -> per (uid,
-    * cluster): hull vertices + max pairwise haversine distance (meters).
+    * cluster): hull vertices + max pairwise haversine distance (meters),
+    * in (uid, stop_locations) order. On [[StopClusters.cluster]]'s output,
+    * already uid-partitioned and sorted by stop_locations, the hull scan
+    * adds no exchange and no sort.
     */
-  def clusterHulls(points: DataFrame): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points
-      .select("uid", "stop_locations", "latitude", "longitude")
-      .as[PointRow]
-      .groupByKey(r => (r.uid, r.stop_locations))
-      .mapGroups { (key: (String, Long), it: Iterator[PointRow]) =>
-        val (uid, loc) = key
-        val pts = it.map(r => (r.latitude, r.longitude)).toArray
-        val (hull, dpts, degenerate) = hullAndDiameterPoints(pts)
-        var maxD = 0.0
-        var i = 0
-        while (i < dpts.length) {
-          var j = i + 1
-          while (j < dpts.length) {
-            val d = StopDetect.distance("haversine",
-              dpts(i)._1, dpts(i)._2, dpts(j)._1, dpts(j)._2)
-            if (d > maxD) maxD = d
-            j += 1
+  def clusterHulls(points: DataFrame): DataFrame =
+    UidScan.frame(points.select("uid", "stop_locations", "latitude",
+      "longitude"), Hulls)
+
+  /** The hull of each run of equal stop_locations in a uid's sorted rows:
+    * keeps (uid, stop_locations) of the run's first row. A null
+    * stop_locations or coordinate is rejected.
+    */
+  private case object Hulls extends UidKernel {
+    override def sortedBy: Seq[String] = Seq("stop_locations")
+    override def keep(in: Seq[Attribute]): Seq[Attribute] =
+      Seq("uid", "stop_locations").map(UidScan.column(in, _))
+    override def adds(in: Seq[Attribute]): Seq[StructField] = Seq(
+      StructField("hull_lats", ArrayType(DoubleType, containsNull = false),
+        nullable = false),
+      StructField("hull_lons", ArrayType(DoubleType, containsNull = false),
+        nullable = false),
+      StructField("max_pair_dist", DoubleType, nullable = false),
+      StructField("degenerate", BooleanType, nullable = false))
+    override def emitsSortedBy: Option[Seq[String]] = Some(Seq("stop_locations"))
+
+    override def open(in: Seq[Attribute], out: UnsafeProjection)
+    : Iterator[InternalRow] => Iterator[InternalRow] = {
+      val joined = new JoinedRow
+      val Seq(loc, lat, lon) = Seq("stop_locations", "latitude", "longitude")
+        .map(UidScan.ordinal(in, _))
+      val (locOf, latOf, lonOf) = (UidScan.longs(in, "stop_locations"),
+        UidScan.doubles(in, "latitude"), UidScan.doubles(in, "longitude"))
+      rows => {
+        val it = rows.buffered
+        new Iterator[InternalRow] {
+          def hasNext: Boolean = it.hasNext
+          def next(): InternalRow = {
+            val first = it.head.copy()
+            val key = locOf(first)
+            val pts = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+            while (it.hasNext && locOf(it.head) == key) {
+              val r = it.next()
+              require(!(r.isNullAt(loc) || r.isNullAt(lat) || r.isNullAt(lon)),
+                s"null stop_locations or coordinate in hull points: $r")
+              pts += ((latOf(r), lonOf(r)))
+            }
+            val (hull, dpts, degenerate) = hullAndDiameterPoints(pts.toArray)
+            out(joined(first, InternalRow(
+              new GenericArrayData(hull.map(_._1)),
+              new GenericArrayData(hull.map(_._2)),
+              diameter(dpts), degenerate)))
           }
-          i += 1
         }
-        HullRow(uid, loc, hull.map(_._1), hull.map(_._2), maxD, degenerate)
       }
-      .toDF()
+    }
+  }
+
+  /** Max pairwise haversine distance (meters) of `pts`. */
+  private def diameter(pts: Array[(Double, Double)]): Double = {
+    var maxD = 0.0
+    var i = 0
+    while (i < pts.length) {
+      var j = i + 1
+      while (j < pts.length) {
+        val d = StopDetect.distance("haversine",
+          pts(i)._1, pts(i)._2, pts(j)._1, pts(j)._2)
+        if (d > maxD) maxD = d
+        j += 1
+      }
+      i += 1
+    }
+    maxD
   }
 
   /** Relational per-cluster diameter: max pairwise haversine distance via
@@ -147,10 +188,8 @@ object Geometry {
     *
     * The self-join and the n_points window share one hash exchange on
     * (uid, stop_locations), co-locating each cluster in a single task.
-    * Per-cluster cost is quadratic in cluster size — bounded by the
-    * upstream whale guard (StopClusters maxGroupSize), the same contract
-    * as the DBSCAN kernel itself. Self-pairs contribute distance 0, so
-    * singletons get diameter 0.
+    * Per-cluster cost is quadratic in cluster size. Self-pairs contribute
+    * distance 0, so singletons get diameter 0.
     */
   def clusterDiameters(points: DataFrame, wideThresholdM: Double)
   : DataFrame = {

@@ -2,7 +2,8 @@ package graft.operators
 
 /** Exact eps-neighbor pair enumeration for the per-user geo kernels
   * (DBSCAN in [[StopClusters]], community graph in [[Communities]] —
-  * reference BallTree.query_radius, utils.py:32-65).
+  * reference BallTree.query_radius, utils.py:32-65), and the one
+  * connected-component labeller both kernels read the pairs with.
   *
   * The grid is a PRUNING index only: every candidate pair is rechecked
   * with the caller's exact metric, so the emitted pair set is identical
@@ -17,7 +18,8 @@ package graft.operators
   * span, eps <= 0) and small groups fall back to the allocation-free
   * O(n²) scan. Per-pair work is output-sized for sparse whales; a dense
   * group (everything within eps) is Theta(n²) pairs under ANY index, so
-  * the kernels keep their maxGroupSize memory cap.
+  * its time stays quadratic (memory is O(n): [[components]] keeps no
+  * pair).
   */
 private[graft] object NeighborSearch {
 
@@ -95,6 +97,40 @@ private[graft] object NeighborSearch {
         buckets.get((kx + dx, ky + dy)).foreach(cross(pts, _))
       }
     }
+  }
+
+  /** Connected components of the graph on nodes `0 until n` whose edges
+    * `edges` passes to its argument: a union-find whose root is the
+    * component's smallest index. Components are labelled 0, 1, … by first
+    * appearance in index order; a node with no edge is −1. With
+    * `min_samples = 2` this IS DBSCAN (SURVEY §7 trap 6), and it is the
+    * q37/q82 recursive-CTE oracle's labelling.
+    */
+  def components(n: Int)(edges: ((Int, Int) => Unit) => Unit): Array[Long] = {
+    val parent = Array.tabulate(n)(identity)
+    val linked = new Array[Boolean](n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    edges { (a, b) =>
+      linked(a) = true; linked(b) = true
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    // a root precedes its members, so it is labelled before they read it
+    val out = Array.fill(n)(-1L)
+    var next = 0L
+    var i = 0
+    while (i < n) {
+      if (linked(i)) {
+        val r = find(i)
+        if (r == i) { out(i) = next; next += 1 } else out(i) = out(r)
+      }
+      i += 1
+    }
+    out
   }
 
   /** (latCell, lonCell) in coordinate units, or null when the grid bounds

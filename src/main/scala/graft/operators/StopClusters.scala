@@ -20,26 +20,24 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
   * labels the pipeline shuffles and sorts once. The downsample around it
   * is relational. Per-user groups are intrinsically small
   * (stops per human per period); the [[downsample]] grid-snap stage is the
-  * reference's own whale-group cap (models.py:60-87); the neighbor scan
-  * itself is grid-pruned ([[NeighborSearch]]) so sparse whales cost
+  * reference's own whale-group reduction (models.py:60-87); the neighbor
+  * scan itself is grid-pruned ([[NeighborSearch]]) so sparse whales cost
   * near-linear time, not O(n²).
   *
-  * Determinism contract (SURVEY §7 trap 6): with min_samples=2, DBSCAN
-  * degenerates to connected components of the eps-neighbor graph (isolated
-  * points = noise −1). Labels are canonicalized by first appearance: the
-  * component containing the smallest stop_events id gets 0, etc. For
-  * min_samples>2 a full DBSCAN runs; border points join the cluster of
-  * their first core neighbor in stop_events order (sklearn's assignment is
-  * scan-order too, but we document ours rather than chase its internals).
+  * Determinism contract (SURVEY §7 trap 6): the reference always runs
+  * min_samples=2, where DBSCAN is exactly the connected components of the
+  * eps-neighbor graph (isolated points = noise −1), so the kernel is
+  * [[NeighborSearch.components]] over [[NeighborSearch.pairs]]. Labels are
+  * canonicalized by first appearance: the component containing the
+  * smallest stop_events id gets 0, etc. Memory is O(n) per user; a dense
+  * user's time is O(pairs within eps).
   */
 object StopClusters {
 
   final case class Params(
       eps: Double = 20.0,
-      minSamples: Int = 2,
       metric: String = "haversine",
-      minSpatialResolution: Double = 0.0,
-      maxGroupSize: Int = 20000)
+      minSpatialResolution: Double = 0.0)
 
   /** Grid-snap + dedup reduction before the O(n²) kernel (reference
     * _downsample, models.py:60-87). resolution <= 0 is the identity.
@@ -52,82 +50,12 @@ object StopClusters {
       .withColumn("longitude",
         GeoFunctions.gridSnap(col("longitude"), resolution))
 
-  /** Per-group DBSCAN: returns canonical 0-based labels (-1 = noise) for
-    * points sorted by stop_events.
-    */
-  private def labelGroup(latA: Array[Double], lonA: Array[Double],
-                         p: Params): Array[Long] = {
-    val n = latA.length
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    def union(a: Int, b: Int): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    // neighbor counts (self included, as in sklearn); grid-pruned exact
-    // pair enumeration — identical pair set to the O(n²) scan
-    val degree = Array.fill(n)(1)
-    val neighbors = Array.fill(n)(List.empty[Int])
-    NeighborSearch.pairs(latA, lonA, p.eps, p.metric,
-        StopDetect.distance(p.metric, _, _, _, _), (i, j, _) => {
-      degree(i) += 1; degree(j) += 1
-      neighbors(i) ::= j; neighbors(j) ::= i
-    })
-    var i = 0
-    val core = degree.map(_ >= p.minSamples)
-    // core-core edges define components
-    i = 0
-    while (i < n) {
-      if (core(i)) neighbors(i).foreach(j => if (core(j)) union(i, j))
-      i += 1
-    }
-    // border points: first (lowest-index) core neighbor's component
-    val owner = Array.fill(n)(-1)
-    i = 0
-    while (i < n) {
-      if (core(i)) owner(i) = find(i)
-      else neighbors(i).sorted.find(core(_)) match {
-        case Some(c) => owner(i) = find(c)
-        case None    => // noise
-      }
-      i += 1
-    }
-    // canonical labels: 0-based by first appearance (row order = sorted
-    // stop_events)
-    val labelOf = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
-    i = 0
-    while (i < n) {
-      if (owner(i) >= 0 && !labelOf.contains(owner(i)))
-        labelOf(owner(i)) = labelOf.size.toLong
-      i += 1
-    }
-    Array.tabulate(n)(k => if (owner(k) >= 0) labelOf(owner(k)) else -1L)
-  }
-
-  /** Whale-user guard: the grid prune makes the scan near-linear, but a
-    * DENSE whale (everything within eps) still materializes O(n²)
-    * neighbor-list entries, and one uid with millions of medians would
-    * blow task memory at cluster scale. Rows
-    * beyond `maxGroupSize` (in stop_events order) are excluded from
-    * clustering and label as noise (−1) — the same degradation the
-    * reference reaches via its min_spacial_resolution downsample, but
-    * enforced rather than hoped for. Returns how many rows to cluster.
-    */
-  private def cappedSize(g: MedianGroup, p: Params): Int =
-    if (g.rows.length <= p.maxGroupSize) g.rows.length
-    else {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"uid ${g.uid}: ${g.rows.length} medians exceed " +
-          s"maxGroupSize=${p.maxGroupSize}; clustering the first " +
-          s"${p.maxGroupSize} by stop_events, labeling the rest noise")
-      p.maxGroupSize
-    }
+  /** DBSCAN labels (min_samples = 2) of points in row order. */
+  private[graft] def dbscanLabels(lat: Array[Double], lon: Array[Double],
+                                  p: Params): Array[Long] =
+    NeighborSearch.components(lat.length)(edge =>
+      NeighborSearch.pairs(lat, lon, p.eps, p.metric,
+        StopDetect.distance(p.metric, _, _, _, _), (i, j, _) => edge(i, j)))
 
   private def exactMedian(xs: Array[Double]): Double = {
     java.util.Arrays.sort(xs)
@@ -188,9 +116,7 @@ object StopClusters {
       StructField("cluster_longitude", DoubleType, nullable = false))
     override def emitsSortedBy: Option[Seq[String]] = Some(Seq("stop_locations"))
     override def emit(g: MedianGroup): Iterator[(Int, InternalRow)] = {
-      val n = cappedSize(g, p)
-      val labels = labelGroup(g.lat.take(n), g.lon.take(n), p) ++
-        Array.fill(g.rows.length - n)(-1L)
+      val labels = dbscanLabels(g.lat, g.lon, p)
       val stats = labels.indices.groupBy(labels(_)).collect {
         case (lbl, ks) if lbl >= 0 => lbl -> ((ks.size.toLong,
           exactMedian(ks.map(g.lat(_)).toArray),
@@ -204,15 +130,6 @@ object StopClusters {
       }
     }
   }
-
-  /** event_medians(uid, stop_events, latitude, longitude, start_timestamp,
-    * end_timestamp) -> + stop_locations (−1 = noise): [[cluster]]'s
-    * kernel without the downsample, its stats projected away.
-    */
-  def assignLocations(medians: DataFrame, p: Params): DataFrame =
-    UidScan.frame(medianInput(medians), Dbscan(p))
-      .select("uid", "stop_events", "latitude", "longitude",
-        "start_timestamp", "end_timestamp", "stop_locations")
 
   /** Full stage: downsample -> per-user clustering -> cluster stats
     * (+ stop_locations, cluster_counts, cluster_latitude,

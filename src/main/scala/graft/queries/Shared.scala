@@ -28,7 +28,7 @@ private[graft] object Shared {
     maxStayingTime = 7 * 86400L, metric = "haversine")
 
   private[graft] val clusterParams = StopClusters.Params(
-    eps = 100.0, minSamples = 2, metric = "haversine")
+    eps = 100.0, metric = "haversine")
 
   // Production-config home/work params (reference
   // get_stops_and_clusters.py:118-128), Mexico City tz (fixed UTC-6 since

@@ -56,21 +56,23 @@ object Export {
       .option("compression", "gzip")
       .csv(path)
 
-  /** Token-balanced sharded parquet: documents are packed into shards of
-    * ~`budgetTokens` each (contiguous in `orderCols` order, so shard
-    * membership is deterministic and re-runs produce identical files) and
-    * written one file per shard via partitionBy("shard"). The "size the
-    * output files" step of a corpus build: downstream trainers stream
-    * equal-work files instead of whatever partition sizes the last
-    * shuffle happened to leave.
-    *
-    * Shard assignment = [[graft.operators.Packing.packChunks]]'s pack id
-    * (range exchange + per-partition cumsum — no global window); the
-    * repartition keys each shard's rows to one task so each shard
-    * directory holds exactly one parquet file. A doc larger than
-    * `budgetTokens` gets its own shard(s) boundary like any straddler —
-    * the shard where its first token lands.
+  /** Recursive on-disk byte total of a parquet directory — the sizing
+    * input for [[compactParquet]] and the streaming mat-view state
+    * writer. One FS listing, no data read.
     */
+  def parquetBytes(spark: SparkSession, dir: String): Long = {
+    // Hadoop FileSystem, not java.io: dir may be s3a://, hdfs://, …
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val it = fs.listFiles(p, true)
+    var total = 0L
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.getPath.getName.endsWith(".parquet")) total += f.getLen
+    }
+    total
+  }
+
   /** Small-file compaction: rewrite a parquet directory into
     * ceil(bytes / targetBytes) balanced files. THE background maintenance
     * op of any long-lived ingest: streaming sinks and per-day jobs leave
@@ -91,23 +93,6 @@ object Export {
     * oracle); row ORDER is not a parquet-directory contract and is not
     * preserved.
     */
-  /** Recursive on-disk byte total of a parquet directory — the sizing
-    * input for [[compactParquet]] and the streaming mat-view state
-    * writer. One FS listing, no data read.
-    */
-  def parquetBytes(spark: SparkSession, dir: String): Long = {
-    // Hadoop FileSystem, not java.io: dir may be s3a://, hdfs://, …
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val it = fs.listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) total += f.getLen
-    }
-    total
-  }
-
   def compactParquet(spark: SparkSession, srcDir: String, dstDir: String,
                      targetBytes: Long = 128L << 20): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
@@ -118,6 +103,21 @@ object Export {
     n
   }
 
+  /** Token-balanced sharded parquet: documents are packed into shards of
+    * ~`budgetTokens` each (contiguous in `orderCols` order, so shard
+    * membership is deterministic and re-runs produce identical files) and
+    * written one file per shard via partitionBy("shard"). The "size the
+    * output files" step of a corpus build: downstream trainers stream
+    * equal-work files instead of whatever partition sizes the last
+    * shuffle happened to leave.
+    *
+    * Shard assignment = [[graft.operators.Packing.packChunks]]'s pack id
+    * (range exchange + per-partition cumsum — no global window); the
+    * repartition keys each shard's rows to one task so each shard
+    * directory holds exactly one parquet file. A doc larger than
+    * `budgetTokens` gets its own shard(s) boundary like any straddler —
+    * the shard where its first token lands.
+    */
   def parquetShardedByTokens(docs: DataFrame, tokensCol: String,
                              budgetTokens: Long, path: String,
                              orderCols: org.apache.spark.sql.Column*)

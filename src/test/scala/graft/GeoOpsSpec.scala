@@ -340,22 +340,24 @@ class PackingSpec extends SparkSpec {
 class WhaleGuardSpec extends SparkSpec {
   import spark.implicits._
 
-  test("DBSCAN kernel caps whale groups; overflow rows become noise") {
-    // 50 stops in one tight blob; cap at 10 => first 10 cluster, rest -1
-    val rows = (0 until 50).map { i =>
-      ("whale", i.toLong, 19.0 + i * 1e-6, -99.0, i * 1000L, i * 1000L + 100L)
+  test("DBSCAN kernel labels every median of a sparse 25,000-median whale") {
+    // 1,250 sites ~1.1 km apart on a 50 x 25 grid, each visited 20 times
+    // within a metre: median k sits at site k % 1250, whose first
+    // appearance is row k % 1250, so that is its label, past row 20,000 too
+    val sites = 1250
+    val rows = (0 until 25000).map { k =>
+      val s = k % sites
+      ("whale", k.toLong, 19.0 + (s / 50) * 0.01 + (k / sites) * 4e-7,
+        -99.0 + (s % 50) * 0.01, k * 1000L, k * 1000L + 100L)
     }.toDF("uid", "stop_events", "latitude", "longitude",
       "start_timestamp", "end_timestamp")
-    val got = StopClusters.cluster(rows,
-      StopClusters.Params(eps = 50.0, maxGroupSize = 10))
+    val got = StopClusters.cluster(rows, StopClusters.Params(eps = 20.0))
       .orderBy("stop_events")
       .collect().map(_.getAs[Long]("stop_locations"))
-    assert(got.take(10).forall(_ === 0L))
-    assert(got.drop(10).forall(_ === -1L))
-    // uncapped control: everything clusters
-    val full = StopClusters.cluster(rows, StopClusters.Params(eps = 50.0))
-      .collect().map(_.getAs[Long]("stop_locations"))
-    assert(full.forall(_ === 0L))
+    assert(got.length === 25000)
+    val wrong = got.indices.filter(k => got(k) != k % sites)
+    assert(wrong.size === 0, "mislabeled, first: " +
+      wrong.take(5).map(k => s"$k -> ${got(k)}").mkString(", "))
   }
 
   test("community kernel caps whale groups at the unique-node level") {

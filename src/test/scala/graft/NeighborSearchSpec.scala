@@ -165,7 +165,7 @@ class NeighborSearchSpec extends SparkSpec {
     }.toSeq.toDF("uid", "stop_events", "latitude", "longitude",
       "start_timestamp", "end_timestamp")
     val got = StopClusters.cluster(df,
-      StopClusters.Params(eps, 2, "haversine", 0.0))
+      StopClusters.Params(eps, "haversine", 0.0))
       .orderBy("stop_events")
       .collect().map(_.getAs[Long]("stop_locations"))
     // same partition up to relabeling, same noise set
@@ -184,5 +184,95 @@ class NeighborSearchSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  /** The general DBSCAN kernel the component labeller replaced, verbatim
+    * but for `minSamples`, fixed at the reference's 2.
+    */
+  private def labelGroupRef(latA: Array[Double], lonA: Array[Double],
+                            eps: Double, metric: String): Array[Long] = {
+    val minSamples = 2
+    val n = latA.length
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val degree = Array.fill(n)(1)
+    val neighbors = Array.fill(n)(List.empty[Int])
+    NeighborSearch.pairs(latA, lonA, eps, metric,
+        graft.operators.StopDetect.distance(metric, _, _, _, _), (i, j, _) => {
+      degree(i) += 1; degree(j) += 1
+      neighbors(i) ::= j; neighbors(j) ::= i
+    })
+    var i = 0
+    val core = degree.map(_ >= minSamples)
+    i = 0
+    while (i < n) {
+      if (core(i)) neighbors(i).foreach(j => if (core(j)) union(i, j))
+      i += 1
+    }
+    val owner = Array.fill(n)(-1)
+    i = 0
+    while (i < n) {
+      if (core(i)) owner(i) = find(i)
+      else neighbors(i).sorted.find(core(_)) match {
+        case Some(c) => owner(i) = find(c)
+        case None    =>
+      }
+      i += 1
+    }
+    val labelOf = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
+    i = 0
+    while (i < n) {
+      if (owner(i) >= 0 && !labelOf.contains(owner(i)))
+        labelOf(owner(i)) = labelOf.size.toLong
+      i += 1
+    }
+    Array.tabulate(n)(k => if (owner(k) >= 0) labelOf(owner(k)) else -1L)
+  }
+
+  test("component labels equal the general DBSCAN kernel at min_samples 2") {
+    // groups on both sides of GridThreshold, both metrics; every 5th point
+    // repeats an earlier one (duplicates, zero-distance pairs)
+    val rnd = new scala.util.Random(41)
+    val sizes = Seq(1, 2, 40, NeighborSearch.GridThreshold - 1,
+      NeighborSearch.GridThreshold, 300, 1200)
+    for (n <- sizes; metric <- Seq("haversine", "euclidean"); trial <- 0 until 3) {
+      // a square holding about one eps-neighbor per point
+      val (eps, origin, unit) =
+        if (metric == "haversine") (25.0, (19.4, -99.1), 1 / 111000.0)
+        else (0.4, (0.0, 0.0), 1.0)
+      val side = eps * math.sqrt(3.0 * n) * unit
+      val lat = new Array[Double](n); val lon = new Array[Double](n)
+      for (k <- 0 until n) {
+        if (k % 5 == 4) {
+          val src = rnd.nextInt(k); lat(k) = lat(src); lon(k) = lon(src)
+        } else {
+          lat(k) = origin._1 + rnd.nextDouble() * side
+          lon(k) = origin._2 + rnd.nextDouble() * side
+        }
+      }
+      val want = labelGroupRef(lat, lon, eps, metric)
+      val got = StopClusters.dbscanLabels(lat, lon,
+        StopClusters.Params(eps, metric))
+      assert(got.toSeq === want.toSeq, s"n=$n metric=$metric trial=$trial")
+      if (n >= 40) assert(want.exists(_ >= 0) && want.contains(-1L),
+        s"n=$n metric=$metric: the group must mix clusters and noise")
+    }
+  }
+
+  test("components: first-appearance labels, roots at the smallest index") {
+    val edges = Seq((5, 2), (4, 3), (3, 1), (7, 6), (6, 5))
+    val got = NeighborSearch.components(9)(edge =>
+      edges.foreach { case (a, b) => edge(a, b) })
+    assert(got.toSeq === Seq(-1L, 0L, 1L, 0L, 0L, 1L, 1L, 1L, -1L))
   }
 }

@@ -101,6 +101,35 @@ class PlanAuditSpec extends SparkSpec {
       === 0, s"no typed per-user path:\n${planOf(wide)}")
   }
 
+  test("cluster hulls: the uid exchange and sort of the clusters serve the hulls") {
+    import graft.operators.{Geometry, StopClusters}
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{AppendColumnsExec, GraftPlanAudit, MapGroupsExec, SortExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val clusters = StopClusters.cluster(StopDetect.eventMedians(
+      StopDetect.stopEvents(PipelineFixture.pings(spark), StopDetect.Params())),
+      StopClusters.Params())
+    val hulls = Geometry.clusterHulls(
+      clusters.filter(col("stop_locations") =!= -1L))
+    assert(hulls.collect().length === 4)
+    def n(f: org.apache.spark.sql.execution.SparkPlan => Boolean) =
+      GraftPlanAudit.count(hulls)(f)
+    val keys = GraftPlanAudit.collectFinal(hulls) {
+      case e: ShuffleExchangeLike => Some(e.outputPartitioning)
+      case _ => None
+    }
+    assert(GraftPlanAudit.shuffleCount(hulls) === 1, planOf(hulls))
+    assert(keys.collect { case h: HashPartitioning =>
+      h.expressions.collect { case a: Attribute => a.name } } === Seq(Seq("uid")),
+      planOf(hulls))
+    assert(n(_.isInstanceOf[SortExec]) === 1,
+      s"the clusters leave sorted by (uid, stop_locations):\n${planOf(hulls)}")
+    assert(n(p => p.isInstanceOf[AppendColumnsExec] ||
+      p.isInstanceOf[MapGroupsExec]) === 0,
+      s"no typed per-cluster path:\n${planOf(hulls)}")
+  }
+
   test("q01 scan: filter reaches PushedFilters, schema is pruned") {
     val plan = SparkEntry.queries("q01_scan_filter")(spark, sf)
       .queryExecution.executedPlan.treeString(verbose = true)

@@ -12,7 +12,7 @@ class StopClustersSpec extends SparkSpec {
 
   test("two nearby stops cluster, isolated stop is noise") {
     val p = StopClusters.Params(eps = 100.0)
-    val got = StopClusters.assignLocations(medians(
+    val got = StopClusters.cluster(medians(
       ("u", 1L, 19.0000, -99.0),
       ("u", 2L, 19.0005, -99.0),   // ~55m from stop 1
       ("u", 3L, 19.0500, -99.0)),  // ~5.5km away
@@ -25,7 +25,7 @@ class StopClustersSpec extends SparkSpec {
 
   test("labels are 0-based by first appearance per user") {
     val p = StopClusters.Params(eps = 100.0)
-    val got = StopClusters.assignLocations(medians(
+    val got = StopClusters.cluster(medians(
       ("u", 1L, 19.00, -99.0), ("u", 2L, 19.05, -99.0),
       ("u", 3L, 19.00, -99.0), ("u", 4L, 19.05, -99.0),
       ("v", 1L, 20.00, -98.0), ("v", 2L, 20.00, -98.0)),
@@ -35,19 +35,6 @@ class StopClustersSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(got === Array(("u", 0L), ("u", 1L), ("u", 0L), ("u", 1L),
       ("v", 0L), ("v", 0L)))
-  }
-
-  test("minSamples=3: pair is noise, triple is a cluster") {
-    val p = StopClusters.Params(eps = 100.0, minSamples = 3)
-    val got = StopClusters.assignLocations(medians(
-      ("u", 1L, 19.0000, -99.0), ("u", 2L, 19.0005, -99.0),
-      ("u", 3L, 19.1000, -99.0), ("u", 4L, 19.1005, -99.0),
-      ("u", 5L, 19.1002, -99.0)),
-      p)
-      .orderBy("stop_events")
-      .select("stop_events", "stop_locations")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got === Array((1L, -1L), (2L, -1L), (3L, 0L), (4L, 0L), (5L, 0L)))
   }
 
   test("cluster stats: counts and medians; noise keeps own coords") {
