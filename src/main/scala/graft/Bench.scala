@@ -62,15 +62,11 @@ object Bench {
         case _ => Map.empty[String, Double]
       }
       val passes = obj("passes")
-      val quiet = obj("quiet")
-      // index of the pass the recorded min came from: the fastest quiet
-      // pass, or the fastest overall when none is
-      val bestIdx = wall.keys.flatMap { n =>
-        val ws = passes.getOrElse(n, Nil).map(dbl).zipWithIndex
-        val q = quiet.getOrElse(n, ws.map(_ => JBool(true)))
-        val quietWs = ws.zip(q).collect { case (w, JBool(true)) => w }
-        (if (quietWs.nonEmpty) quietWs else ws).minByOption(_._1)
-          .map(n -> _._2)
+      // index of the pass the recorded min came from: the one that equals
+      // it (older records took the fastest quiet pass, not the fastest)
+      val bestIdx = wall.flatMap { case (n, w) =>
+        passes.getOrElse(n, Nil).map(dbl).zipWithIndex
+          .minByOption(p => math.abs(p._1 - w)).map(n -> _._2)
       }
       def atBest(k: String): Map[String, Double] = {
         val m = obj(k)

@@ -153,7 +153,9 @@ object RunLedger {
     def go(k: K, pass: String): Unit = runs += k -> (runs(k) :+ run(k, pass))
     for (pass <- 1 to nPasses; k <- keys) go(k, pass.toString)
     for (r <- 1 to RetryRounds) {
-      val retry = keys.filter(k => noisy(runs(k)))
+      val retry = keys.filter { k =>
+        runs(k).exists(_.ok) && !runs(k).exists(x => x.ok && x.quiet)
+      }
       if (retry.nonEmpty) {
         System.err.println(
           s"[ledger] retry round $r: ${retry.size} keys with no quiet pass")
@@ -163,19 +165,16 @@ object RunLedger {
     runs
   }
 
-  /** The run a record reports: the fastest quiet successful run, else
-    * (a [[noisy]] key) the fastest successful run; None when all failed.
-    * A failed attempt's wall time is not a measurement.
+  /** The run a record reports: the fastest successful run, quiet or not
+    * (steal only adds time, so a noisy pass that still ran fastest is the
+    * best measurement there is); None when all failed. A failed attempt's
+    * wall time is not a measurement.
     */
-  def best(runs: Seq[Run]): Option[Run] = {
-    val ok = runs.filter(_.ok)
-    val quiet = ok.filter(_.quiet)
-    (if (quiet.nonEmpty) quiet else ok).minByOption(_.wallS)
-  }
+  def best(runs: Seq[Run]): Option[Run] =
+    runs.filter(_.ok).minByOption(_.wallS)
 
-  /** Some run succeeded, none of them quietly. */
-  def noisy(runs: Seq[Run]): Boolean =
-    runs.exists(_.ok) && !runs.exists(r => r.ok && r.quiet)
+  /** The [[best]] run was not quiet: the recorded figure has steal in it. */
+  def noisy(runs: Seq[Run]): Boolean = best(runs).exists(!_.quiet)
 
   /** The first line of every exception in the cause chain: a root cause
     * that sits past a 120-char truncation costs a round to rediscover.

@@ -231,9 +231,10 @@ object ScaleSmoke {
     val ledger = new RunLedger(spark, Some(out))
     def side(dir: String): String = dir.split('/').last
     // The shared pass policy, interleaved across queries AND scales: every
-    // pass counts toward the min, quiet passes first. Without the quiet
-    // gate one steal burst on the sf0.1 side fabricates a sub-1 "ratio"
-    // (or an inflated one on the big side) that reads as a plan change.
+    // pass counts toward the min, and a key with no quiet pass is retried.
+    // Without the retries one steal burst on the sf0.1 side fabricates a
+    // sub-1 "ratio" (or an inflated one on the big side) that reads as a
+    // plan change.
     //
     // Plan-shape fingerprint: the ledger counts DISTINCT shuffle exchanges
     // in the final adaptive EXECUTED plan of the SAME df the pass timed

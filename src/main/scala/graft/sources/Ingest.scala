@@ -1,17 +1,28 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Ingest layer (EP3, src/polaroam/read_localize_write.py): raw ping
   * CSV/Parquet -> clean -> timezone-localize -> hive-partitioned Parquet.
   *
-  * Scale design: every step is a narrow transformation over the scan
-  * except the optional active-days filter (one aggregate + semi join) and
-  * the partitioned write (hash repartition on the partition column keeps
-  * one file per partition per task instead of a small-files explosion).
+  * Scale design: the drop is read once. Every step is a narrow
+  * transformation over that one scan except the optional active-days
+  * filter (a uid window: one exchange on uid, no join) and the partitioned
+  * write (hash repartition on the partition column keeps one file per
+  * partition per task instead of a small-files explosion).
   */
 object Ingest {
+
+  /** The gz-CSV drop's six positional columns `_c0`..`_c5` (the
+    * reference's Polars `column_1..6`), all strings: the names and types
+    * schema inference gives a headerless read, without its job over the
+    * first line.
+    */
+  private val RawCsvSchema: StructType =
+    StructType((0 until 6).map(i => StructField(s"_c$i", StringType)))
 
   /** Positional raw schema of the reference's parquet drops
     * (read_localize_write.py:11-13: _c0=uid, _c2=lat, _c3=lon, _c5=ts,
@@ -62,15 +73,23 @@ object Ingest {
       .withColumn("date_trunc", date_format(col("datetime"), "yyyy-MM-dd"))
 
   /** Keep only users active on more than `minDays` distinct partition days
-    * (read_localize_write.py:71-83) — aggregate + broadcast-able semi
-    * join, the relational form of the reference's count+join+drop.
+    * (read_localize_write.py:71-83): the reference's count+join+drop as
+    * one uid window, the distinct days of each row's uid, so the rows are
+    * read once and no join is planned.
+    *
+    * A null uid keeps no row, as in the join: its day set is empty. The
+    * guard sits inside `collect_set`, not in a `uid IS NOT NULL` filter,
+    * because the optimizer pushes such a filter through the window and
+    * below the projection that computes uid, where it would evaluate the
+    * uid expression ([[uidHash]]'s sha256) a second time per row.
     */
   def filterActiveDays(df: DataFrame, minDays: Int): DataFrame = {
-    val active = df.groupBy("uid")
-      .agg(countDistinct(col("date_trunc")).as("n_days"))
-      .filter(col("n_days") > minDays)
-      .select("uid")
-    df.join(active, Seq("uid"), "left_semi")
+    require(minDays >= 0, s"minDays must be >= 0, got $minDays")
+    val days = size(collect_set(when(col("uid").isNotNull, col("date_trunc")))
+      .over(Window.partitionBy("uid")))
+    df.withColumn("__active_days", days)
+      .filter(col("__active_days") > minDays)
+      .drop("__active_days")
   }
 
   /** Hive-partitioned sink (K2). maxRecordsPerFile guards against
@@ -101,14 +120,17 @@ object Ingest {
     * _c0/_c2/_c3/_c4/_c5) -> error filter -> uid anonymization -> ms ->
     * whole epoch seconds (Long, the type StopClusters decodes) ->
     * tz-localize -> optional active-days filter -> hive-partitioned write.
-    * Codec is inferred from the .gz extension by the CSV source; every step
-    * before the optional active-days semi join is a narrow map over the
-    * scan.
+    * Codec is inferred from the .gz extension by the CSV source. The drop
+    * is parsed once, with [[RawCsvSchema]] (no inference job), and each
+    * row's uid is hashed once: every step before the active-days window is
+    * a narrow map over that one scan, and the window's uid exchange feeds
+    * the write's date exchange.
     */
   def localizeCsv(spark: SparkSession, inPath: String, outPath: String,
                   tz: String, maxError: Double = 30.0,
                   minActiveDays: Option[Int] = Some(6)): Unit = {
-    val raw = readCsv(spark, inPath)
+    val raw = spark.read.option("header", "false").schema(RawCsvSchema)
+      .csv(inPath)
     val renamed = renameRaw(raw, Map(
       "_c0" -> "uid", "_c2" -> "latitude", "_c3" -> "longitude",
       "_c5" -> "timestamp", "_c4" -> "error"))

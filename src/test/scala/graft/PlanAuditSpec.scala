@@ -130,6 +130,64 @@ class PlanAuditSpec extends SparkSpec {
       s"no typed per-cluster path:\n${planOf(hulls)}")
   }
 
+  test("ingest write: one CSV scan, one uid hash, no join, uid then date exchange") {
+    import graft.sources.Ingest
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Sha2}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_plan").toString
+    val gz = s"$dir/drop.csv.gz"
+    val t0 = 1705309200000L
+    val os = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(gz))
+    os.write((for (u <- Seq("alice", "bob", ""); d <- 0 until 8; k <- 0 until 3)
+      yield s"$u,x,19.0,-99.0,5.0,${t0 + d * 86400000L + k * 60000L}")
+      .mkString("\n").getBytes("UTF-8"))
+    os.close()
+
+    // top-down over the final adaptive plan, stages included
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o.children.flatMap(nodes)
+    })
+    // the write's executed plan, as the listener sees it after the run
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val probe = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (nodes(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec]))
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(probe)
+    val run = try new RunLedger(spark).measure("ingest", "1")(
+      Ingest.localizeCsv(spark, gz, s"$dir/out", "America/Mexico_City"))
+    finally spark.listenerManager.unregister(probe)
+    assert(spark.read.parquet(s"$dir/out").count() === 48L)
+    assert(run.checked.jobs <= 3, s"no schema-inference job: ${run.jobs} jobs")
+    assert(writes.size === 1)
+    val plan = nodes(writes.peek())
+    val shown = writes.peek().toString
+    val scans = plan.collect { case f: FileSourceScanExec => f }
+    assert(scans.size === 1 &&
+      scans.head.relation.fileFormat.isInstanceOf[CSVFileFormat], shown)
+    assert(!plan.exists(p => p.isInstanceOf[BaseJoinExec] ||
+      p.isInstanceOf[BroadcastExchangeLike]), s"no join:\n$shown")
+    val shuffles = plan.collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size === 2, shown)
+    val keys = shuffles.reverse.map(_.outputPartitioning).collect {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name } }
+    assert(keys === Seq(Seq("uid"), Seq("date_trunc")), shown)
+    assert(plan.count(_.expressions.exists(_.exists(_.isInstanceOf[Sha2])))
+      === 1, s"one uid hash per row:\n$shown")
+  }
+
   test("q01 scan: filter reaches PushedFilters, schema is pruned") {
     val plan = SparkEntry.queries("q01_scan_filter")(spark, sf)
       .queryExecution.executedPlan.treeString(verbose = true)

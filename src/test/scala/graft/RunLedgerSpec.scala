@@ -85,9 +85,16 @@ class RunLedgerSpec extends SparkSpec {
     assert(!RunLedger.noisy(runs("calm")) && RunLedger.noisy(runs("loud")))
     // no quiet pass: the min over all of them
     assert(RunLedger.best(runs("loud")).map(_.pass) === Some("retry2"))
-    // a quiet pass beats a faster noisy one
-    assert(RunLedger.best(Seq(Run("m", "1", 1.0, stealPct = 9.0),
-      Run("m", "2", 2.0, stealPct = 0.0))).map(_.pass) === Some("2"))
+    // steal only adds time: warm passes at 1-2 % steal beat a cold quiet
+    // first pass, and the record flags the key noisy (not retried: one
+    // pass was quiet)
+    val coldWarm = Seq(Run("q16", "1", 4.15, stealPct = 0.4),
+      Run("q16", "2", 1.66, stealPct = 2.1), Run("q16", "3", 1.73, stealPct = 1.7))
+    assert(RunLedger.best(coldWarm).map(_.pass) === Some("2"))
+    assert(RunLedger.noisy(coldWarm))
+    val again = RunLedger.sweep(Seq("q16"), nPasses = 3)((_, p) =>
+      coldWarm(p.toInt - 1))
+    assert(again("q16").map(_.pass) === Vector("1", "2", "3"))
   }
 
   test("Bench's record keeps the committed schema and compares against it") {

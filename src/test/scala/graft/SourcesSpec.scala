@@ -3,6 +3,7 @@ package graft
 import graft.operators.Multimodal
 import graft.sources.Ingest
 import graft.streaming.StreamSessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -57,6 +58,53 @@ class IngestSpec extends SparkSpec {
     assert(got.toSeq === Seq("a"))
   }
 
+  /** The two-scan form the uid window replaced: a distinct-day aggregate
+    * and a left semi join on uid (a null uid never matches).
+    */
+  private def semiJoinActiveDays(df: DataFrame, minDays: Int): DataFrame = {
+    val active = df.groupBy("uid")
+      .agg(countDistinct(col("date_trunc")).as("n_days"))
+      .filter(col("n_days") > minDays)
+      .select("uid")
+    df.join(active, Seq("uid"), "left_semi")
+  }
+
+  test("filterActiveDays: the uid window keeps the semi join's rows") {
+    val rnd = new scala.util.Random(17)
+    def day(d: Int): String = f"2024-01-${d + 1}%02d"
+    // 150 users with 1..10 distinct days each, every date repeated 1..3 times
+    val users = (1L to 150L).flatMap { u =>
+      val nDays = 1 + rnd.nextInt(10)
+      (0 until nDays).flatMap(d =>
+        Seq.fill(1 + rnd.nextInt(3))((Option(u), Option(day(d)))))
+    }
+    val rows = users ++
+      // a null uid on 9 dates: never kept
+      (0 until 27).map(k => (Option.empty[Long], Option(day(k % 9)))) ++
+      // 6 dates plus null dates: a null date is not a day
+      (0 until 12).map(k => (Option(500L),
+        if (k < 6) Option(day(k)) else Option.empty[String])) ++
+      // one uid past the window's in-memory buffer, on 7 dates
+      (0 until 10000).map(k => (Option(0L), Option(day(k % 7))))
+    val df = rows.zipWithIndex.map { case ((u, d), i) => (u, d, i.toLong) }
+      .toDF("uid", "date_trunc", "row")
+    def sorted(f: DataFrame): Seq[String] =
+      f.collect().map(_.toString).sorted.toSeq
+    for (minDays <- Seq(0, 6)) {
+      val got = Ingest.filterActiveDays(df, minDays)
+      assert(got.columns.toSeq === df.columns.toSeq)
+      val want = sorted(semiJoinActiveDays(df, minDays))
+      assert(sorted(got) === want, s"minDays $minDays")
+      assert(got.filter(col("uid").isNull).count() === 0L)
+      assert(got.filter(col("uid") === 0L).count() === 10000L)
+    }
+    // both sides of the threshold are exercised
+    val keptAt6 = Ingest.filterActiveDays(df, 6).select("uid").distinct().count()
+    assert(keptAt6 > 1L && keptAt6 < 150L, keptAt6)
+    assert(Ingest.filterActiveDays(df, 6).filter(col("uid") === 500L)
+      .count() === 0L)
+  }
+
   /** Writes `lines` as one headerless gz CSV; returns (dir, file). */
   private def gzCsv(lines: Seq[String]): (String, String) = {
     val dir = Files.createTempDirectory("graft_gzcsv").toString
@@ -88,6 +136,24 @@ class IngestSpec extends SparkSpec {
     assert(back.schema("timestamp").dataType ===
       org.apache.spark.sql.types.LongType)
     assert(back.select(min("timestamp")).head().getLong(0) === 1705289400L)
+  }
+
+  test("localizeCsv: an empty uid active on 8 days is dropped") {
+    val t0 = 1705309200000L // 2024-01-15 03:00 MX wall clock
+    def rows(uid: String, days: Int): Seq[String] = for {
+      d <- 0 until days; k <- 0 until 2
+    } yield s"$uid,x,19.0,-99.0,5.0,${t0 + d * 86400000L + k * 600000L}"
+    val (dir, gz) = gzCsv(rows("", 8) ++ rows("alice", 8) ++ rows("bob", 2))
+
+    Ingest.localizeCsv(spark, gz, s"$dir/out", "America/Mexico_City",
+      minActiveDays = Some(6))
+    val back = spark.read.parquet(s"$dir/out")
+    val alice = Seq("alice").toDF("u").select(Ingest.uidHash(col("u")))
+      .head().getLong(0)
+    assert(back.select("uid").distinct().collect().map(_.get(0)).toSeq ===
+      Seq(alice))
+    assert(back.count() === 16L)
+    assert(back.select("date_trunc").distinct().count() === 8L)
   }
 
   test("localizeCsv output feeds stops -> medians -> DBSCAN uncast") {
