@@ -1,14 +1,17 @@
 package graft.operators
 
+import java.util.Arrays
+
 import scala.collection.mutable.ArrayBuffer
 
 import graft.plans.{Haversine, UidKernel, UidScan}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, NumericType, ShortType, StructField}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, NumericType, ShortType, StructField}
+import org.apache.spark.storage.StorageLevel
 
 /** Stationary-event segmentation — the heart of the reference engine
   * (Stopdetect.fit_predict, src/polaroam/models.py:112-161 wrapping
@@ -19,11 +22,14 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, 
   * partitions, and ONE ordered scan that classifies each ping when its
   * successor arrives: the stop kernel of a [[graft.plans.UidScanExec]].
   * The scan keeps the uid attribute and passes the uid partitioning and
-  * sort order through, so [[eventMedians]], the next kernel on the same
-  * node, needs no second exchange or sort: the pipeline from pings to
-  * medians shuffles and sorts once. The scan buffers only the open
-  * stationary run, so memory is bounded by the longest stop, not by the
-  * busiest user.
+  * sort order through. [[eventMedians]] over [[stopEvents]]' own frame
+  * is one scan, not two: the same walker reduces each kept stop to its
+  * median row as the stop closes, so the pipeline from pings to medians
+  * shuffles, sorts and walks the pings once. Any other frame (stored,
+  * edited, cached) gets the generic median kernel, which needs no second
+  * exchange or sort on a uid-partitioned input either. The scan buffers
+  * only the open stationary run, so memory is bounded by the longest
+  * stop, not by the busiest user.
   *
   * Semantics preserved exactly (SURVEY §7 traps 3-4):
   *  - distance/time_diff are to the NEXT point (lead); the last point of a
@@ -97,20 +103,115 @@ object StopDetect {
     Seq("latitude", "longitude").foreach(c => require(
       types(c).isInstanceOf[NumericType],
       s"stopEvents: $c must be numeric, got ${types(c).simpleString}"))
-    require(Seq(ByteType, ShortType, IntegerType, LongType)
-        .contains(types("timestamp")),
-      s"stopEvents: timestamp must be integral epoch seconds, got " +
-        types("timestamp").simpleString)
+    requireIntegral("stopEvents", "timestamp", types("timestamp"))
     UidScan.frame(input, Stops(p))
       .select("uid", "stop_events", "latitude", "longitude", "timestamp")
   }
 
+  private def requireIntegral(caller: String, c: String, t: DataType): Unit =
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+      s"$caller: $c must be integral, got ${t.simpleString}")
+
+  /** The stop rule over one uid's pings, which arrive sorted by timestamp:
+    * the one walker behind both stop kernels. A stretch is a run of
+    * stationary pings and the ping that ends it; a ping is stationary when
+    * its successor is near (distance and time gap look forward). The walker
+    * owns stationarity, the gap, the keep rule and the event ids; a kernel
+    * only buffers the pings of the open stretch (`add`) and turns each
+    * closed stretch into output rows (`close`). So memory is bounded by the
+    * longest stretch, not by the busiest user.
+    */
+  private abstract class Stretches(p: Params, in: Seq[Attribute]) {
+    private val Seq(lat, lon, ts) =
+      Seq("latitude", "longitude", "timestamp").map(UidScan.ordinal(in, _))
+    private val (latOf, lonOf, tsOf) = (UidScan.doubles(in, "latitude"),
+      UidScan.doubles(in, "longitude"), UidScan.longs(in, "timestamp"))
+
+    /** Starts a uid: `first` is its first ping. */
+    protected def start(first: InternalRow): Unit = ()
+
+    /** Adds ping `r` to the open stretch. Its coordinates `la`/`lo` hold
+      * only when `located` (neither is null), its timestamp `t` only when
+      * `timed`.
+      */
+    protected def add(r: InternalRow, located: Boolean, la: Double, lo: Double,
+                      timed: Boolean, t: Long): Unit
+
+    /** Closes the open stretch, whose first `k` pings are stationary (the
+      * last one is not): `id` is its event id when the stretch is kept as
+      * an event, else -1. Later `add`s must not change the output.
+      */
+    protected def close(k: Int, id: Long): Iterator[InternalRow]
+
+    /** The output of one uid's pings, one closed stretch at a time. */
+    def scan(rows: Iterator[InternalRow]): Iterator[InternalRow] =
+      new Iterator[InternalRow] {
+        private var closed: Iterator[InternalRow] = Iterator.empty
+        private var open = false // the uid's first ping has been read
+        // the last ping read
+        private var located, timed = false
+        private var la, lo = 0.0
+        private var t = 0L
+        // the open stretch: stationary pings, a timed step among them, the
+        // summed timed steps; and the next event id
+        private var k = 0
+        private var timedSteps = false
+        private var total = 0L
+        private var nextId = 1L
+
+        def hasNext: Boolean = {
+          while (!closed.hasNext && (open || rows.hasNext)) closed = advance()
+          closed.hasNext
+        }
+        def next(): InternalRow = { hasNext; closed.next() }
+
+        /** Reads pings until a stretch closes; returns its output. */
+        private def advance(): Iterator[InternalRow] = {
+          while (rows.hasNext) {
+            val r = rows.next()
+            val rLocated = !(r.isNullAt(lat) || r.isNullAt(lon))
+            val rLa = if (rLocated) latOf(r) else 0.0
+            val rLo = if (rLocated) lonOf(r) else 0.0
+            val rTimed = !r.isNullAt(ts)
+            val rT = if (rTimed) tsOf(r) else 0L
+            var out: Iterator[InternalRow] = null
+            if (!open) { start(r); open = true }
+            else {
+              val both = timed && rTimed
+              val gap = if (both) rT - t else 0L
+              if (located && rLocated &&
+                  isStationary(p, distance(p.metric, la, lo, rLa, rLo), gap, both)) {
+                k += 1
+                if (both) { timedSteps = true; total += gap }
+              } else out = end()
+            }
+            add(r, rLocated, rLa, rLo, rTimed, rT)
+            located = rLocated; la = rLa; lo = rLo; timed = rTimed; t = rT
+            if (out != null) return out
+          }
+          open = false
+          end()
+        }
+
+        /** Closes the open stretch. One with a stationary ping uses up an
+          * id, kept or not.
+          */
+        private def end(): Iterator[InternalRow] = {
+          val id = if (k == 0) -1L else {
+            nextId += 1
+            if (timedSteps && keepRun(p, k, total)) nextId - 1 else -1L
+          }
+          val out = close(k, id)
+          k = 0; timedSteps = false; total = 0L
+          out
+        }
+      }
+  }
+
   /** The stop rule as a uid kernel: appends `stop_events` to each of a
-    * uid's pings, which arrive sorted by timestamp. A ping is stationary
-    * when its successor is near (distance and time gap are
-    * forward-looking). Each stretch of stationary pings and the ping that
-    * ends it is buffered, then leaves in input order: the stretch with its
-    * id when it passes the keep rule, else -1, and the ending ping -1.
+    * uid's pings, which arrive sorted by timestamp. Each stretch leaves in
+    * input order: its stationary pings with the event id when it is kept,
+    * else -1, and the ending ping -1.
     */
   private final case class Stops(p: Params) extends UidKernel {
     override def sortedBy: Seq[String] = Seq("timestamp")
@@ -118,38 +219,20 @@ object StopDetect {
       Seq(StructField("stop_events", LongType, nullable = false))
     override def open(in: Seq[Attribute], out: UnsafeProjection)
     : Iterator[InternalRow] => Iterator[InternalRow] = {
+      // the output keeps every input column in place, stop_events is last
       val (unset, joined, event) = (InternalRow(-1L), new JoinedRow, in.length)
-      // the output keeps every input column in place: the readers and
-      // ordinals of the input apply to output rows, stop_events is last
-      val Seq(lat, lon, ts) =
-        Seq("latitude", "longitude", "timestamp").map(UidScan.ordinal(in, _))
-      val (latOf, lonOf, tsOf) = (UidScan.doubles(in, "latitude"),
-        UidScan.doubles(in, "longitude"), UidScan.longs(in, "timestamp"))
-      def timed(a: InternalRow, b: InternalRow) = !(a.isNullAt(ts) || b.isNullAt(ts))
-      def gap(a: InternalRow, b: InternalRow) = if (timed(a, b)) tsOf(b) - tsOf(a) else 0L
-      def stationary(a: InternalRow, b: InternalRow) =
-        !(a.isNullAt(lat) || a.isNullAt(lon) || b.isNullAt(lat) || b.isNullAt(lon)) &&
-          isStationary(p, distance(p.metric, latOf(a), lonOf(a), latOf(b), lonOf(b)),
-            gap(a, b), timed(a, b))
-      rows => {
-        val pings = rows.map(r => out(joined(r, unset)).copy()).buffered
-        var nextId = 1L
-        Iterator.continually(pings).takeWhile(_.hasNext).flatMap { _ =>
-          val stretch = ArrayBuffer(pings.next())
-          while (pings.hasNext && stationary(stretch.last, pings.head))
-            stretch += pings.next()
-          val k = stretch.length - 1 // stationary pings; the last one is not
-          if (k > 0) {
-            val steps = (0 until k).filter(i => timed(stretch(i), stretch(i + 1)))
-            if (steps.nonEmpty && keepRun(p, k,
-                steps.map(i => gap(stretch(i), stretch(i + 1))).sum)) {
-              stretch.take(k).foreach(_.setLong(event, nextId))
-            }
-            nextId += 1
-          }
-          stretch
+      new Stretches(p, in) {
+        private val stretch = ArrayBuffer.empty[InternalRow]
+        protected def add(r: InternalRow, located: Boolean, la: Double,
+                          lo: Double, timed: Boolean, t: Long): Unit =
+          stretch += out(joined(r, unset)).copy()
+        protected def close(k: Int, id: Long): Iterator[InternalRow] = {
+          if (id != -1L) (0 until k).foreach(stretch(_).setLong(event, id))
+          val rows = stretch.toArray
+          stretch.clear()
+          rows.iterator
         }
-      }
+      }.scan
     }
   }
 
@@ -163,62 +246,204 @@ object StopDetect {
       col("timestamp"))
 
   /** Per-(uid, stop_events) median coordinates and time span
-    * (compute_label_medians, src/polaroam/models.py:163-177), as a uid
-    * kernel on the kept rows (stop_events != -1). Each uid's rows are
-    * grouped by stop_events, whatever their order, and leave one row per
-    * event in (uid, stop_events) order, so on [[stopEvents]]' output the
-    * medians add no exchange and no sort. Exact median — required for
-    * oracle parity (SURVEY §7 trap 9) — with Spark's `median` arithmetic
+    * (compute_label_medians, src/polaroam/models.py:163-177): one row per
+    * kept event, in (uid, stop_events) order on the uid partitioning, so
+    * the kernels after it (DBSCAN, HomeWork, the wide export) add no
+    * exchange and no sort. Exact median — required for oracle parity
+    * (SURVEY §7 trap 9) — with Spark's `median` arithmetic
     * (PercentileBase.getPercentile): the middle value when n is odd,
     * `0.5 * lo + 0.5 * hi` when n is even. Coordinates are read as
     * doubles; nulls are skipped and NaN sorts last, as in `median`. The
     * span is the min and max timestamp, in the timestamp's own type.
+    *
+    * Two kernels, one answer. When `stopEvents` is [[stopEvents]]' own
+    * frame, the medians come from the pings in the same scan that finds
+    * the stops ([[StopMedians]]): each kept stretch is reduced to its row
+    * as it closes, and no ping-level row is built. Any other frame (the
+    * event_maps shape unpacked, a stored or edited frame) goes through the
+    * generic [[Medians]] kernel over its kept rows. So does a frame in the
+    * cache manager: its rows are already computed, and deriving them from
+    * the pings again would not read the cache.
     */
   def eventMedians(stopEvents: DataFrame): DataFrame =
-    UidScan.frame(stopEvents
-      .select("uid", "stop_events", "latitude", "longitude", "timestamp")
-      .filter(col("stop_events") =!= -1L), Medians)
+    stopEvents.queryExecution.analyzed match {
+      case Project(_, Project(_, UidScan(Stops(p), _, _, pings)))
+          if stopEvents.storageLevel == StorageLevel.NONE =>
+        UidScan.frame(GraftBridge.ofRows(stopEvents.sparkSession, pings),
+          StopMedians(p))
+      case _ =>
+        val kept = stopEvents
+          .select("uid", "stop_events", "latitude", "longitude", "timestamp")
+          .filter(col("stop_events") =!= -1L)
+        kept.schema.filter(f => f.name == "stop_events" || f.name == "timestamp")
+          .foreach(f => requireIntegral("eventMedians", f.name, f.dataType))
+        UidScan.frame(kept, Medians)
+    }
 
-  private case object Medians extends UidKernel {
+  /** The output of both median kernels: uid as it is, then the added
+    * stop_events, median latitude and longitude, start and end timestamp.
+    * Rows leave in (uid, stop_events) order.
+    */
+  private abstract class MedianKernel extends UidKernel {
+    protected def event(in: Seq[Attribute]): StructField
     override def keep(in: Seq[Attribute]): Seq[Attribute] =
-      Seq("uid", "stop_events").map(UidScan.column(in, _))
+      Seq(UidScan.column(in, "uid"))
     override def adds(in: Seq[Attribute]): Seq[StructField] = {
       val t = UidScan.column(in, "timestamp").dataType
-      Seq(StructField("latitude", DoubleType), StructField("longitude", DoubleType),
+      Seq(event(in), StructField("latitude", DoubleType),
+        StructField("longitude", DoubleType),
         StructField("start_timestamp", t), StructField("end_timestamp", t))
     }
     override def emitsSortedBy: Option[Seq[String]] = Some(Seq("stop_events"))
-    override def open(in: Seq[Attribute], out: UnsafeProjection)
-    : Iterator[InternalRow] => Iterator[InternalRow] = {
-      val joined = new JoinedRow
-      val Seq(lat, lon, ts) =
-        Seq("latitude", "longitude", "timestamp").map(UidScan.ordinal(in, _))
-      val (latOf, lonOf, eventOf) = (UidScan.doubles(in, "latitude"),
-        UidScan.doubles(in, "longitude"), UidScan.longs(in, "stop_events"))
-      val tsType = in(ts).dataType
-      val order = TypeUtils.getInterpretedOrdering(tsType)
-      rows => rows.map(_.copy()).toSeq.groupBy(eventOf).toSeq.sortBy(_._1)
-        .iterator.map { case (_, event) =>
-          def median(i: Int, of: InternalRow => Double) =
-            StopDetect.median(event.filterNot(_.isNullAt(i)).map(of).toArray)
-          val times = event.filterNot(_.isNullAt(ts)).map(_.get(ts, tsType))
-          out(joined(event.head, InternalRow(median(lat, latOf),
-            median(lon, lonOf), times.minOption(order).orNull,
-            times.maxOption(order).orNull)))
+  }
+
+  /** A median kernel's rows of one stretch or one uid, as primitive
+    * columns with a flag per value that it is not null, and their
+    * reduction to output rows: the uid from the uid's first row, the event
+    * id and span in their columns' integral types.
+    */
+  private final class MedianRows(in: Seq[Attribute], out: UnsafeProjection,
+                                 eventType: DataType) {
+    private val joined = new JoinedRow
+    private val (asEvent, asTime) =
+      (integral(eventType), integral(UidScan.column(in, "timestamp").dataType))
+    private var uid: InternalRow = _
+    var n = 0
+    var event, ts = new Array[Long](16)
+    var lat, lon = new Array[Double](16)
+    var hasLat, hasLon, hasTs = new Array[Boolean](16)
+    private var scratch = new Array[Double](16)
+
+    /** Starts a uid: `first` is its first row. */
+    def start(first: InternalRow): Unit = { uid = first.copy(); n = 0 }
+
+    def add(e: Long, okLat: Boolean, la: Double, okLon: Boolean, lo: Double,
+            okTs: Boolean, t: Long): Unit = {
+      if (n == event.length) {
+        val m = 2 * n
+        event = Arrays.copyOf(event, m); ts = Arrays.copyOf(ts, m)
+        lat = Arrays.copyOf(lat, m); lon = Arrays.copyOf(lon, m)
+        hasLat = Arrays.copyOf(hasLat, m); hasLon = Arrays.copyOf(hasLon, m)
+        hasTs = Arrays.copyOf(hasTs, m)
+      }
+      event(n) = e; hasLat(n) = okLat; lat(n) = la; hasLon(n) = okLon
+      lon(n) = lo; hasTs(n) = okTs; ts(n) = t
+      n += 1
+    }
+
+    /** Orders the rows by event id; a no-op when they already are. */
+    def sortByEvent(): Unit =
+      if ((1 until n).exists(i => event(i - 1) > event(i))) {
+        val o = Array.range(0, n).sortBy(event(_))
+        event = o.map(event); ts = o.map(ts); lat = o.map(lat); lon = o.map(lon)
+        hasLat = o.map(hasLat); hasLon = o.map(hasLon); hasTs = o.map(hasTs)
+      }
+
+    /** The output row of event `id` over rows [from, until). */
+    def reduce(id: Long, from: Int, until: Int): InternalRow = {
+      var (timed, first, last, i) = (false, Long.MaxValue, Long.MinValue, from)
+      while (i < until) {
+        if (hasTs(i)) {
+          timed = true
+          first = Math.min(first, ts(i)); last = Math.max(last, ts(i))
         }
+        i += 1
+      }
+      out(joined(uid, InternalRow(asEvent(id),
+        median(lat, hasLat, from, until), median(lon, hasLon, from, until),
+        if (timed) asTime(first) else null, if (timed) asTime(last) else null)))
+    }
+
+    /** `median` of the non-null values in [from, until), null when there
+      * are none. Sorted by `Arrays.sort`: NaN last, and -0.0 before 0.0.
+      */
+    private def median(xs: Array[Double], ok: Array[Boolean],
+                       from: Int, until: Int): Any = {
+      if (scratch.length < until - from) scratch = new Array[Double](until - from)
+      var (m, i) = (0, from)
+      while (i < until) {
+        if (ok(i)) { scratch(m) = xs(i); m += 1 }
+        i += 1
+      }
+      if (m == 0) null
+      else {
+        Arrays.sort(scratch, 0, m)
+        val (lo, hi) = (scratch((m - 1) / 2), scratch(m / 2))
+        if (m % 2 == 1) lo else 0.5 * lo + 0.5 * hi
+      }
+    }
+
+    private def integral(t: DataType): Long => Any = t match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => v => v
     }
   }
 
-  /** `median` of the values, null when there are none. Sorted by
-    * `Arrays.sort`: NaN last, and -0.0 before 0.0.
+  /** Stops and medians in one scan of the pings, for `eventMedians` over
+    * `stopEvents`' own frame: the stop walker, with each kept stretch
+    * reduced to its median row as it closes.
     */
-  private def median(xs: Array[Double]): Any = {
-    val n = xs.length
-    if (n == 0) null
-    else {
-      java.util.Arrays.sort(xs)
-      val (lo, hi) = (xs((n - 1) / 2), xs(n / 2))
-      if (n % 2 == 1) lo else 0.5 * lo + 0.5 * hi
+  private final case class StopMedians(p: Params) extends MedianKernel {
+    override def sortedBy: Seq[String] = Seq("timestamp")
+    override protected def event(in: Seq[Attribute]): StructField =
+      StructField("stop_events", LongType, nullable = false)
+    override def open(in: Seq[Attribute], out: UnsafeProjection)
+    : Iterator[InternalRow] => Iterator[InternalRow] = {
+      val rows = new MedianRows(in, out, LongType)
+      new Stretches(p, in) {
+        override protected def start(first: InternalRow): Unit = rows.start(first)
+        protected def add(r: InternalRow, located: Boolean, la: Double,
+                          lo: Double, timed: Boolean, t: Long): Unit =
+          rows.add(0L, located, la, located, lo, timed, t)
+        protected def close(k: Int, id: Long): Iterator[InternalRow] = {
+          val kept = if (id == -1L) Iterator.empty else Iterator.single(rows.reduce(id, 0, k))
+          rows.n = 0
+          kept
+        }
+      }.scan
+    }
+  }
+
+  /** The generic median kernel over kept stop-event rows in any order:
+    * reads a uid's rows into primitive columns, orders them by stop_events
+    * (they usually are already) and reduces each event's run of rows.
+    */
+  private case object Medians extends MedianKernel {
+    override protected def event(in: Seq[Attribute]): StructField = {
+      val e = UidScan.column(in, "stop_events")
+      StructField("stop_events", e.dataType, e.nullable)
+    }
+    override def open(in: Seq[Attribute], out: UnsafeProjection)
+    : Iterator[InternalRow] => Iterator[InternalRow] = {
+      val rows = new MedianRows(in, out, UidScan.column(in, "stop_events").dataType)
+      val Seq(lat, lon, ts) =
+        Seq("latitude", "longitude", "timestamp").map(UidScan.ordinal(in, _))
+      val (eventOf, latOf, lonOf, tsOf) = (UidScan.longs(in, "stop_events"),
+        UidScan.doubles(in, "latitude"), UidScan.doubles(in, "longitude"),
+        UidScan.longs(in, "timestamp"))
+      uidRows => {
+        uidRows.foreach { r =>
+          if (rows.n == 0) rows.start(r)
+          val okLat = !r.isNullAt(lat)
+          val okLon = !r.isNullAt(lon)
+          val okTs = !r.isNullAt(ts)
+          rows.add(eventOf(r), okLat, if (okLat) latOf(r) else 0.0,
+            okLon, if (okLon) lonOf(r) else 0.0, okTs, if (okTs) tsOf(r) else 0L)
+        }
+        rows.sortByEvent()
+        val n = rows.n
+        rows.n = 0 // the next uid starts over
+        var from = 0
+        Iterator.continually(from).takeWhile(_ < n).map { _ =>
+          var until = from + 1
+          while (until < n && rows.event(until) == rows.event(from)) until += 1
+          val row = rows.reduce(rows.event(from), from, until)
+          from = until
+          row
+        }
+      }
     }
   }
 }

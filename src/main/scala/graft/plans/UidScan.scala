@@ -84,23 +84,27 @@ object UidScan {
   /** Reader of column `name` as a Double, through Spark's cast from another
     * numeric type. A null reads as garbage: check first.
     */
-  def doubles(in: Seq[Attribute], name: String): InternalRow => Double =
-    reader(in, name, DoubleType)(_.getDouble(_))
+  def doubles(in: Seq[Attribute], name: String): DoubleOf = {
+    val i = ordinal(in, name)
+    if (in(i).dataType == DoubleType) _.getDouble(i)
+    else { val cast = castOf(in, i, DoubleType); cast.eval(_).asInstanceOf[Double] }
+  }
 
   /** Reader of integral column `name` as a Long (see [[doubles]]). */
-  def longs(in: Seq[Attribute], name: String): InternalRow => Long =
-    reader(in, name, LongType)(_.getLong(_))
-
-  private def reader[T](in: Seq[Attribute], name: String, to: DataType)(
-      direct: (InternalRow, Int) => T): InternalRow => T = {
+  def longs(in: Seq[Attribute], name: String): LongOf = {
     val i = ordinal(in, name)
-    val from = in(i).dataType
-    if (from == to) direct(_, i)
-    else {
-      val cast = Cast(BoundReference(i, from, nullable = true), to)
-      r => cast.eval(r).asInstanceOf[T]
-    }
+    if (in(i).dataType == LongType) _.getLong(i)
+    else { val cast = castOf(in, i, LongType); cast.eval(_).asInstanceOf[Long] }
   }
+
+  private def castOf(in: Seq[Attribute], i: Int, to: DataType) =
+    Cast(BoundReference(i, in(i).dataType, nullable = true), to)
+
+  /** Column readers with a primitive result: a function to Double or Long
+    * boxes every value it reads, once per row of a kernel's inner loop.
+    */
+  abstract class DoubleOf { def apply(r: InternalRow): Double }
+  abstract class LongOf { def apply(r: InternalRow): Long }
 }
 
 /** One pass over each uid's rows. The planner places one uid exchange and

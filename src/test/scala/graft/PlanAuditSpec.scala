@@ -33,18 +33,22 @@ class PlanAuditSpec extends SparkSpec {
       s"the single exchange must key on uid:\n$plan")
   }
 
-  test("stop pipeline: one sort, two UidScanExecs, no window") {
-    import graft.plans.UidScanExec
-    import org.apache.spark.sql.execution.{GraftPlanAudit, SortExec}
-    import org.apache.spark.sql.execution.window.WindowExec
-    import spark.implicits._
-    val pings = Seq(
-      ("u", 19.0, -99.0, 0L), ("u", 19.0, -99.0, 400L),
+  import PlanAuditSpec.kernels
+
+  private def stopPings = {
+    val s = spark
+    import s.implicits._
+    Seq(("u", 19.0, -99.0, 0L), ("u", 19.0, -99.0, 400L),
       ("u", 19.0, -99.0, 800L), ("u", 19.1, -99.0, 1200L),
       ("v", 19.0, -99.0, 0L), ("v", 19.0, -99.0, 400L))
       .toDF("uid", "latitude", "longitude", "timestamp")
+  }
+
+  test("stop pipeline: one sort, one UidScanExec running StopMedians, no window") {
+    import org.apache.spark.sql.execution.{GraftPlanAudit, SortExec}
+    import org.apache.spark.sql.execution.window.WindowExec
     val medians = StopDetect.eventMedians(
-      StopDetect.stopEvents(pings, StopDetect.Params()))
+      StopDetect.stopEvents(stopPings, StopDetect.Params()))
     assert(medians.collect().length === 1)
     def n(f: org.apache.spark.sql.execution.SparkPlan => Boolean) =
       GraftPlanAudit.count(medians)(f)
@@ -52,9 +56,38 @@ class PlanAuditSpec extends SparkSpec {
     assert(n(_.isInstanceOf[WindowExec]) === 0,
       s"stop detection must not plan windows:\n${planOf(medians)}")
     assert(n(_.isInstanceOf[SortExec]) === 1,
-      s"one (uid, timestamp) sort must serve the scan and the medians:\n" +
+      s"one (uid, timestamp) sort must serve the stops and the medians:\n" +
         planOf(medians))
-    assert(n(_.isInstanceOf[UidScanExec]) === 2, planOf(medians))
+    assert(kernels(medians) === Seq("StopMedians"),
+      s"the medians come from the stop scan itself:\n${planOf(medians)}")
+  }
+
+  test("stopEvents alone still plans the ping kernel") {
+    val events = StopDetect.stopEvents(stopPings, StopDetect.Params())
+    assert(events.collect().length === 6)
+    assert(kernels(events) === Seq("Stops"), planOf(events))
+  }
+
+  test("a cached or stored stop-events frame plans the generic medians") {
+    val events = StopDetect.stopEvents(stopPings, StopDetect.Params())
+    val stored = spark.createDataFrame(
+      java.util.Arrays.asList(events.collect(): _*), events.schema)
+    val generic = StopDetect.eventMedians(stored)
+    assert(generic.collect().length === 1)
+    assert(kernels(generic) === Seq("Medians"), planOf(generic))
+    val cached = StopDetect.stopEvents(stopPings, StopDetect.Params()).cache()
+    try {
+      val medians = StopDetect.eventMedians(cached)
+      assert(medians.collect().length === 1)
+      // the cached relation's own plan holds the ping kernel, read once
+      assert(kernels(medians).sorted === Seq("Medians", "Stops"), planOf(medians))
+      assert(planOf(medians).contains("InMemoryTableScan"), planOf(medians))
+      // the cache manager matches plans, not instances: the same stop
+      // events built again read the cache too
+      val twin = StopDetect.eventMedians(
+        StopDetect.stopEvents(stopPings, StopDetect.Params()))
+      assert(kernels(twin).sorted === Seq("Medians", "Stops"), planOf(twin))
+    } finally cached.unpersist(blocking = true)
   }
 
   test("stopEvents installs its planner strategy once per session") {
@@ -714,4 +747,13 @@ class PlanAuditSpec extends SparkSpec {
     assert(n(_.isInstanceOf[InMemoryTableScanExec]) === 0,
       s"HomeWork must not cache:\n${planOf(wide)}")
   }
+}
+
+object PlanAuditSpec {
+  /** The kernel names of the uid scans in `df`'s executed plan. */
+  def kernels(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    org.apache.spark.sql.execution.GraftPlanAudit.collectFinal(df) {
+      case u: graft.plans.UidScanExec => Some(u.kernel.toString.takeWhile(_ != '('))
+      case _ => None
+    }
 }

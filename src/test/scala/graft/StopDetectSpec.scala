@@ -206,6 +206,108 @@ class StopDetectSpec extends SparkSpec {
   }
 }
 
+/** The fused stop-to-median kernel against the generic median kernel run
+  * over the same stop events, materialized first so that no fusion
+  * applies: every column equal bit for bit.
+  */
+class StopMediansParitySpec extends SparkSpec {
+  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.types._
+  import PlanAuditSpec.kernels
+
+  /** Asserts the parity; returns the number of median rows. */
+  private def parity(pings: DataFrame, p: StopDetect.Params): Int = {
+    val events = StopDetect.stopEvents(pings, p)
+    val fused = StopDetect.eventMedians(events)
+    val stored = spark.createDataFrame(
+      java.util.Arrays.asList(events.collect(): _*), events.schema)
+    val generic = StopDetect.eventMedians(stored)
+    def bits(df: DataFrame) = df.collect().toSeq.map(r => r.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case v => v
+    }).sortBy(r => (r.head.toString, r(1).asInstanceOf[Long]))
+    val (f, g) = (bits(fused), bits(generic))
+    assert(kernels(fused) === Seq("StopMedians"))
+    assert(kernels(generic) === Seq("Medians"))
+    assert(fused.schema === generic.schema)
+    assert(f.size === g.size)
+    f.zip(g).foreach { case (a, b) => assert(a === b) }
+    f.size
+  }
+
+  /** Seeded trajectories of dwells (about 1 m of jitter, 30-930 s apart,
+    * sometimes split by a 4,000 s gap or a null latitude) and moves of at
+    * least 1 km. Every fifth user starts with pings whose timestamp is
+    * null at its first site (they sort first; one site, so their order
+    * does not matter); one user has no timestamp at all. Timestamps are
+    * distinct within a user.
+    */
+  private def pings(seed: Int, users: Int, longUid: Boolean,
+                    intTs: Boolean): DataFrame = {
+    val rng = new scala.util.Random(seed)
+    val rows = (0 until users).flatMap { u =>
+      var (la, lo, t) = (19.0 + rng.nextDouble() * 0.1,
+        -99.0 + rng.nextDouble() * 0.1, rng.nextInt(1000).toLong)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Option[Double], Double, Option[Long])]
+      if (u % 5 == 1) (0 to rng.nextInt(3)).foreach(_ => out += ((Some(la), lo, None)))
+      (0 to rng.nextInt(12)).foreach { _ =>
+        if (rng.nextBoolean()) (0 to rng.nextInt(8)).foreach { _ =>
+          t += 30 + rng.nextInt(900) + (if (rng.nextInt(12) == 0) 4000 else 0)
+          val lat = if (rng.nextInt(15) == 0) None
+            else Some(la + rng.nextGaussian() * 1e-5)
+          out += ((lat, lo + rng.nextGaussian() * 1e-5, Some(t)))
+        } else {
+          la += 0.01 + rng.nextDouble() * 0.05
+          t += 60 + rng.nextInt(600)
+          out += ((Some(la), lo, Some(t)))
+        }
+      }
+      val ts = if (u == users - 1) out.map(_.copy(_3 = None)) else out
+      ts.map { case (lat, lon, time) =>
+        Row(if (longUid) u.toLong else s"u$u", lat.map(Double.box).orNull, lon,
+          time.map[AnyRef](v => if (intTs) Int.box(v.toInt) else Long.box(v)).orNull)
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("uid", if (longUid) LongType else StringType),
+      StructField("latitude", DoubleType), StructField("longitude", DoubleType),
+      StructField("timestamp", if (intTs) IntegerType else LongType))))
+  }
+
+  test("fused medians equal the generic kernel on random trajectories") {
+    val haversine = StopDetect.Params(50.0, 2L, 600L, 3600L, "haversine")
+    val euclidean = StopDetect.Params(0.0005, 3L, 600L, 3600L, "euclidean")
+    var seed = 0
+    for (p <- Seq(haversine, euclidean); longUid <- Seq(false, true);
+         intTs <- Seq(false, true)) {
+      seed += 1
+      assert(parity(pings(seed, 40, longUid, intTs), p) > 50, (p, longUid, intTs))
+    }
+  }
+
+  test("a whale uid: 100,000 pings and dwells of thousands, fused equals generic") {
+    // dwells of 2,000-6,000 pings a minute apart, each closed by ten moving
+    // pings; a few short dwells are invalidated and use up their ids
+    val rng = new scala.util.Random(11)
+    var (la, t) = (19.0, 0L)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double, Long)]
+    while (rows.size < 100000) {
+      val n = if (rng.nextInt(5) == 0) 2 else 2000 + rng.nextInt(4000)
+      (0 until n).foreach { _ =>
+        t += 60
+        rows += (("whale", la + rng.nextGaussian() * 1e-5, -99.0, t))
+      }
+      (0 until 10).foreach { _ =>
+        la += 0.01; t += 120
+        rows += (("whale", la, -99.0, t))
+      }
+    }
+    import spark.implicits._
+    val df = rows.toSeq.toDF("uid", "latitude", "longitude", "timestamp")
+    assert(parity(df, StopDetect.Params(50.0, 2L, 600L, 3600L, "haversine")) > 15)
+  }
+}
+
 class EuclideanMetricSpec extends SparkSpec {
   import spark.implicits._
 
