@@ -94,8 +94,9 @@ object Communities {
 
   /** Both modes as one uid kernel: collapse a user's stops to unique
     * snapped coordinates (downsample), label the unique-coordinate graph,
-    * and fan the labels back to the stops, which leave in stop_events
-    * order; `certified` appends [[assignLocationsCertified]]'s columns.
+    * and fan the labels back to the stops, which leave in the order they
+    * arrive, stop_events order; `certified` appends
+    * [[assignLocationsCertified]]'s columns.
     */
   private final case class Labels(p: Params, certified: Boolean)
       extends StopClusters.MedianKernel {
@@ -105,7 +106,6 @@ object Communities {
         "improves" -> BooleanType, "cc_locations" -> LongType,
         "refines" -> BooleanType)))
         .map { case (c, t) => StructField(c, t, nullable = false) }
-    override def emitsSortedBy: Option[Seq[String]] = Some(Seq("stop_events"))
     override def emit(g: StopClusters.MedianGroup): Iterator[(Int, InternalRow)] = {
       val (rowNode, allCoords, allCounts) = collapseStops(g, p)
       val n = trimmedSize(allCoords.length, g.uid, p)

@@ -15,14 +15,15 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
   * Spark-first design: the non-relational kernel (DBSCAN) is a uid kernel
   * of [[graft.plans.UidScanExec]], run on the already heavily reduced
   * event-median table (orders of magnitude smaller than the ping table).
-  * It keeps the uid partitioning of [[StopDetect.eventMedians]] and emits
-  * each uid's rows in stop_locations order, so from pings to HomeWork's
-  * labels the pipeline shuffles and sorts once. The downsample around it
-  * is relational. Per-user groups are intrinsically small
-  * (stops per human per period); the [[downsample]] grid-snap stage is the
-  * reference's own whale-group reduction (models.py:60-87); the neighbor
-  * scan itself is grid-pruned ([[NeighborSearch]]) so sparse whales cost
-  * near-linear time, not O(n²).
+  * It reads each uid's medians in stop_events order, the order and uid
+  * partitioning [[StopDetect.eventMedians]] emits (a stored frame gets one
+  * exchange and one sort), and emits them in stop_locations order, so from
+  * pings to HomeWork's labels the pipeline shuffles and sorts once. The
+  * downsample around it is relational. Per-user groups are intrinsically
+  * small (stops per human per period); the [[downsample]] grid-snap stage
+  * is the reference's own whale-group reduction (models.py:60-87); the
+  * neighbor scan itself is grid-pruned ([[NeighborSearch]]) so sparse
+  * whales cost near-linear time, not O(n²).
   *
   * Determinism contract (SURVEY §7 trap 6): the reference always runs
   * min_samples=2, where DBSCAN is exactly the connected components of the
@@ -57,12 +58,6 @@ object StopClusters {
       NeighborSearch.pairs(lat, lon, p.eps, p.metric,
         StopDetect.distance(p.metric, _, _, _, _), (i, j, _) => edge(i, j)))
 
-  private def exactMedian(xs: Array[Double]): Double = {
-    java.util.Arrays.sort(xs)
-    val n = xs.length
-    if (n % 2 == 1) xs(n / 2) else (xs(n / 2 - 1) + xs(n / 2)) / 2
-  }
-
   /** The per-user kernels' input: the six median columns, uid as it is,
     * the rest with the types the kernels read (stop_events and timestamps
     * Long, coordinates Double).
@@ -77,14 +72,15 @@ object StopClusters {
   private[operators] final case class MedianGroup(rows: Array[InternalRow],
       lat: Array[Double], lon: Array[Double], uid: Any)
 
-  /** A uid kernel over [[medianInput]] rows, one uid's medians at a time:
-    * `emit` gives the row index and the added values of each output row,
-    * in the order they leave. A null stop_events or coordinate is
-    * rejected.
+  /** A uid kernel over [[medianInput]] rows, one uid's medians at a time
+    * in stop_events order: `emit` gives the row index and the added values
+    * of each output row, in the order they leave. A null stop_events or
+    * coordinate is rejected.
     */
   private[operators] abstract class MedianKernel extends UidKernel {
     def emit(g: MedianGroup): Iterator[(Int, InternalRow)]
 
+    override def sortedBy: Seq[String] = Seq("stop_events")
     override def open(in: Seq[Attribute], out: UnsafeProjection)
     : Iterator[InternalRow] => Iterator[InternalRow] = {
       val joined = new JoinedRow
@@ -92,9 +88,11 @@ object StopClusters {
         "longitude").map(UidScan.ordinal(in, _))
       val uidType = in(uid).dataType
       rows => {
-        val rs = rows.map(_.copy()).toArray.sortBy(_.getLong(ev))
-        rs.foreach(r => require(!(r.isNullAt(ev) || r.isNullAt(lat) ||
-          r.isNullAt(lon)), s"null stop_events or coordinate in medians: $r"))
+        val rs = rows.map { r =>
+          require(!(r.isNullAt(ev) || r.isNullAt(lat) || r.isNullAt(lon)),
+            s"null stop_events or coordinate in medians: $r")
+          r.copy()
+        }.toArray
         val g = MedianGroup(rs, rs.map(_.getDouble(lat)),
           rs.map(_.getDouble(lon)), rs.head.get(uid, uidType))
         emit(g).map { case (k, v) => out(joined(g.rows(k), v)) }
@@ -104,7 +102,8 @@ object StopClusters {
 
   /** DBSCAN as a uid kernel: labels each of a uid's medians and appends the
     * cluster stats (models.py:239-263): cluster_counts and the cluster
-    * median coordinates; noise rows keep their own coordinates and count 1
+    * median coordinates, by [[StopDetect.medianOf]], the event medians'
+    * arithmetic; noise rows keep their own coordinates and count 1
     * (models.py:256-260). Rows leave in (stop_locations, stop_events)
     * order, the layout HomeWork's windows read.
     */
@@ -117,16 +116,21 @@ object StopClusters {
     override def emitsSortedBy: Option[Seq[String]] = Some(Seq("stop_locations"))
     override def emit(g: MedianGroup): Iterator[(Int, InternalRow)] = {
       val labels = dbscanLabels(g.lat, g.lon, p)
-      val stats = labels.indices.groupBy(labels(_)).collect {
-        case (lbl, ks) if lbl >= 0 => lbl -> ((ks.size.toLong,
-          exactMedian(ks.map(g.lat(_)).toArray),
-          exactMedian(ks.map(g.lon(_)).toArray)))
+      // noise first, then each cluster l, whose rows are order[from(l),
+      // from(l + 1)); rows keep stop_events order within a label
+      val order = labels.indices.sortBy(labels(_)).toArray
+      val size = new Array[Int](labels.max.toInt + 1)
+      labels.foreach(l => if (l >= 0) size(l.toInt) += 1)
+      val from = size.scanLeft(labels.length - size.sum)(_ + _)
+      val Seq(cLat, cLon) = Seq(g.lat, g.lon).map { xs =>
+        val byLabel = order.map(xs)
+        Array.tabulate(size.length)(l =>
+          StopDetect.medianOf(byLabel, from(l), from(l + 1)))
       }
-      labels.indices.sortBy(labels(_)).iterator.map { k =>
-        val lbl = labels(k)
-        val (cnt, cLat, cLon) =
-          if (lbl >= 0) stats(lbl) else (1L, g.lat(k), g.lon(k))
-        k -> InternalRow(lbl, cnt, cLat, cLon)
+      order.iterator.map { k =>
+        val l = labels(k).toInt
+        k -> (if (l < 0) InternalRow(-1L, 1L, g.lat(k), g.lon(k))
+          else InternalRow(l.toLong, size(l).toLong, cLat(l), cLon(l)))
       }
     }
   }

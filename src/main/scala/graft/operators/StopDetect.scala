@@ -72,14 +72,6 @@ object StopDetect {
       Math.sqrt(StrictMath.pow(lat2 - lat1, 2) + StrictMath.pow(lon2 - lon1, 2))
     else Haversine.compute(lat1, lon1, lat2, lon2)
 
-  /** A ping is stationary when its next ping lies within `rC` and, unless
-    * the gap is unknown (`timed = false`: a null timestamp), within
-    * `maxStayingTime`.
-    */
-  def isStationary(p: Params, distance: Double, timeDiff: Long,
-                   timed: Boolean = true): Boolean =
-    distance <= p.rC && (!timed || timeDiff <= p.maxStayingTime)
-
   /** A closed run is kept as an event when it is long enough in pings and
     * in time (its summed forward gaps).
     */
@@ -113,15 +105,68 @@ object StopDetect {
       s"$caller: $c must be integral, got ${t.simpleString}")
 
   /** The stop rule over one uid's pings, which arrive sorted by timestamp:
-    * the one walker behind both stop kernels. A stretch is a run of
-    * stationary pings and the ping that ends it; a ping is stationary when
-    * its successor is near (distance and time gap look forward). The walker
-    * owns stationarity, the gap, the keep rule and the event ids; a kernel
-    * only buffers the pings of the open stretch (`add`) and turns each
-    * closed stretch into output rows (`close`). So memory is bounded by the
+    * the one walker behind both stop kernels and both streaming state
+    * functions. A stretch is a run of stationary pings and the ping that
+    * ends it. A ping is stationary when its successor lies within `rC`
+    * and, unless the gap is unknown (a null timestamp), within
+    * `maxStayingTime`. The walker owns stationarity, the gap, the keep rule
+    * and the event ids; its state, which a stream keeps between
+    * micro-batches, is the last ping (`la`/`lo` hold when `located`, `t`
+    * when `timed`), the open stretch (`k` stationary pings, whether a timed
+    * step is among them, their summed timed steps) and the next id. A
+    * caller buffers the open stretch's pings, so memory is bounded by the
     * longest stretch, not by the busiest user.
     */
-  private abstract class Stretches(p: Params, in: Seq[Attribute]) {
+  final case class Stretches(
+      var started: Boolean = false,
+      var located: Boolean = false, var la: Double = 0.0, var lo: Double = 0.0,
+      var timed: Boolean = false, var t: Long = 0L,
+      var k: Int = 0, var timedSteps: Boolean = false, var total: Long = 0L,
+      var nextId: Long = 1L) {
+
+    /** The stretch the last `step` or `end` closed: its first `closedK`
+      * pings are stationary, and `closedId` is its event id when it is
+      * kept as an event, else -1.
+      */
+    var closedK = 0
+    var closedId = -1L
+
+    /** Reads the next ping, allocating nothing; true when it closes the
+      * open stretch, which the ping does not belong to.
+      */
+    def step(p: Params, located: Boolean, la: Double, lo: Double,
+             timed: Boolean, t: Long): Boolean = {
+      val both = this.timed && timed
+      val gap = if (both) t - this.t else 0L
+      val closes = started && !(this.located && located &&
+        distance(p.metric, this.la, this.lo, la, lo) <= p.rC &&
+        (!both || gap <= p.maxStayingTime))
+      if (closes) end(p)
+      else if (started) { k += 1; if (both) { timedSteps = true; total += gap } }
+      started = true
+      this.located = located; this.la = la; this.lo = lo
+      this.timed = timed; this.t = t
+      closes
+    }
+
+    /** Closes the open stretch, also at the end of the pings. One with a
+      * stationary ping uses up an id, kept or not.
+      */
+    def end(p: Params): Unit = {
+      closedK = k
+      closedId = if (k == 0) -1L else {
+        nextId += 1
+        if (timedSteps && keepRun(p, k, total)) nextId - 1 else -1L
+      }
+      k = 0; timedSteps = false; total = 0L
+    }
+  }
+
+  /** [[Stretches]] over a uid kernel's rows: a kernel buffers the pings of
+    * the open stretch (`add`) and turns each closed stretch into output
+    * rows (`close`).
+    */
+  private abstract class StretchScan(p: Params, in: Seq[Attribute]) {
     private val Seq(lat, lon, ts) =
       Seq("latitude", "longitude", "timestamp").map(UidScan.ordinal(in, _))
     private val (latOf, lonOf, tsOf) = (UidScan.doubles(in, "latitude"),
@@ -144,68 +189,21 @@ object StopDetect {
     protected def close(k: Int, id: Long): Iterator[InternalRow]
 
     /** The output of one uid's pings, one closed stretch at a time. */
-    def scan(rows: Iterator[InternalRow]): Iterator[InternalRow] =
-      new Iterator[InternalRow] {
-        private var closed: Iterator[InternalRow] = Iterator.empty
-        private var open = false // the uid's first ping has been read
-        // the last ping read
-        private var located, timed = false
-        private var la, lo = 0.0
-        private var t = 0L
-        // the open stretch: stationary pings, a timed step among them, the
-        // summed timed steps; and the next event id
-        private var k = 0
-        private var timedSteps = false
-        private var total = 0L
-        private var nextId = 1L
-
-        def hasNext: Boolean = {
-          while (!closed.hasNext && (open || rows.hasNext)) closed = advance()
-          closed.hasNext
-        }
-        def next(): InternalRow = { hasNext; closed.next() }
-
-        /** Reads pings until a stretch closes; returns its output. */
-        private def advance(): Iterator[InternalRow] = {
-          while (rows.hasNext) {
-            val r = rows.next()
-            val rLocated = !(r.isNullAt(lat) || r.isNullAt(lon))
-            val rLa = if (rLocated) latOf(r) else 0.0
-            val rLo = if (rLocated) lonOf(r) else 0.0
-            val rTimed = !r.isNullAt(ts)
-            val rT = if (rTimed) tsOf(r) else 0L
-            var out: Iterator[InternalRow] = null
-            if (!open) { start(r); open = true }
-            else {
-              val both = timed && rTimed
-              val gap = if (both) rT - t else 0L
-              if (located && rLocated &&
-                  isStationary(p, distance(p.metric, la, lo, rLa, rLo), gap, both)) {
-                k += 1
-                if (both) { timedSteps = true; total += gap }
-              } else out = end()
-            }
-            add(r, rLocated, rLa, rLo, rTimed, rT)
-            located = rLocated; la = rLa; lo = rLo; timed = rTimed; t = rT
-            if (out != null) return out
-          }
-          open = false
-          end()
-        }
-
-        /** Closes the open stretch. One with a stationary ping uses up an
-          * id, kept or not.
-          */
-        private def end(): Iterator[InternalRow] = {
-          val id = if (k == 0) -1L else {
-            nextId += 1
-            if (timedSteps && keepRun(p, k, total)) nextId - 1 else -1L
-          }
-          val out = close(k, id)
-          k = 0; timedSteps = false; total = 0L
-          out
-        }
-      }
+    def scan(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
+      val walk = Stretches()
+      rows.flatMap { r =>
+        val located = !(r.isNullAt(lat) || r.isNullAt(lon))
+        val la = if (located) latOf(r) else 0.0
+        val lo = if (located) lonOf(r) else 0.0
+        val timed = !r.isNullAt(ts)
+        val t = if (timed) tsOf(r) else 0L
+        if (!walk.started) start(r)
+        val out = if (walk.step(p, located, la, lo, timed, t))
+          close(walk.closedK, walk.closedId) else Iterator.empty
+        add(r, located, la, lo, timed, t)
+        out
+      } ++ { walk.end(p); close(walk.closedK, walk.closedId) }
+    }
   }
 
   /** The stop rule as a uid kernel: appends `stop_events` to each of a
@@ -221,7 +219,7 @@ object StopDetect {
     : Iterator[InternalRow] => Iterator[InternalRow] = {
       // the output keeps every input column in place, stop_events is last
       val (unset, joined, event) = (InternalRow(-1L), new JoinedRow, in.length)
-      new Stretches(p, in) {
+      new StretchScan(p, in) {
         private val stretch = ArrayBuffer.empty[InternalRow]
         protected def add(r: InternalRow, located: Boolean, la: Double,
                           lo: Double, timed: Boolean, t: Long): Unit =
@@ -354,8 +352,8 @@ object StopDetect {
         if (timed) asTime(first) else null, if (timed) asTime(last) else null)))
     }
 
-    /** `median` of the non-null values in [from, until), null when there
-      * are none. Sorted by `Arrays.sort`: NaN last, and -0.0 before 0.0.
+    /** [[medianOf]] the non-null values in [from, until), null when there
+      * are none.
       */
     private def median(xs: Array[Double], ok: Array[Boolean],
                        from: Int, until: Int): Any = {
@@ -365,12 +363,7 @@ object StopDetect {
         if (ok(i)) { scratch(m) = xs(i); m += 1 }
         i += 1
       }
-      if (m == 0) null
-      else {
-        Arrays.sort(scratch, 0, m)
-        val (lo, hi) = (scratch((m - 1) / 2), scratch(m / 2))
-        if (m % 2 == 1) lo else 0.5 * lo + 0.5 * hi
-      }
+      if (m == 0) null else medianOf(scratch, 0, m)
     }
 
     private def integral(t: DataType): Long => Any = t match {
@@ -379,6 +372,23 @@ object StopDetect {
       case IntegerType => _.toInt
       case _ => v => v
     }
+  }
+
+  /** The median of the values in [from, until), a non-empty range, which
+    * it sorts in place by `Arrays.sort` (NaN last, -0.0 before 0.0), with
+    * Spark's `median` arithmetic (PercentileBase.getPercentile): the middle
+    * value when the count is odd, `0.5 * lo + 0.5 * hi` when it is even.
+    * The one median of the per-user kernels: event medians and DBSCAN's
+    * cluster medians. It equals `(lo + hi) / 2` bit for bit unless
+    * `lo + hi` overflows or a value lies below 2^-1021 in magnitude, where
+    * halving rounds. Neither happens to a coordinate: its magnitude is at
+    * most 180, and 2^-1021 degrees is far below any position fix.
+    */
+  private[graft] def medianOf(xs: Array[Double], from: Int, until: Int): Double = {
+    Arrays.sort(xs, from, until)
+    val m = until - from
+    val lo = xs(from + (m - 1) / 2)
+    if (m % 2 == 1) lo else 0.5 * lo + 0.5 * xs(from + m / 2)
   }
 
   /** Stops and medians in one scan of the pings, for `eventMedians` over
@@ -392,7 +402,7 @@ object StopDetect {
     override def open(in: Seq[Attribute], out: UnsafeProjection)
     : Iterator[InternalRow] => Iterator[InternalRow] = {
       val rows = new MedianRows(in, out, LongType)
-      new Stretches(p, in) {
+      new StretchScan(p, in) {
         override protected def start(first: InternalRow): Unit = rows.start(first)
         protected def add(r: InternalRow, located: Boolean, la: Double,
                           lo: Double, timed: Boolean, t: Long): Unit =

@@ -6,18 +6,25 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental stop detection over a ping stream, via
-  * flatMapGroupsWithState. It applies the same stop rule as the batch
-  * StopDetect.stopEvents scan (StopDetect.distance, isStationary and
-  * keepRun), one micro-batch at a time, with the open run kept in state.
+  * flatMapGroupsWithState. It runs the same walker as the batch
+  * StopDetect.stopEvents scan ([[StopDetect.Stretches]]), one micro-batch
+  * at a time: each uid's state is the walker value and the pings of its
+  * open stretch, and a closed stretch leaves by the batch kernel's rule.
   *
   * Batch-equivalence contract (verified in StreamingStopDetectSpec):
   * emitted rows match the batch operator exactly for every ping that has
   * been classified — a ping classifies when its successor arrives
   * (stationarity is forward-looking), so each user's latest ping (and any
   * still-open run) stays pending in state rather than being emitted with
-  * a provisional label. Event ids are assigned at run START and are not
-  * renumbered when a run is later invalidated, matching the batch cumsum
-  * (invalidation happens after id assignment, reference utils.py:375-400).
+  * a provisional label. Event ids are the walker's, counted per uid
+  * across micro-batches; an invalidated run still uses up its id, as in
+  * batch (reference utils.py:375-400).
+  *
+  * Null contract: [[Ping]]'s coordinates and timestamp are primitive, so a
+  * source row with a null in one of them cannot become a Ping. The query
+  * fails with `NOT_NULL_ASSERT_VIOLATION` naming the field, where batch
+  * stopEvents would break the run at that ping. Drop or fill nulls before
+  * the stream reaches these functions.
   *
   * Two arrival models:
   *  - stopEvents: assumes per-user in-order arrival ACROSS batches (the
@@ -27,11 +34,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    watermark delay. Pings buffer in state until the event-time
   *    watermark passes them (no earlier ping can still arrive — Spark
   *    drops later-than-watermark stragglers before the state function),
-  *    then feed the same automaton in timestamp order. State per uid is
-  *    O(pings inside the lateness window) + O(open run).
+  *    then feed the same walker in timestamp order. State per uid is
+  *    O(pings inside the lateness window) + O(open run). A checkpoint
+  *    restores only into the state schema that wrote it.
   */
-// Serializable: the state functions below call the shared `advance`
-// automaton, so executor closures capture the module reference.
+// Serializable: the state functions below call the shared `walk`, so
+// executor closures capture the module reference.
 object StreamingStopDetect extends Serializable {
 
   final case class Ping(uid: String, latitude: Double, longitude: Double,
@@ -41,72 +49,47 @@ object StreamingStopDetect extends Serializable {
                            latitude: Double, longitude: Double,
                            timestamp: Long)
 
-  /** prev = last unclassified ping; run/runTimes = open stationary run
-    * (reversed); runId = open run's assigned id (0 = none);
-    * nextId = id for the next run start.
-    */
-  final case class UserState(prev: Option[Ping], run: List[StopRow],
-                             runTimes: List[Long], runId: Long, nextId: Long)
+  /** A uid's walker and the pings of its open stretch, newest first. */
+  final case class OpenStretch(
+      walk: StopDetect.Stretches = StopDetect.Stretches(), pings: List[Ping] = Nil)
 
-  /** stopEventsUnordered state: the automaton plus the not-yet-safe
+  /** stopEventsUnordered state: the open stretch plus the not-yet-safe
     * event-time buffer.
     */
-  final case class BufferedState(buffer: List[Ping], auto: UserState)
+  final case class BufferedState(buffer: List[Ping], open: OpenStretch)
 
-  private val emptyState = UserState(None, Nil, Nil, 0L, 1L)
-
-  /** Advance the per-user automaton over `sorted` (ascending timestamp)
-    * pings, returning the new state and every newly classified row.
+  /** Feeds one uid's `sorted` (ascending timestamp) pings to the walker of
+    * `open`; returns the stretch left open and the rows of every stretch
+    * that closed: its first k pings with the event id (or -1), the ending
+    * ping -1.
     */
-  private def advance(uid: String, sorted: Seq[Ping], st0: UserState,
-                      p: StopDetect.Params)
-  : (UserState, Seq[StopRow]) = {
-    var st = st0
+  private def walk(open: OpenStretch, sorted: Seq[Ping], p: StopDetect.Params)
+  : (OpenStretch, Seq[StopRow]) = {
+    val w = open.walk
+    var pings = open.pings
     val out = scala.collection.mutable.ArrayBuffer.empty[StopRow]
-    sorted.foreach { cur =>
-      st.prev match {
-        case None => st = st.copy(prev = Some(cur))
-        case Some(prev) =>
-          val dt = cur.timestamp - prev.timestamp
-          val stationary = StopDetect.isStationary(p,
-            StopDetect.distance(p.metric, prev.latitude, prev.longitude,
-              cur.latitude, cur.longitude), dt)
-          if (stationary) {
-            val id = if (st.run.isEmpty) st.nextId else st.runId
-            st = UserState(
-              prev = Some(cur),
-              run = StopRow(uid, id, prev.latitude, prev.longitude,
-                prev.timestamp) :: st.run,
-              runTimes = dt :: st.runTimes,
-              runId = id,
-              nextId = if (st.run.isEmpty) st.nextId + 1 else st.nextId)
-          } else {
-            // prev is non-stationary: close any open run (its times
-            // already include each event row's forward gap), emit
-            // prev itself as -1
-            if (st.run.nonEmpty) {
-              val ok = StopDetect.keepRun(p, st.run.size, st.runTimes.sum)
-              out ++= (if (ok) st.run.reverse
-                else st.run.reverse.map(_.copy(stop_events = -1L)))
-            }
-            out += StopRow(uid, -1L, prev.latitude, prev.longitude,
-              prev.timestamp)
-            st = st.copy(prev = Some(cur), run = Nil, runTimes = Nil,
-              runId = 0L)
-          }
+    sorted.foreach { c =>
+      if (w.step(p, located = true, c.latitude, c.longitude, timed = true,
+          c.timestamp)) {
+        pings.reverse.iterator.zipWithIndex.foreach { case (q, i) =>
+          out += StopRow(q.uid, if (i < w.closedK) w.closedId else -1L,
+            q.latitude, q.longitude, q.timestamp)
+        }
+        pings = Nil
       }
+      pings = c :: pings
     }
-    (st, out.toSeq)
+    (OpenStretch(w, pings), out.toSeq)
   }
 
   def stopEvents(pings: Dataset[Ping], p: StopDetect.Params): DataFrame = {
     import pings.sparkSession.implicits._
 
     def step(uid: String, it: Iterator[Ping],
-             gs: GroupState[UserState]): Iterator[StopRow] = {
-      val st0 = gs.getOption.getOrElse(emptyState)
-      val (st, out) = advance(uid, it.toArray.sortBy(_.timestamp), st0, p)
-      gs.update(st)
+             gs: GroupState[OpenStretch]): Iterator[StopRow] = {
+      val (open, out) = walk(gs.getOption.getOrElse(OpenStretch()),
+        it.toList.sortBy(_.timestamp), p)
+      gs.update(open)
       out.iterator
     }
 
@@ -125,7 +108,7 @@ object StreamingStopDetect extends Serializable {
     * seconds; pings may arrive shuffled within `latenessSeconds` of the
     * stream's max seen event time. Each micro-batch buffers its pings in
     * state; once the watermark passes a ping (watermark = max event time −
-    * lateness, updated at batch boundaries), it is fed to the automaton in
+    * lateness, updated at batch boundaries), it is fed to the walker in
     * timestamp order. Spark itself drops pings that arrive later than the
     * watermark, so the buffer's order, once drained, is final — the
     * batch-equivalence contract is unchanged for every ping that was not
@@ -137,7 +120,7 @@ object StreamingStopDetect extends Serializable {
 
     def step(uid: String, it: Iterator[PingEv],
              gs: GroupState[BufferedState]): Iterator[StopRow] = {
-      val st0 = gs.getOption.getOrElse(BufferedState(Nil, emptyState))
+      val st0 = gs.getOption.getOrElse(BufferedState(Nil, OpenStretch()))
       val incoming = it.map(pe =>
         Ping(pe.uid, pe.latitude, pe.longitude, pe.timestamp)).toList
       val buffered = incoming reverse_::: st0.buffer
@@ -147,8 +130,8 @@ object StreamingStopDetect extends Serializable {
       val wmMs = gs.getCurrentWatermarkMs()
       val wmSec = wmMs / 1000L
       val (safe, pending) = buffered.partition(_.timestamp < wmSec)
-      val (auto, out) = advance(uid, safe.sortBy(_.timestamp), st0.auto, p)
-      gs.update(BufferedState(pending, auto))
+      val (open, out) = walk(st0.open, safe.sortBy(_.timestamp), p)
+      gs.update(BufferedState(pending, open))
       // A quiet user's group is only re-invoked on timeout — without one,
       // buffered pings would never classify until that user pinged again.
       // Fire once the watermark strictly passes the oldest pending ping.

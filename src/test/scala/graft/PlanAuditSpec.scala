@@ -21,9 +21,9 @@ class PlanAuditSpec extends SparkSpec {
     "Exchange hashpartitioning".r.findAllIn(plan).size
 
   test("stop pipeline: ONE uid exchange end to end (pings -> medians)") {
-    // the stop scan and the median kernel are two uid kernels on the same
-    // uid attribute: the medians reuse the scan's uid hash partitioning,
-    // so Catalyst plans exactly one shuffle for the entire pipeline.
+    // the stop scan emits the medians itself (one StopMedians uid kernel),
+    // so Catalyst plans exactly one shuffle, on uid, for the entire
+    // pipeline.
     val medians = StopDetect.eventMedians(
       StopDetect.stopEvents(Tables.pings(spark, sf), StopDetect.Params()))
     val plan = planOf(medians)
@@ -161,6 +161,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(n(p => p.isInstanceOf[AppendColumnsExec] ||
       p.isInstanceOf[MapGroupsExec]) === 0,
       s"no typed per-cluster path:\n${planOf(hulls)}")
+  }
+
+  test("cluster over stored medians: one uid exchange, one (uid, stop_events) sort") {
+    import graft.operators.StopClusters
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.{GraftPlanAudit, SortExec}
+    val dir = java.nio.file.Files.createTempDirectory("graft_medians_plan").toString
+    StopDetect.eventMedians(StopDetect.stopEvents(PipelineFixture.pings(spark),
+      StopDetect.Params())).write.mode("overwrite").parquet(dir)
+    val clusters = StopClusters.cluster(spark.read.parquet(dir),
+      StopClusters.Params())
+    assert(clusters.collect().nonEmpty)
+    assert(GraftPlanAudit.shuffleCount(clusters) === 1, planOf(clusters))
+    val sorts = GraftPlanAudit.collectFinal(clusters) {
+      case s: SortExec => Some(s.sortOrder.map(_.child).collect {
+        case a: Attribute => a.name })
+      case _ => None
+    }
+    assert(sorts === Seq(Seq("uid", "stop_events")), planOf(clusters))
   }
 
   test("ingest write: one CSV scan, one uid hash, no join, uid then date exchange") {

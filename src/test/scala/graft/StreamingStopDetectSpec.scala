@@ -93,4 +93,39 @@ class StreamingStopDetectSpec extends SparkSpec {
       assert(streamed.toSeq === batchAll.toSeq.dropRight(1))
     } finally q.stop()
   }
+
+  test("a null coordinate fails the stream, where batch breaks the run") {
+    import org.apache.spark.SparkThrowable
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("uid", StringType),
+      StructField("latitude", DoubleType), StructField("longitude", DoubleType),
+      StructField("timestamp", LongType)))
+    val rows = Seq(0L, 400L, 800L, 1200L, 1600L).map(t =>
+      Row("u", if (t == 400L) null else 19.0, -99.0, t))
+    val pings = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema)
+    val src = java.nio.file.Files.createTempDirectory("graft-null-src-")
+    pings.coalesce(1).write.mode("overwrite").parquet(src.toString)
+
+    // batch: the null ping and the ping before it are -1, the rest a stop
+    assert(StopDetect.stopEvents(pings, p).orderBy("timestamp")
+      .collect().map(_.getAs[Long]("stop_events")).toSeq ===
+      Seq(-1L, -1L, 1L, 1L, -1L))
+
+    // streaming: the null cannot become a Ping's primitive latitude
+    val q = StreamingStopDetect.stopEvents(
+      spark.readStream.schema(schema).parquet(src.toString).as[Ping], p)
+      .writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName("sstops_null").start()
+    val e = try intercept[StreamingQueryException](q.processAllAvailable())
+      finally q.stop()
+    // the cause is a SparkRuntimeException, a class private to Spark
+    val cause = Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case r: SparkThrowable => r }
+    assert(cause.map(c => (c.getClass.getName, c.getCondition)) ===
+      Some(("org.apache.spark.SparkRuntimeException", "NOT_NULL_ASSERT_VIOLATION")), e)
+    assert(e.getMessage.contains("name: \"latitude\""), e)
+  }
 }
