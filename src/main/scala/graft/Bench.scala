@@ -24,7 +24,7 @@ object Bench {
   def force(df: DataFrame): Long = {
     // bit_xor, not sum: summing 64-bit hashes overflows under ANSI mode
     val row = df
-      .select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
+      .select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).as("h"))
       .agg(bit_xor(col("h"))).collect()(0)
     if (row.isNullAt(0)) 0L else row.getLong(0)
   }

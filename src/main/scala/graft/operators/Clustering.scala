@@ -62,7 +62,7 @@ object Clustering {
     */
   private[graft] def composedAkey(qv: Column, cents: Array[Array[Long]])
   : Column =
-    least(cents.zipWithIndex.map { case (c, j) =>
+    least(cents.toIndexedSeq.zipWithIndex.map { case (c, j) =>
       val dist = c.indices.map { d =>
         val diff = element_at(qv, d + 1) - lit(c(d))
         diff * diff

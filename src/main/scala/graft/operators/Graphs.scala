@@ -115,10 +115,9 @@ object Graphs {
   }
 
   /** Run `body` (an iterative loop) with the AQE coalescing floor
-    * restored to Spark's default (conf
-    * `spark.graft.loopMinPartitionSize` overrides; session value
-    * restored after). The harness sessions pin a 128k floor to keep
-    * CPU-dense tiny shuffles parallel (Bench.scala), but a graph loop's
+    * restored to Spark's default (session value restored after). The
+    * harness sessions pin a 128k floor to keep CPU-dense tiny shuffles
+    * parallel (Bench.scala), but a graph loop's
     * per-round shuffles are latency-bound joins/aggregates over
     * (id, label) longs — extra width only adds task scheduling to every
     * round (measured r14: q69 3.66→3.26 s, q122/q129 −9% with the
@@ -130,15 +129,20 @@ object Graphs {
   private def withLoopCoalesce[T](
       spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val target = spark.conf.getOption("spark.graft.loopMinPartitionSize")
-      .getOrElse("1m")
     val saved = spark.conf.getOption(key)
-    spark.conf.set(key, target)
+    spark.conf.unset(key)
     try body finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
   }
+
+  /** Node bound under which a graph loop hints its |V|-sized frames
+    * broadcast (pageRank's ranks, kCore's alive set, the hop loops'
+    * distance and frontier frames): 2^20 ids is 8 MB of longs. See
+    * [[pageRank]] for why checkpointed frames need the hint.
+    */
+  private val BroadcastNodes = 1L << 20
 
   /** Edge-count bound for the driver union-find fast path (0 disables).
     * The iterative loop pays one driver-synchronized job per round
@@ -426,16 +430,13 @@ object Graphs {
     // "huge"), so without an explicit hint every per-round join would
     // plan as a sort-merge join that re-shuffles the FULL edge list each
     // iteration — measured 10x the broadcast plan on a 2k-node graph.
-    // Under the node bound, hint the |V|-sized frames broadcast: the
+    // Under [[BroadcastNodes]], hint the |V|-sized frames broadcast: the
     // round becomes one map-side join over the (cached, pre-partitioned)
     // edge blocks plus a partial-agg shuffle of |V| combined rows. Above
     // the bound (a billion-node graph's rank table does not fit an
     // executor) the shuffle join IS the right plan — same loop, no hint.
-    val bcastNodes = edges.sparkSession.conf
-      .getOption("spark.graft.pageRankBroadcastNodes")
-      .map(_.toLong).getOrElse(1L << 20)
     def hint(df: DataFrame): DataFrame =
-      if (n <= bcastNodes) broadcast(df) else df
+      if (n <= BroadcastNodes) broadcast(df) else df
     // rank frame carries deg so the per-round share needs no join
     var ranks = deg.withColumn("rank", lit(1.0 / n))
     var iter = 0
@@ -831,15 +832,12 @@ object Graphs {
     // per-round join plans as a sort-merge that re-shuffles the FULL
     // edge list each iteration — the pageRank lesson
     // (see [[pageRank]]'s hint scaladoc; measured ~10x there). Under
-    // the node bound, hint the |V|-sized alive frame broadcast: a round
-    // becomes two map-side joins over the cached edge blocks plus one
-    // partial-agg shuffle. Above the bound the shuffle join IS the
+    // [[BroadcastNodes]], hint the |V|-sized alive frame broadcast: a
+    // round becomes two map-side joins over the cached edge blocks plus
+    // one partial-agg shuffle. Above the bound the shuffle join IS the
     // right plan — same loop, no hint.
-      val bcastNodes = spark.conf
-        .getOption("spark.graft.kCoreBroadcastNodes")
-        .map(_.toLong).getOrElse(1L << 20)
       def hint(df: DataFrame): DataFrame =
-        if (nAlive <= bcastNodes) broadcast(df) else df
+        if (nAlive <= BroadcastNodes) broadcast(df) else df
       var rounds = 0
       // loop-scoped AQE floor — see [[withLoopCoalesce]]
       withLoopCoalesce(spark) { while (rounds < maxRounds) {
@@ -972,11 +970,8 @@ object Graphs {
     var dist = truncate(seeds
       .select(col(seedCol).cast("long").as("id")).distinct()
       .withColumn("dist", lit(0L)))
-    // |V|-bounded dist frame broadcast under the conf bound — the
+    // |V|-bounded dist frame broadcast under [[BroadcastNodes]] — the
     // checkpointed-sym-has-no-stats trap, see [[kCore]]/[[pageRank]]
-    val bcastNodes = edges.sparkSession.conf
-      .getOption("spark.graft.graphBroadcastNodes")
-      .map(_.toLong).getOrElse(1L << 20)
     // ONE job per hop (loop-scoped AQE floor, see [[withLoopCoalesce]]):
     // the broadcast decision reads the PREVIOUS round's materialize
     // tally instead of a per-round dist.count() job (an inflated retry
@@ -987,7 +982,7 @@ object Graphs {
       while (hop < maxHops) {
         val distU = dist.select(col("id").as("u"), col("dist"))
         val relaxed = sym
-          .join(if (distCount <= bcastNodes) broadcast(distU) else distU,
+          .join(if (distCount <= BroadcastNodes) broadcast(distU) else distU,
             "u")
           .select(col("v").as("id"), (col("dist") + col("w")).as("dist"))
         val (frame, tally) = truncateTallied(
@@ -1033,11 +1028,8 @@ object Graphs {
     val seed0 = truncate(
       seeds.select(col(seedCol).cast("long").as("id")).distinct())
     var visited = seed0.withColumn("dist", lit(0L))
-    // |V|-bounded frontier broadcast under the conf bound — the
+    // |V|-bounded frontier broadcast under [[BroadcastNodes]] — the
     // checkpointed-sym-has-no-stats trap, see [[kCore]]/[[pageRank]]
-    val bcastNodes = edges.sparkSession.conf
-      .getOption("spark.graft.graphBroadcastNodes")
-      .map(_.toLong).getOrElse(1L << 20)
     // ONE job per hop (was four: limit(1) probe + frontier count +
     // frontier truncate + visited truncate — q122 ran 49 driver-
     // synchronized jobs for 102 tasks, ~40% of its wall between jobs):
@@ -1053,7 +1045,7 @@ object Graphs {
         val frontU = visited.filter(col("dist") === lit(hop - 1L))
           .select(col("id").as("u"))
         val next = sym.join(
-            if (frontCount <= bcastNodes) broadcast(frontU) else frontU,
+            if (frontCount <= BroadcastNodes) broadcast(frontU) else frontU,
             "u")
           .select(col("v").as("id"))
           .distinct()

@@ -48,7 +48,8 @@ object Indexing {
       offsets(p) = acc; acc += counts.getOrElse(p, 0L)
     }
     val offsetOfPid =
-      element_at(array(offsets.map(lit): _*), spark_partition_id() + 1)
+      element_at(array(offsets.map(lit).toIndexedSeq: _*),
+        spark_partition_id() + 1)
     val inPartitionOrdinal =
       monotonically_increasing_id().bitwiseAND((1L << 33) - 1)
     sorted.withColumn(indexCol, offsetOfPid + inPartitionOrdinal)

@@ -135,9 +135,9 @@ object Similarity {
       .orderBy(xxhash64(col("vec_id"), lit(seed)), col("vec_id"))
       .limit(trainCap)
       .cache()
-    val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-      .fit(train)
-    train.unpersist()
+    val model =
+      try new KMeans().setK(nlist).setSeed(seed).setMaxIter(10).fit(train)
+      finally train.unpersist(): Unit
     val assigned = model.transform(corpusVec)
       .withColumnRenamed("prediction", "cell")
       .drop("features")

@@ -162,37 +162,30 @@ object StreamMatView {
       .map(_.stripPrefix("manifest_v").stripSuffix(".tsv").toLong)
   }
 
+  /** Run `body` with the fold-internal shuffle width, restoring the
+    * session value after (the conf is read per job inside foreachBatch).
+    * Each foreachBatch body runs 2-3 key-sized jobs (partial aggregate,
+    * outer merge, state write) whose reduce sides are state-sized, not
+    * history-sized — running them at the session's scan-width shuffle
+    * setting pays per-task scheduling for empty partitions every batch
+    * (measured ~0.3 s/batch at 32 vs 16 on the q247 gate). The session
+    * value is clamped to `cap` (the delta layout passes its bucket count —
+    * the write's own granularity).
+    */
+  private def withFoldShuffle[T](spark: SparkSession, cap: Int)(body: => T)
+  : T = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key,
+      math.min(spark.sessionState.conf.numShufflePartitions, cap).toString)
+    try body finally spark.conf.set(key, saved)
+  }
+
   /** Full-snapshot fold loop shared by [[runFold]] and
     * [[runFoldBitmap]]: every batch merges the previous snapshot with
     * its own partial (already shaped by `aggregate`) and overwrites
     * `state_v{bid}`.
     */
-  /** Fold-internal shuffle parallelism: each foreachBatch body runs 2-3
-    * key-sized jobs (partial aggregate, outer merge, state write) whose
-    * reduce sides are state-sized, not history-sized — running them at
-    * the session's scan-width shuffle setting pays per-task scheduling
-    * for empty partitions every batch (measured ~0.3 s/batch at 32 vs
-    * 16 on the q247 gate). Conf `spark.graft.foldShuffle` overrides for
-    * production key cardinalities; the default clamps the session value
-    * to `cap` (the delta layout passes its bucket count — the write's
-    * own granularity).
-    */
-  private def foldShuffle(spark: SparkSession, cap: Int): Int =
-    spark.conf.getOption("spark.graft.foldShuffle").map(_.toInt)
-      .getOrElse(math.min(
-        spark.sessionState.conf.numShufflePartitions, cap))
-
-  /** Run `body` with the fold's shuffle width, restoring the session
-    * value after (the conf is read per job inside foreachBatch).
-    */
-  private def withFoldShuffle[T](spark: SparkSession, n: Int)(body: => T)
-  : T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, saved)
-  }
-
   private def foldSnapshotLoop(stream: DataFrame, keys: Seq[String],
                                stateDir: String,
                                aggregate: DataFrame => DataFrame,
@@ -216,7 +209,7 @@ object StreamMatView {
         (): Unit
       }
       .trigger(Trigger.AvailableNow())
-    withFoldShuffle(spark, foldShuffle(spark, 16)) {
+    withFoldShuffle(spark, 16) {
       val q = withCheckpoint(w, spark, stateDir).start()
       try q.processAllAvailable() finally q.stop()
       q.exception.foreach(throw _)
@@ -377,7 +370,8 @@ object StreamMatView {
             val merged =
               if (prevPaths.isEmpty) inc
               else merge(
-                spark.read.parquet(prevPaths.map(p => s"$stateDir/$p"): _*),
+                spark.read.parquet(
+                  prevPaths.map(p => s"$stateDir/$p").toIndexedSeq: _*),
                 inc.drop("__bucket")).withColumn("__bucket", bucketOf)
             // explicit width: the write's granularity is the bucket, so
             // more than nBuckets shuffle partitions only schedules empty
@@ -394,7 +388,7 @@ object StreamMatView {
         (): Unit
       }
       .trigger(Trigger.AvailableNow())
-    withFoldShuffle(spark, foldShuffle(spark, nBuckets)) {
+    withFoldShuffle(spark, nBuckets) {
       val q = withCheckpoint(w, spark, stateDir).start()
       try q.processAllAvailable() finally q.stop()
       q.exception.foreach(throw _)

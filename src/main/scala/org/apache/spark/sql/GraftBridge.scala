@@ -31,4 +31,11 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The private[spark] ordered `withColumns`: `withColumn`'s rule
+    * (replace in place, else append) for several columns in one Project.
+    */
+  def withColumns(df: DataFrame, names: Seq[String],
+                  cols: Seq[Column]): DataFrame =
+    df.withColumns(names, cols)
 }

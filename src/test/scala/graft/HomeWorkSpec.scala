@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.HomeWork
+import org.apache.spark.sql.functions.lit
 
 class HomeWorkSpec extends SparkSpec {
   import spark.implicits._
@@ -147,6 +148,47 @@ class HomeWorkSpec extends SparkSpec {
     assert(wide.head.getAs[Double]("h_lat") === 11.0)
     assert(wide.head.getAs[Double]("h_lon") === -11.0)
     assert(wide.head.getAs[Double]("w_lat") === 13.0)
+  }
+
+  test("label's schema, and a convertTz day across a local midnight, " +
+    "in both span modes") {
+    // Mexico City is UTC-6 all year since 2022: 2023-03-07 05:30 and
+    // 06:30 UTC are Monday 23:30 and Tuesday 00:30 there, and 02:00 UTC
+    // is Monday 20:00, neither a night nor a work hour (in UTC, a night)
+    val mx = p.copy(convertTz = true, tz = "America/Mexico_City")
+    val df = clusters(
+      ("u", 1L, 0L, 1678167000L, 1678167600L),
+      ("u", 2L, 0L, 1678170600L, 1678171200L),
+      ("u", 3L, 1L, 1678154400L, 1678155000L))
+      .withColumn("hour", lit("stale")) // replaced in place, not repeated
+    val schema = Seq("uid" -> "string", "stop_events" -> "bigint",
+      "latitude" -> "double", "longitude" -> "double",
+      "start_timestamp" -> "bigint", "end_timestamp" -> "bigint",
+      "stop_locations" -> "bigint", "cluster_counts" -> "bigint",
+      "cluster_latitude" -> "double", "cluster_longitude" -> "double",
+      "hour" -> "int", "t_start" -> "timestamp", "t_end" -> "timestamp",
+      "year" -> "int", "month" -> "int", "day" -> "int", "date" -> "date",
+      "weekday" -> "int", "duration" -> "bigint",
+      "location_type" -> "string", "home_label" -> "double",
+      "work_label" -> "double")
+    for (days <- Seq(Some(10L), None)) {
+      val got = HomeWork.label(df, mx.copy(totalDays = days))
+      val at = s"totalDays = $days"
+      assert(got.schema.map(f => f.name -> f.dataType.simpleString)
+        === schema, at)
+      val rows = got.collect()
+        .map(r => r.getAs[Long]("stop_events") -> r).toMap
+      def parts(e: Long) = {
+        val r = rows(e)
+        (r.getAs[Int]("hour"), r.getAs[Int]("weekday"),
+          r.getAs[java.sql.Date]("date").toLocalDate.toString,
+          r.getAs[Int]("day"), r.getAs[String]("location_type"),
+          r.getAs[Double]("home_label"))
+      }
+      assert(parts(1L) === ((23, 1, "2023-03-06", 6, "H", 0.5)), at)
+      assert(parts(2L) === ((0, 2, "2023-03-07", 7, "H", 0.5)), at)
+      assert(parts(3L) === ((20, 1, "2023-03-06", 6, "O", -1.0)), at)
+    }
   }
 
   test("label with totalDays = Some(n) leaves no cache behind") {

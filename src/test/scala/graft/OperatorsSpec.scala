@@ -56,7 +56,7 @@ class DedupSpec extends SparkSpec {
     got.collect()
     assert(graft.CacheScope.trackedCount >= 1,
       "simhashCandidates must register its persisted signatures")
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(added.nonEmpty, "expected the signature cache to be persisted")
     graft.CacheScope.releaseAll()
     assert(graft.CacheScope.trackedCount === 0)

@@ -766,6 +766,69 @@ class PlanAuditSpec extends SparkSpec {
     assert(n(_.isInstanceOf[InMemoryTableScanExec]) === 0,
       s"HomeWork must not cache:\n${planOf(wide)}")
   }
+
+  test("HomeWork.label: prepare is one projection, each phase two, " +
+    "and each date window is evaluated once") {
+    import graft.operators.HomeWork
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    def day(d: Int, h: Int): Long = d.toLong * 86400L + h * 3600L
+    val clusters = Seq(("u", 1L, 0L, day(1, 23)), ("u", 2L, 1L, day(4, 12)))
+      .map { case (u, e, l, s) =>
+        (u, e, 19.0, -99.0, s, s + 600, l, 2L, 19.0, -99.0)
+      }.toDF("uid", "stop_events", "latitude", "longitude",
+        "start_timestamp", "end_timestamp", "stop_locations",
+        "cluster_counts", "cluster_latitude", "cluster_longitude")
+    val p = HomeWork.Params(startHourDay = 7, endHourDay = 21,
+      startWorkingHour = 8, endWorkingHour = 18, totalDays = Some(10L))
+    def nodes(df: DataFrame) = df.queryExecution.analyzed
+      .collect { case n => n.nodeName }.groupBy(identity).map {
+        case (k, v) => k -> v.size }
+    def added(outer: DataFrame, inner: DataFrame) = {
+      val (o, i) = (nodes(outer), nodes(inner))
+      o.map { case (k, v) => k -> (v - i.getOrElse(k, 0)) }.filter(_._2 != 0)
+    }
+    val prepared = HomeWork.prepare(clusters, p)
+    val homed = HomeWork.detectHome(prepared, p)
+    val labeled = HomeWork.detectWork(homed, p)
+    assert(added(prepared, clusters) ===
+      Map("Project" -> 1, "RepartitionByExpression" -> 1, "Sort" -> 1))
+    // a phase is one windowed select, which the analyzer wraps in three
+    // Projects around its two Windows, then one select writing the labels
+    val phase = Map("Project" -> 4, "Window" -> 2)
+    assert(added(homed, prepared) === phase)
+    assert(added(labeled, homed) === phase)
+    assert("collect_set".r.findAllIn(
+      labeled.queryExecution.optimizedPlan.toString).size === 4,
+      labeled.queryExecution.optimizedPlan.toString)
+  }
+
+  test("HomeWork span subqueries (q17/q18): home's plans no uid shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.GraftPlanAudit
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // the stop pipeline's own uid shuffle runs inside the lineage of the
+    // checkpoint that totalDays = None puts before the layout, so it is
+    // not in these plans
+    for (q <- Seq("q17_home_work", "q18_hw_wide")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      df.collect()
+      val parts = GraftPlanAudit.collectFinal(df) {
+        case e: ShuffleExchangeLike => Some(e.outputPartitioning)
+        case _ => None
+      }
+      val uid = parts.count {
+        case h: HashPartitioning =>
+          h.expressions.collect { case a: Attribute => a.name } == Seq("uid")
+        case _ => false
+      }
+      assert(uid === 2 && parts.count(_ == SinglePartition) === 2 &&
+        parts.size === 4,
+        s"$q: the layout's uid shuffle, the work span's own uid shuffle " +
+          s"and one SinglePartition per span, got $parts")
+    }
+  }
 }
 
 object PlanAuditSpec {

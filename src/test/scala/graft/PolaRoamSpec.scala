@@ -59,6 +59,20 @@ class IvfSpec extends SparkSpec {
     got.foreach(r =>
       assert(r.getAs[Long]("vec_id") === r.getAs[Long]("query_id")))
   }
+
+  test("ivfTopK over an empty corpus throws and leaves no cache behind") {
+    val emb = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val queries = emb.select(col("vec_id").as("query_id"), col("embedding"))
+    spark.catalog.clearCache()
+    // k-means has nothing to fit on the empty training sample
+    intercept[org.apache.spark.SparkException] {
+      graft.operators.Similarity.ivfTopK(queries, emb.limit(0), 5,
+        nlist = 8, nprobe = 2)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the training sample must be unpersisted when the fit fails")
+  }
 }
 
 class StreamDedupSpec extends SparkSpec {
